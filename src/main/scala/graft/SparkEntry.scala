@@ -3312,9 +3312,9 @@ object SparkEntry {
     // the oracle can recompute exactly. (Cell imbalance before/after is
     // intentionally NOT gated: the fixture embeddings are isotropic in
     // 64-d, so no subset-trained build produces meaningful drift —
-    // IvfDriftProbe measured 1.2-1.35 both sides, within run-to-run
-    // noise. cellImbalance stays the monitoring hook a real corpus with
-    // actual cluster structure would alert on.)
+    // imbalance measured 1.2-1.35 both sides of the retrain, within
+    // run-to-run noise. cellImbalance stays the monitoring hook a real
+    // corpus with actual cluster structure would alert on.)
     "ivf_rebalance_recall" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
       val q = emb.filter(pmod(col("vec_id"), lit(50)) === 0)
@@ -7028,16 +7028,6 @@ object SparkEntry {
       (sum(coalesce(col("__hit"), lit(0))).cast("double") / count(lit(1)) >= floor)
         .as("recall_ok"),
       countDistinct(col("query_id")).as("n_queries"))
-  }
-
-  /** Dev probe: raw recall value (not registered as a driver query). */
-  private[graft] def recallValue(exact: DataFrame, approx: DataFrame): Double = {
-    val flagged = exact.select("query_id", "neighbor_id")
-      .join(approx.select("query_id", "neighbor_id").withColumn("__hit", lit(1)),
-        Seq("query_id", "neighbor_id"), "left")
-    flagged.agg(
-      (sum(coalesce(col("__hit"), lit(0))).cast("double") / count(lit(1))).as("r"))
-      .collect()(0).getDouble(0)
   }
 
   /** Scratch parquet path for an ETL lifecycle query, unique per SF dir. */

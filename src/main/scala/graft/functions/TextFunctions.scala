@@ -257,13 +257,4 @@ object TextFunctions {
       .foreach(GraftFunctions.register)
     round(call_function(GraftFunctions.QualityScoreName, c), 6)
   }
-
-  /** The Column-tree formulation [[qualityScore]] replaced — the
-    * verification twin QualityScoreSpec pins the native expression
-    * against (the same role as [[graft.operators.Dedup]]'s aggregate
-    * probe twins). */
-  private[graft] def qualityScoreTree(c: Column): Column = {
-    val n = normalizeText(c)
-    qualityScoreFrom(n, tokensFromNorm(n))
-  }
 }

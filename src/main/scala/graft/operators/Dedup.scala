@@ -1025,15 +1025,6 @@ object Dedup {
       n: Int, numHashes: Int): DataFrame =
     minhashSigs(explodedCharShingles(df, textCol, idCol, n), numHashes)
 
-  /** Probe hook (dev): raw band-candidate pairs for the ngram pipeline
-    * (before the signature prefilter). */
-  private[graft] def ngramJaccardPairsCandidatesProbe(
-      df: DataFrame, textCol: String, idCol: String): DataFrame = {
-    val sigs = minhashSigs(explodedCharShingles(df, textCol, idCol, 5), 64)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    bandCandidates(sigs, 64, 16, DefaultMaxBucket)
-  }
-
   // --------------------------------------------------- embedding near-dup
 
   /** Embedding cosine NEAR-DUP pairs via random-hyperplane LSH blocking:

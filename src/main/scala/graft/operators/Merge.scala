@@ -17,9 +17,12 @@ import org.apache.spark.sql.functions._
   *   - multiple source rows matching one target row is an error, matching
   *     Delta's contract.
   *
-  * The plan is three joins of target against source on the same equi-keys —
-  * Catalyst plans them as shuffle joins partitioned by pk (or broadcasts a
-  * small source), so at 100 TB this scales like any keyed join; no driver
+  * The plan is one outer join of target against source on the primary
+  * keys (left-outer for update, full-outer for upsert), with a tag column
+  * on each side recording provenance; a per-column CASE then picks the
+  * matched, untouched or inserted value. Catalyst plans it as a shuffle
+  * join partitioned by pk (or broadcasts a small source), so at 100 TB
+  * this scales like any keyed join and reads the target once; no driver
   * collect anywhere. Physical rewrite scope lives in `Writes.merge`: for a
   * PARTITIONED target only the partitions containing matched / inserted /
   * moved rows are rewritten (the parquet analogue of Delta's file-pruned
@@ -121,8 +124,6 @@ object Merge {
     private val srcCols = source.columns.toSet
     private val tgtSchema = target.schema
 
-    val tgt: DataFrame = target.alias("TGT")
-    val src: DataFrame = source.alias("SRC")
     val cond: Column =
       primaryKeys.map(k => col(s"TGT.$k") === col(s"SRC.$k")).reduce(_ && _) &&
         expr(baseCondition)
@@ -133,8 +134,6 @@ object Merge {
       if (updateSet.contains(c) && srcCols.contains(c)) col(s"SRC.$c")
       else col(s"TGT.$c")
 
-    def matchedCol(c: String): Column = matchedVal(c).as(c)
-
     /** Value of column `c` for an inserted (not-matched source) row:
       * update-set columns from SRC, NULL elsewhere (reference golden
       * data: upserted rows carry NULL c5/c6). Unaliased. */
@@ -142,17 +141,6 @@ object Merge {
       if (updateSet.contains(c) && srcCols.contains(c))
         col(s"SRC.$c").cast(tgtSchema(c).dataType)
       else lit(null).cast(tgtSchema(c).dataType)
-
-    def insertCol(c: String): Column = insertVal(c).as(c)
-
-    def matched: DataFrame =
-      tgt.join(src, cond, "inner").select(tgtCols.map(matchedCol): _*)
-
-    def untouched: DataFrame =
-      tgt.join(src, cond, "left_anti").select(tgtCols.map(col): _*)
-
-    def inserts: DataFrame =
-      src.join(tgt, cond, "left_anti").select(tgtCols.map(insertCol): _*)
   }
 
   /** Provenance-tag a side of the merge join. `withColumn` would
@@ -180,21 +168,6 @@ object Merge {
       source: DataFrame,
       primaryKeys: Seq[String],
       baseCondition: String): Unit = {
-    val dupes = ambiguityGuardFrame(target, source, primaryKeys, baseCondition)
-      .limit(1).count()
-    if (dupes > 0)
-      throw new IllegalStateException(
-        "Merge failed: multiple source rows matched a single target row " +
-          s"on keys ${primaryKeys.mkString(", ")}")
-  }
-
-  /** The guard's duplicate-match frame (one row per multiply-matched
-    * target row) — split out so plan tooling can explain it. */
-  private[graft] def ambiguityGuardFrame(
-      target: DataFrame,
-      source: DataFrame,
-      primaryKeys: Seq[String],
-      baseCondition: String): DataFrame = {
     val (tgtNarrow, srcNarrow) =
       guardColumns(target.columns.toSeq, source.columns.toSeq,
           primaryKeys, baseCondition) match {
@@ -209,10 +182,15 @@ object Merge {
     val cond =
       primaryKeys.map(k => col(s"TGT.$k") === col(s"SRC.$k")).reduce(_ && _) &&
         expr(baseCondition)
-    tgt
+    val dupes = tgt
       .join(src, cond, "inner")
       .groupBy(col("TGT.__tgt_row")).count()
       .filter(col("count") > 1)
+      .limit(1).count()
+    if (dupes > 0)
+      throw new IllegalStateException(
+        "Merge failed: multiple source rows matched a single target row " +
+          s"on keys ${primaryKeys.mkString(", ")}")
   }
 
   /** The columns the ambiguity guard must retain per side: primary keys

@@ -2356,24 +2356,13 @@ object Versioned {
     val m = parseManifest(spark, tableDir, v)
     require(m.files.nonEmpty, s"version $v of $tableDir lists no files")
     val schemaDdl = validateAppendSchema(source, m.schemaDdl, evolve = false)
-    // The source feeds three consumers (bounds, duplicate gate,
-    // anti-join + union); pin it once so its plan runs once.
+    // The source feeds two consumers (the stats pass, anti-join +
+    // union); pin it once so its plan runs once.
     val src = source.capLineage()
-    if (src.isEmpty) return v
-    val dup = src.groupBy(keyCols.map(col): _*).count()
-      .filter(col("count") > 1).limit(1).count()
-    require(dup == 0L,
-      s"merge source has duplicate keys on (${keyCols.mkString(", ")}); " +
-        "matched-row replacement would be ambiguous (Delta MERGE raises too)")
-    val bounds = src.agg(
-      keyCols.flatMap(k => Seq(min(col(k)).as(s"__lo_$k"), max(col(k)).as(s"__hi_$k")))
-        .head,
-      keyCols.flatMap(k => Seq(min(col(k)).as(s"__lo_$k"), max(col(k)).as(s"__hi_$k")))
-        .tail: _*).collect()(0)
-    val rangePred = keyCols.zipWithIndex.map { case (k, i) =>
-      col(k) >= lit(bounds.get(2 * i)) && col(k) <= lit(bounds.get(2 * i + 1))
-    }.reduce(_ && _)
-    val (cand, _) = pruneGroups(spark, tableDir, m.files, m.schemaDdl, rangePred, m.mapping, m.fileStats)
+    val (srcRows, rangePred) =
+      mergeSourceStats(src, keyCols, checkDups = true, needBounds = true)
+    if (srcRows == 0L) return v
+    val (cand, _) = pruneGroups(spark, tableDir, m.files, m.schemaDdl, rangePred.get, m.mapping, m.fileStats)
     val srcKeys = src.select(keyCols.map(col): _*)
     val hit = touchedGroups(spark, tableDir, cand, m.schemaDdl, m.mapping, m.dvs)(
       _.join(srcKeys, keyCols, "left_semi"))
@@ -2395,6 +2384,43 @@ object Versioned {
       dvs = { val unSet = untouched.toSet
         m.dvs.filter(d => unSet(d._1)) },
       rowsByGroup = m.fileRows + (group -> n))
+  }
+
+  /** ONE aggregate pass over a merge source decides its row count, the
+    * duplicate-key guard AND the candidate key range, so the source is
+    * scanned once for all three. count(DISTINCT struct(keys)) uses
+    * groupBy's NULL-equals-NULL key equality, so a source with duplicate
+    * all-NULL key tuples still raises. Returns the row count and, when
+    * `needBounds` and the source is non-empty, the range predicate
+    * `lo_k <= k <= hi_k` over every key. */
+  private def mergeSourceStats(
+      src: DataFrame,
+      keyCols: Seq[String],
+      checkDups: Boolean,
+      needBounds: Boolean): (Long, Option[Column]) = {
+    import org.apache.spark.sql.functions.{count, count_distinct, struct}
+    val aggCols: Seq[Column] =
+      Seq(count(lit(1)).as("__n")) ++
+        (if (checkDups)
+          Seq(count_distinct(struct(keyCols.map(col): _*)).as("__nd"))
+         else Nil) ++
+        (if (needBounds)
+          keyCols.flatMap(k =>
+            Seq(min(col(k)).as(s"__lo_$k"), max(col(k)).as(s"__hi_$k")))
+         else Nil)
+    val stats = src.agg(aggCols.head, aggCols.tail: _*).collect()(0)
+    val n = stats.getLong(0)
+    if (checkDups)
+      require(n == stats.getAs[Long]("__nd"),
+        s"merge source has duplicate keys on (${keyCols.mkString(", ")}); " +
+          "a multiply-matched target row is ambiguous (Delta MERGE raises too)")
+    val rangePred =
+      if (n == 0L || !needBounds) None
+      else Some(keyCols.map { k =>
+        col(k) >= lit(stats.getAs[Any](s"__lo_$k")) &&
+          col(k) <= lit(stats.getAs[Any](s"__hi_$k"))
+      }.reduce(_ && _))
+    (n, rangePred)
   }
 
   /** One clause of a general [[mergeClauses]] MERGE. Conditions and
@@ -2514,44 +2540,15 @@ object Versioned {
       s"merge key '$k' missing from the source " +
         s"(has ${source.columns.mkString(", ")})"))
     val src = source.capLineage()
-    // ONE aggregate pass over the source decides emptiness, the
-    // duplicate-key guard, AND the candidate key range — previously
-    // three source-scan jobs (isEmpty, a groupBy-count dup probe, the
-    // min/max bounds). count(DISTINCT struct(keys)) uses groupBy's
-    // NULL-equals-NULL key equality, so the guard's semantics are
-    // byte-identical to the old per-key groupBy count (a source with
-    // duplicate all-NULL key tuples still raises).
-    val needDup = matched.nonEmpty || onResidual.isDefined
-    val needBounds = matched.nonEmpty || inserts.nonEmpty
-    val aggCols: Seq[Column] =
-      Seq(org.apache.spark.sql.functions.count(lit(1)).as("__n")) ++
-        (if (needDup)
-          Seq(org.apache.spark.sql.functions.count_distinct(
-            org.apache.spark.sql.functions.struct(keyCols.map(col): _*))
-            .as("__nd"))
-         else Nil) ++
-        (if (needBounds)
-          keyCols.flatMap(k =>
-            Seq(min(col(k)).as(s"__lo_$k"), max(col(k)).as(s"__hi_$k")))
-         else Nil)
-    val srcStats = src.agg(aggCols.head, aggCols.tail: _*).collect()(0)
-    val srcEmpty = srcStats.getLong(0) == 0L
+    val (srcRows, rangePred) = mergeSourceStats(src, keyCols,
+      checkDups = matched.nonEmpty || onResidual.isDefined,
+      needBounds = matched.nonEmpty || inserts.nonEmpty)
+    val srcEmpty = srcRows == 0L
     if (srcEmpty && bySource.isEmpty) return v
-    if (needDup && !srcEmpty)
-      require(srcStats.getLong(0) == srcStats.getLong(srcStats.fieldIndex("__nd")),
-        s"merge source has duplicate keys on (${keyCols.mkString(", ")}); " +
-          "a multiply-matched target row is ambiguous (Delta MERGE raises too)")
 
     // Candidate groups for MATCH-driven work: the source's key range.
-    val cand: Seq[String] =
-      if (srcEmpty || !needBounds) Seq.empty
-      else {
-        val rangePred = keyCols.map { k =>
-          col(k) >= lit(srcStats.get(srcStats.fieldIndex(s"__lo_$k"))) &&
-            col(k) <= lit(srcStats.get(srcStats.fieldIndex(s"__hi_$k")))
-        }.reduce(_ && _)
-        pruneGroups(spark, tableDir, m.files, m.schemaDdl, rangePred, m.mapping, m.fileStats)._1
-      }
+    val cand: Seq[String] = rangePred.fold(Seq.empty[String])(pred =>
+      pruneGroups(spark, tableDir, m.files, m.schemaDdl, pred, m.mapping, m.fileStats)._1)
     val srcKeys = src.select(keyCols.map(col): _*)
     val keyJoinCond = keyCols.map(k =>
       col(s"TGT.$k") === col(s"SRC.$k")).reduce(_ && _)

@@ -145,6 +145,12 @@ class VersionedMutationSpec extends SparkSpec {
       Versioned.merge(spark, dir, dup, Seq("id"))
     }
     assert(e.getMessage.contains("duplicate keys"))
+    val nullDup = Seq((Option.empty[Long], "a"), (Option.empty[Long], "b"))
+      .toDF("id", "v")
+    val eNull = intercept[IllegalArgumentException] {
+      Versioned.merge(spark, dir, nullDup, Seq("id"))
+    }
+    assert(eNull.getMessage.contains("duplicate keys"))
     intercept[IllegalArgumentException] {
       Versioned.merge(spark, dir,
         Seq((1L, "a", 1.0)).toDF("id", "v", "extra"), Seq("id"))
