@@ -285,7 +285,9 @@ object Writes {
     ref match {
       case TableRef(t) if spark.catalog.tableExists(t) =>
         withConf("spark.sql.sources.partitionOverwriteMode", "dynamic") {
-          alignedTo(source, t).write.mode(SaveMode.Overwrite).insertInto(t)
+          // insertInto is position-based: reorder to the table's schema.
+          source.select(spark.table(t).columns.toIndexedSeq.map(source.col): _*)
+            .write.mode(SaveMode.Overwrite).insertInto(t)
         }
       case TableRef(t) =>
         source.write.format("parquet").mode(SaveMode.Overwrite).saveAsTable(t)
@@ -302,6 +304,12 @@ object Writes {
     * containing matched, inserted, or moved rows are written and swapped;
     * everything else is left byte-identical on disk (the parquet analogue
     * of Delta's file-pruned MERGE).
+    *
+    * Delta's multiple-matches contract is checked in band, from two counts
+    * the staged write's own job takes ([[Merge.guarded]]), after the
+    * staged write and before any swap, for every target shape. Any failure
+    * before the swap deletes the staging directory; the target is never
+    * touched.
     *
     * Multi-writer isolation is LEASE-BASED (the parquet analog of the
     * optimistic concurrency the reference inherited from Delta's txn log,
@@ -334,66 +342,51 @@ object Writes {
       }
     withMergeLock(ref) {
       val target = ds.read(ref)
-      Merge.checkAmbiguousMatches(target, source, primaryKeys, baseCondition)
-      val merged =
-        Merge(target, source, primaryKeys, updateColumns, baseCondition, insertWhenNotMatched)
-      mergeResolved(source, target, merged, ref, primaryKeys, updateColumns,
-        baseCondition, insertWhenNotMatched)
+      // A def, built only where a staged write follows: its observations
+      // stay registered with the session until a query carrying them succeeds.
+      def guarded = Merge.guarded(target, source, primaryKeys,
+        updateColumns, baseCondition, insertWhenNotMatched)
+      val location = storageLocation(ref)
+      val table = ref match { case TableRef(t) => Some(t); case PathRef(_) => None }
+      val partCols = table.toSeq.flatMap(partitionColumns(_))
+      table match {
+        case Some(t) if partCols.nonEmpty =>
+          mergePartitionScoped(guarded, t, location, partCols,
+            Merge.affectedPartitions(target, source, primaryKeys, updateColumns,
+              baseCondition, insertWhenNotMatched, partCols))
+        case _ =>
+          // Unpartitioned table or path: ONE data write to a staging
+          // directory + two directory renames; not stage-table + INSERT
+          // OVERWRITE, which writes the merged data TWICE. A table's catalog
+          // entry (definition, grants) is untouched; only the bytes under
+          // its location change, and parquet reads them by column name.
+          val (merged, checkGuard) = guarded
+          swapIntoPlace(location, { stage =>
+            merged.write.parquet(stage.toString)
+            checkGuard()
+          })
+          table.foreach(spark.catalog.refreshTable)
+      }
     }
   }
 
-  /** The post-lock body of [[merge]]: plan the rewrite and swap it in. */
-  private def mergeResolved(
-      source: DataFrame,
-      target: DataFrame,
-      merged: DataFrame,
-      ref: TargetRef,
-      primaryKeys: Seq[String],
-      updateColumns: Seq[String],
-      baseCondition: String,
-      insertWhenNotMatched: Boolean)(implicit spark: SparkSession): Unit = {
-    ref match {
-      case TableRef(t) =>
-        val ident = spark.sessionState.sqlParser.parseTableIdentifier(t)
-        val location = new org.apache.hadoop.fs.Path(
-          spark.sessionState.catalog.getTableMetadata(ident).location)
-        val partCols = partitionColumns(t)
-        if (partCols.nonEmpty)
-          mergePartitionScoped(target, source, merged, t, location, partCols,
-            primaryKeys, updateColumns, baseCondition, insertWhenNotMatched)
-        else {
-          // Unpartitioned: stage-and-swap at the table's storage location —
-          // ONE data write (to a staging directory) + two directory
-          // renames, exactly like the path variant; not stage-table +
-          // INSERT OVERWRITE, which writes the full merged dataset TWICE.
-          // The catalog entry is untouched — only the bytes under the
-          // table's location change — so the table definition and grants
-          // survive.
-          swapIntoPlace(location,
-            stage => alignedTo(merged, t).write.format("parquet").save(stage.toString))
-          spark.catalog.refreshTable(t)
-        }
-      case PathRef(p) =>
-        val hadoopPath = new org.apache.hadoop.fs.Path(p)
-        swapIntoPlace(hadoopPath,
-          stage => merged.write.mode(SaveMode.Overwrite).parquet(stage.toString))
-    }
+  /** Storage location of a merge target: the table's location, or the path. */
+  private def storageLocation(ref: TargetRef)(
+      implicit spark: SparkSession): org.apache.hadoop.fs.Path = ref match {
+    case TableRef(t) =>
+      val ident = spark.sessionState.sqlParser.parseTableIdentifier(t)
+      new org.apache.hadoop.fs.Path(
+        spark.sessionState.catalog.getTableMetadata(ident).location)
+    case PathRef(p) => new org.apache.hadoop.fs.Path(p)
   }
 
   /** Lock-sentinel path for a merge target: a SIBLING of the target
     * location (never under it — a file inside a parquet directory would
     * be read as data/corrupt a listing). */
   private[graft] def mergeLockPath(ref: TargetRef)(
-      implicit spark: SparkSession): org.apache.hadoop.fs.Path = {
-    val loc = ref match {
-      case TableRef(t) =>
-        val ident = spark.sessionState.sqlParser.parseTableIdentifier(t)
-        new org.apache.hadoop.fs.Path(
-          spark.sessionState.catalog.getTableMetadata(ident).location).toString
-      case PathRef(p) => p
-    }
-    new org.apache.hadoop.fs.Path(loc.stripSuffix("/") + "__graft_lock")
-  }
+      implicit spark: SparkSession): org.apache.hadoop.fs.Path =
+    new org.apache.hadoop.fs.Path(
+      storageLocation(ref).toString.stripSuffix("/") + "__graft_lock")
 
   /** Run `body` holding the merge lease for `ref` — the parquet-feasible
     * analog of Delta's optimistic concurrency
@@ -504,18 +497,15 @@ object Writes {
     * touches. The affected-partition set itself is computed distributed
     * ([[Merge.affectedPartitions]]) and only its DISTINCT tuples come to
     * the driver — bounded by the table's partition count (metadata scale,
-    * same order as any metastore listing), never by data volume. */
+    * same order as any metastore listing), never by data volume.
+    * The guarded merge plan is built only once the affected set is
+    * non-empty; its check runs after the staged write, before any rename. */
   private def mergePartitionScoped(
-      target: DataFrame,
-      source: DataFrame,
-      merged: DataFrame,
+      guarded: => (DataFrame, () => Unit),
       table: String,
       location: org.apache.hadoop.fs.Path,
       partCols: Seq[String],
-      primaryKeys: Seq[String],
-      updateColumns: Seq[String],
-      baseCondition: String,
-      insertWhenNotMatched: Boolean)(implicit spark: SparkSession): Unit = {
+      affectedPartitions: DataFrame)(implicit spark: SparkSession): Unit = {
     import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
     import org.apache.spark.sql.functions.{broadcast, col, lit, when}
 
@@ -530,70 +520,67 @@ object Writes {
       when(s.isNull || s === "", lit(null).cast("string")).otherwise(s)
     }
 
-    val affected = Merge.affectedPartitions(target, source, primaryKeys,
-      updateColumns, baseCondition, insertWhenNotMatched, partCols)
-      .select(partCols.map(c => canonical(col(c)).as(c)): _*)
-      .distinct()
-      .persist()
-    try {
-      val affectedRows = affected.collect()
-      if (affectedRows.isEmpty) return // merge is a no-op; touch nothing
-      // Partition-directory fragments (part1=v/part2=v…), using the same
-      // escaping Spark's own dynamic-partition writer applies, so the
-      // fragments match the directories the staging write produces. The
-      // canonical distinct above guarantees one fragment per tuple —
-      // processing a fragment twice would swap it in, then mistake the
-      // second pass for an emptied partition and delete the data just
-      // published.
-      val frags = affectedRows.map { row =>
-        partCols.indices.map { i =>
-          ExternalCatalogUtils.getPartitionPathString(partCols(i), row.getString(i))
-        }.mkString("/")
-      }
+    val affected = affectedPartitions
+      .select(partCols.map(c => canonical(col(c)).as(c)): _*).distinct()
+    val affectedRows = affected.collect()
+    if (affectedRows.isEmpty) return // merge is a no-op; touch nothing
+    val (merged, checkGuard) = guarded
+    // Partition-directory fragments (part1=v/part2=v…), using the same
+    // escaping Spark's own dynamic-partition writer applies, so the
+    // fragments match the directories the staging write produces. The
+    // canonical distinct above guarantees one fragment per tuple —
+    // processing a fragment twice would swap it in, then mistake the
+    // second pass for an emptied partition and delete the data just
+    // published.
+    val frags = affectedRows.map { row =>
+      partCols.indices.map { i =>
+        ExternalCatalogUtils.getPartitionPathString(partCols(i), row.getString(i))
+      }.mkString("/")
+    }
 
-      // Rows to rewrite = full merged contents of the affected partitions
-      // (matched AND untouched rows of those partitions — a partition is
-      // replaced wholesale or not at all). The affected tuples are
-      // re-materialized as a fresh LOCAL DataFrame so the semi-join's right
-      // side shares no lineage with `merged` (avoids self-join attribute
-      // ambiguity), with renamed columns and an explicit broadcast; both
-      // sides compare in canonical-fragment space.
-      val local = spark
-        .createDataFrame(affectedRows.toList.asJava, affected.schema)
-        .select(partCols.map(c => col(c).as(s"__aff_$c")): _*)
-      val joinCond = partCols
-        .map(c => canonical(col(c)) <=> col(s"__aff_$c"))
-        .reduce(_ && _)
-      val writeSet = merged.join(broadcast(local), joinCond, "left_semi")
+    // Rows to rewrite = full merged contents of the affected partitions
+    // (matched AND untouched rows of those partitions — a partition is
+    // replaced wholesale or not at all). The affected tuples are
+    // re-materialized as a fresh LOCAL DataFrame so the semi-join's right
+    // side shares no lineage with `merged` (avoids self-join attribute
+    // ambiguity), with renamed columns and an explicit broadcast; both
+    // sides compare in canonical-fragment space.
+    val local = spark
+      .createDataFrame(affectedRows.toList.asJava, affected.schema)
+      .select(partCols.map(c => col(c).as(s"__aff_$c")): _*)
+    val joinCond =
+      partCols.map(c => canonical(col(c)) <=> col(s"__aff_$c")).reduce(_ && _)
+    val writeSet = merged.join(broadcast(local), joinCond, "left_semi")
 
-      val fs = location.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val suffix = UUID.randomUUID().toString.take(8)
-      val staging = new org.apache.hadoop.fs.Path(
-        location.toString.stripSuffix("/") + s"__graft_staging_$suffix")
-      alignedTo(writeSet, table).write.format("parquet")
-        .partitionBy(partCols: _*).save(staging.toString)
+    val fs = location.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val suffix = UUID.randomUUID().toString.take(8)
+    def sibling(kind: String) = new org.apache.hadoop.fs.Path(
+      location.toString.stripSuffix("/") + s"__graft_${kind}_$suffix")
+    val staging = sibling("staging")
+    // Displaced partitions go to a SIBLING of the table location, not
+    // under it: a leftover `…=v__old` inside the table parses as a valid
+    // partition fragment and a later repair would register it as a bogus
+    // partition. The sibling dir mirrors the fragment layout so a failed
+    // swap can restore exactly.
+    val displaced = sibling("displaced")
+    val fragSet = frags.toSet
+    val emptied = scala.collection.mutable.ListBuffer.empty[String]
+    deletingOnFailure(fs, staging) {
+      writeSet.write.partitionBy(partCols: _*).parquet(staging.toString)
+      checkGuard()
 
       // Sanity gate before anything destructive: every partition directory
       // the staging write produced must be in the affected set. A fragment
       // outside it would mean our escaping disagrees with the writer's —
       // deleting the staging dir at the end would then silently discard
       // data, so fail loudly instead.
-      val stagedFrags = listPartitionFragments(fs, staging, partCols.length)
-      val fragSet = frags.toSet
-      val unexpected = stagedFrags.filterNot(fragSet)
+      val unexpected =
+        listPartitionFragments(fs, staging, partCols.length).filterNot(fragSet)
       if (unexpected.nonEmpty)
         throw new IllegalStateException(
           "merge staging produced partition directories outside the " +
             s"affected set (escaping mismatch?): ${unexpected.mkString(", ")}")
 
-      // Displaced partitions go to a SIBLING of the table location, not
-      // under it: a leftover `…=v__old` inside the table parses as a valid
-      // partition fragment and a later repair would register it as a bogus
-      // partition. The sibling dir mirrors the fragment layout so a failed
-      // swap can restore exactly.
-      val displaced = new org.apache.hadoop.fs.Path(
-        location.toString.stripSuffix("/") + s"__graft_displaced_$suffix")
-      val emptied = scala.collection.mutable.ListBuffer.empty[String]
       frags.foreach { frag =>
         val stagedDir = new org.apache.hadoop.fs.Path(staging, frag)
         val liveDir   = new org.apache.hadoop.fs.Path(location, frag)
@@ -622,23 +609,23 @@ object Writes {
           emptied += frag
         }
       }
-      fs.delete(staging, true)
-      fs.delete(displaced, true)
-      // The files changed underneath the catalog: refresh caches and sync
-      // the metastore's partition list with TARGETED DDL — O(affected)
-      // metastore calls. (MSCK REPAIR would list the ENTIRE table location
-      // to diff partitions: at 10⁴–10⁵ partitions that's minutes of
-      // object-store listing per merge, growing with table size rather
-      // than merge size.)
-      spark.catalog.refreshTable(table)
-      val live = fragSet -- emptied
-      if (live.nonEmpty)
-        spark.sql(s"ALTER TABLE $table ADD IF NOT EXISTS " +
-          live.toSeq.sorted.map(partitionSpecSql).mkString(" "))
-      emptied.foreach { frag =>
-        spark.sql(s"ALTER TABLE $table DROP IF EXISTS ${partitionSpecSql(frag)}")
-      }
-    } finally affected.unpersist()
+    }
+    fs.delete(staging, true)
+    fs.delete(displaced, true)
+    // The files changed underneath the catalog: refresh caches and sync
+    // the metastore's partition list with TARGETED DDL — O(affected)
+    // metastore calls. (MSCK REPAIR would list the ENTIRE table location
+    // to diff partitions: at 10⁴–10⁵ partitions that's minutes of
+    // object-store listing per merge, growing with table size rather
+    // than merge size.)
+    spark.catalog.refreshTable(table)
+    val live = fragSet -- emptied
+    if (live.nonEmpty)
+      spark.sql(s"ALTER TABLE $table ADD IF NOT EXISTS " +
+        live.toSeq.sorted.map(partitionSpecSql).mkString(" "))
+    emptied.foreach { frag =>
+      spark.sql(s"ALTER TABLE $table DROP IF EXISTS ${partitionSpecSql(frag)}")
+    }
   }
 
   /** Enumerate `depth`-level partition directory fragments under `dir`
@@ -677,8 +664,9 @@ object Writes {
   /** Write to a staging sibling of `dest` via `write`, then swap it into
     * place: one data write + two renames (metadata-only on HDFS-like
     * filesystems; object stores without atomic rename should front this
-    * with a rename-capable committer). The displaced old data is removed
-    * after a successful swap and restored on failure. */
+    * with a rename-capable committer). `write` may also verify what it
+    * staged; a throw there leaves `dest` untouched. The displaced old data
+    * is removed after a successful swap and restored on failure. */
   private def swapIntoPlace(
       dest: org.apache.hadoop.fs.Path,
       write: org.apache.hadoop.fs.Path => Unit)(implicit spark: SparkSession): Unit = {
@@ -686,23 +674,25 @@ object Writes {
     val suffix = UUID.randomUUID().toString.take(8)
     val staging = new org.apache.hadoop.fs.Path(
       dest.toString.stripSuffix("/") + s"__graft_staging_$suffix")
-    write(staging)
-    val old = new org.apache.hadoop.fs.Path(staging + "_old")
-    if (!fs.rename(dest, old))
-      throw new IllegalStateException(s"merge swap: cannot move $dest aside")
-    if (!fs.rename(staging, dest)) {
-      fs.rename(old, dest) // restore
-      throw new IllegalStateException(s"merge swap: cannot publish $staging to $dest")
+    val old = new org.apache.hadoop.fs.Path(s"${staging}_old")
+    deletingOnFailure(fs, staging) {
+      write(staging)
+      if (!fs.rename(dest, old))
+        throw new IllegalStateException(s"merge swap: cannot move $dest aside")
+      if (!fs.rename(staging, dest)) {
+        fs.rename(old, dest) // restore
+        throw new IllegalStateException(s"merge swap: cannot publish $staging to $dest")
+      }
     }
     fs.delete(old, true)
   }
 
-  /** insertInto is position-based — reorder to the table's schema first. */
-  private def alignedTo(df: DataFrame, table: String)(
-      implicit spark: SparkSession): DataFrame = {
-    val cols = spark.table(table).columns
-    df.select(cols.map(org.apache.spark.sql.functions.col).toIndexedSeq: _*)
-  }
+  /** Run a stage-to-swap window: if `body` throws, delete `staging` (best
+    * effort) first, so a rejected or failed merge leaves no staged copy. */
+  private def deletingOnFailure(fs: org.apache.hadoop.fs.FileSystem,
+      staging: org.apache.hadoop.fs.Path)(body: => Unit): Unit =
+    try body
+    catch { case t: Throwable => scala.util.Try(fs.delete(staging, true)); throw t }
 
   def partitionColumns(table: String)(implicit spark: SparkSession): Seq[String] =
     spark.catalog.listColumns(table).collect().toSeq

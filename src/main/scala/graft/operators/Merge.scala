@@ -1,6 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import scala.concurrent.Await
+import scala.concurrent.duration._
+import scala.util.Try
+
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions._
 
 /** MERGE as a deterministic join-rewrite (no Delta in the environment, and
@@ -15,7 +19,8 @@ import org.apache.spark.sql.functions._
   *   - upsert inserts carry values ONLY for the update set — every other
   *     target column is NULL (delta.py:124-127,146-147);
   *   - multiple source rows matching one target row is an error, matching
-  *     Delta's contract.
+  *     Delta's contract. The check rides on the plan's own join (see
+  *     [[guarded]]): no second join, no extra pass.
   *
   * The plan is one outer join of target against source on the primary
   * keys (left-outer for update, full-outer for upsert), with a tag column
@@ -31,33 +36,72 @@ import org.apache.spark.sql.functions._
   */
 object Merge {
 
-  /** Pure plan: returns the post-merge contents of `target` (lazy).
-    *
-    * ONE outer join, not the classic three (untouched ∪ matched ∪
-    * inserts): each branch of that union re-joins target against source,
-    * and since a small source plans as a broadcast join there is no
-    * reusable exchange on the streamed side — the (100 TB) target is
-    * scanned once per branch. Here a left-outer (update) or full-outer
-    * (upsert) join tags each row's provenance and a per-column CASE
-    * picks the matched / untouched / insert value, so the target is
-    * read exactly once. Row multiset and schema match the union shape:
-    * CASE branch types coerce to the same widest(TGT, SRC) the
-    * unionByName coercion produced. */
+  /** Pure plan: returns the post-merge contents of `target` (lazy); see
+    * [[plan]] for its shape. */
   def apply(
       target: DataFrame,
       source: DataFrame,
       primaryKeys: Seq[String],
       updateColumns: Seq[String],
       baseCondition: String = "1=1",
-      insertWhenNotMatched: Boolean = false): DataFrame = {
+      insertWhenNotMatched: Boolean = false): DataFrame =
+    plan(Plan(target, source, primaryKeys, updateColumns, baseCondition),
+      insertWhenNotMatched, None)
 
-    val p = Plan(target, source, primaryKeys, updateColumns, baseCondition)
-    // Non-null side tags survive the outer join where data columns
-    // (nullable pks included) could not distinguish no-match from null.
-    val tgtT = tagged(target, "__tgt_tag").alias("TGT")
-    val srcT = tagged(source, "__src_tag").alias("SRC")
-    val joined = tgtT.join(srcT, p.cond,
-      if (insertWhenNotMatched) "full_outer" else "left_outer")
+  /** [[apply]]'s plan together with the check of Delta's multiple-matches
+    * contract, taken in band from two `Dataset.observe` counts on the
+    * plan's own join: target rows in, and target-tagged rows out. A target
+    * row matched by k source rows leaves the outer join max(1, k) times,
+    * so the counts agree exactly when no target row is matched more than
+    * once under the full condition (primary keys AND `baseCondition`).
+    * Call the check once the plan has been written: it raises on a
+    * mismatch, or when a count has not arrived within 60 s (fail closed,
+    * never hang). */
+  private[graft] def guarded(
+      target: DataFrame,
+      source: DataFrame,
+      primaryKeys: Seq[String],
+      updateColumns: Seq[String],
+      baseCondition: String,
+      insertWhenNotMatched: Boolean): (DataFrame, () => Unit) = {
+    val (rowsIn, rowsOut) = (Observation(), Observation())
+    val merged = plan(Plan(target, source, primaryKeys, updateColumns, baseCondition),
+      insertWhenNotMatched, Some((rowsIn, rowsOut)))
+    // Retries: a failed task attempt's accumulator updates are dropped, so
+    // task retries do not double count. A re-run of a whole stage can only
+    // over-count, which makes the counts disagree: the guard then aborts
+    // rather than pass a wrong merge (unless the re-run's surplus exactly
+    // cancels a duplicate's).
+    def rows(o: Observation) =
+      Try(Await.result(o.future, 60.seconds).getLong(0)).toOption
+    (merged, () => (rows(rowsIn), rows(rowsOut)) match {
+      case (Some(in), Some(out)) if in == out => ()
+      case (in, out) =>
+        def shown(n: Option[Long]) = n.fold("none within 60 s")(_.toString)
+        throw new IllegalStateException(
+          "Merge failed: multiple source rows matched a single target row " +
+            s"on keys ${primaryKeys.mkString(", ")} " +
+            s"(target rows in: ${shown(in)}, out: ${shown(out)})")
+    })
+  }
+
+  /** The one tagged outer join described on the object. It replaces the
+    * classic union of three joins (untouched ∪ matched ∪ inserts), which
+    * scans the target once per branch; row multiset and schema match that
+    * union (CASE branches coerce to the same widest(TGT, SRC) type). */
+  private def plan(p: Plan, insertWhenNotMatched: Boolean,
+      guard: Option[(Observation, Observation)]): DataFrame = {
+    def observed(df: DataFrame, o: Option[Observation], rows: Column) =
+      o.fold(df)(df.observe(_, count(rows).as("rows")))
+    // The source's count is never read: its node only stops the optimizer
+    // folding a literal source key into the join condition, where a
+    // full-outer join left without an equi-key plans as a nested-loop join
+    // that scans the target twice and so doubles the count of rows in.
+    val joined = observed(
+      p.join(observed(p.target, guard.map(_._1), lit(1)),
+        observed(p.source, guard.map(_ => Observation()), lit(1)),
+        if (insertWhenNotMatched) "full_outer" else "left_outer"),
+      guard.map(_._2), col("__tgt_tag"))
     val matched = col("__src_tag").isNotNull && col("__tgt_tag").isNotNull
     val outCols = p.tgtCols.map { c =>
       val base = when(matched, p.matchedVal(c)).otherwise(col(s"TGT.$c"))
@@ -87,15 +131,11 @@ object Merge {
       partitionCols: Seq[String]): DataFrame = {
 
     val p = Plan(target, source, primaryKeys, updateColumns, baseCondition)
-    // Same single-pass shape as [[apply]]: the pre/post/insert branch
-    // selects of the union form each re-joined target against source
-    // (≈3 scans of each side); one tagged join + explode reads each
-    // side once. Inner join when inserts are off (only matched rows
+    // Same single tagged join as [[apply]], exploded into the pre/post/
+    // insert tuples. Inner join when inserts are off (only matched rows
     // matter here); right-outer keeps not-matched source rows as the
     // insert branch.
-    val tgtT = tagged(target, "__tgt_tag").alias("TGT")
-    val srcT = tagged(source, "__src_tag").alias("SRC")
-    val joined = tgtT.join(srcT, p.cond,
+    val joined = p.join(target, source,
       if (insertWhenNotMatched) "right_outer" else "inner")
     val pre  = struct(partitionCols.map(c => col(s"TGT.$c").as(c)): _*)
     val post = struct(partitionCols.map(c => p.matchedVal(c).as(c)): _*)
@@ -128,6 +168,13 @@ object Merge {
       primaryKeys.map(k => col(s"TGT.$k") === col(s"SRC.$k")).reduce(_ && _) &&
         expr(baseCondition)
 
+    /** `tgt` ⋈ `src` on [[cond]], each side provenance-tagged: non-null
+      * tags survive the outer join where data columns (nullable pks
+      * included) could not distinguish no-match from null. */
+    def join(tgt: DataFrame, src: DataFrame, how: String): DataFrame =
+      tagged(tgt, "__tgt_tag").alias("TGT")
+        .join(tagged(src, "__src_tag").alias("SRC"), cond, how)
+
     /** Value of column `c` for a matched target row after the update
       * (unaliased — usable inside CASE branches). */
     def matchedVal(c: String): Column =
@@ -151,103 +198,5 @@ object Merge {
       s"merge input already carries a column named '$tag' (reserved for " +
         "merge-branch dispatch) — rename the column")
     df.withColumn(tag, lit(true))
-  }
-
-  /** Fails if more than one source row matches a single target row —
-    * Delta's multiple-matches contract. Counts source matches per target
-    * ROW (a per-row id keeps duplicate key tuples distinct), but joins
-    * only the columns the match condition can read: primary keys plus
-    * whatever `baseCondition` references ([[guardColumns]]) — so at
-    * 100 TB the guard's target scan is a keys-wide projection (column
-    * pruning reaches the parquet scan), not a second full-width pass.
-    * Falls back to the full-width join only when a condition reference
-    * cannot be classified to a side. One extra keyed aggregation job;
-    * scales map-side (partial count). */
-  def checkAmbiguousMatches(
-      target: DataFrame,
-      source: DataFrame,
-      primaryKeys: Seq[String],
-      baseCondition: String): Unit = {
-    val (tgtNarrow, srcNarrow) =
-      guardColumns(target.columns.toSeq, source.columns.toSeq,
-          primaryKeys, baseCondition) match {
-        case Some((tc, sc)) =>
-          (target.select(tc.map(col): _*), source.select(sc.map(col): _*))
-        case None => (target, source)
-      }
-    val tgt = tgtNarrow
-      .withColumn("__tgt_row", monotonically_increasing_id())
-      .alias("TGT")
-    val src = srcNarrow.alias("SRC")
-    val cond =
-      primaryKeys.map(k => col(s"TGT.$k") === col(s"SRC.$k")).reduce(_ && _) &&
-        expr(baseCondition)
-    val dupes = tgt
-      .join(src, cond, "inner")
-      .groupBy(col("TGT.__tgt_row")).count()
-      .filter(col("count") > 1)
-      .limit(1).count()
-    if (dupes > 0)
-      throw new IllegalStateException(
-        "Merge failed: multiple source rows matched a single target row " +
-          s"on keys ${primaryKeys.mkString(", ")}")
-  }
-
-  /** The columns the ambiguity guard must retain per side: primary keys
-    * plus every column `baseCondition` references, classified by its
-    * `TGT.`/`SRC.` qualifier (unqualified references keep the column on
-    * every side that has one — exactly the sides the join's resolver
-    * could bind them to). Returns None — "use full width" — when a
-    * reference cannot be classified safely: an alias qualifier that
-    * collides with a real column name, a reference found on neither
-    * side, or an unresolvable shape. Conservative by construction: the
-    * narrow projection can only ever DROP columns the condition provably
-    * never reads, so the guard's join semantics are unchanged. */
-  private[graft] def guardColumns(
-      tgtCols: Seq[String],
-      srcCols: Seq[String],
-      primaryKeys: Seq[String],
-      baseCondition: String): Option[(Seq[String], Seq[String])] = {
-    import org.apache.spark.sql.catalyst.analysis.{caseInsensitiveResolution => res}
-    import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-    def find(cols: Seq[String], n: String): Option[String] = cols.find(res(_, n))
-    val tgtKeep = scala.collection.mutable.LinkedHashSet.empty[String]
-    val srcKeep = scala.collection.mutable.LinkedHashSet.empty[String]
-    // Primary keys must exist on both sides for the merge to resolve at
-    // all; if one is missing, fall back and let the join raise the
-    // analysis error the full-width path would raise.
-    val pksOk = primaryKeys.forall { k =>
-      (find(tgtCols, k), find(srcCols, k)) match {
-        case (Some(t), Some(s)) => tgtKeep += t; srcKeep += s; true
-        case _ => false
-      }
-    }
-    if (!pksOk) return None
-    val parsed = scala.util.Try(
-      org.apache.spark.sql.catalyst.parser.CatalystSqlParser
-        .parseExpression(baseCondition))
-    if (parsed.isFailure) return None // let the full-width join raise it
-    val refs = parsed.get.collect {
-      case u: UnresolvedAttribute => u.nameParts
-    }
-    val aliasCollides = Seq("TGT", "SRC").exists(a =>
-      tgtCols.exists(res(_, a)) || srcCols.exists(res(_, a)))
-    val ok = !aliasCollides && refs.forall {
-      case Seq(q, rest @ _*) if rest.nonEmpty && res(q, "TGT") =>
-        find(tgtCols, rest.head).exists { c => tgtKeep += c; true }
-      case Seq(q, rest @ _*) if rest.nonEmpty && res(q, "SRC") =>
-        find(srcCols, rest.head).exists { c => srcKeep += c; true }
-      case parts if parts.nonEmpty =>
-        // Unqualified reference (possibly a struct-field path): keep the
-        // head column on every side that has it — resolution ambiguity
-        // stays the analyzer's call, with the column present.
-        val t = find(tgtCols, parts.head)
-        val s = find(srcCols, parts.head)
-        t.foreach(tgtKeep += _)
-        s.foreach(srcKeep += _)
-        t.nonEmpty || s.nonEmpty
-      case _ => false
-    }
-    if (ok) Some((tgtKeep.toSeq, srcKeep.toSeq)) else None
   }
 }

@@ -2,7 +2,8 @@ package graft
 
 import java.sql.Date
 
-import graft.operators.EtlJob
+import graft.operators.{EtlJob, Writes}
+import graft.sources.{PathRef, TableRef, TargetRef}
 
 /** The five reference golden scenarios (tests/dbr_notebook/test_case.dbc +
   * tests/test_case.xlsx), ported verbatim with USING parquet instead of
@@ -53,12 +54,13 @@ class GoldenEtlSpec extends SparkSpec {
           | (3,'b',DATE'2020-06-26',113,'aa3',DATE'2020-06-25',1113,11113,111113)""".stripMargin)
   }
 
-  private def jobYaml(operation: String, extra: String = ""): String =
+  private def jobYaml(operation: String, extra: String = "",
+      target: String = "table: target_table"): String =
     s"""version: 0
        |source:
        |  query: select *, null as c5, null as c6 from source_table
        |target:
-       |  table: target_table
+       |  $target
        |  operation: $operation
        |$extra""".stripMargin
 
@@ -141,10 +143,33 @@ class GoldenEtlSpec extends SparkSpec {
   test("merge rejects ambiguous multiple source matches") {
     setupTables()
     sql("INSERT INTO source_table VALUES (1,'a',DATE'2020-06-26',99,'zz',DATE'2020-06-26',999)")
-    val e = intercept[IllegalStateException] {
-      EtlJob.fromYaml(jobYaml("update", mergeKeys)).run()
+    // Every target shape: the partitioned golden table, an unpartitioned
+    // copy of it, and a parquet path copy of it.
+    sql("DROP TABLE IF EXISTS target_flat")
+    sql("CREATE TABLE target_flat USING parquet AS SELECT * FROM target_table")
+    val dir = java.nio.file.Files.createTempDirectory("graft-path").toString + "/t"
+    spark.table("target_table").write.parquet(dir)
+    Seq[(TargetRef, String)](
+      TableRef("target_table") -> "table: target_table",
+      TableRef("target_flat") -> "table: target_flat",
+      PathRef(dir) -> s"path: $dir"
+    ).foreach { case (ref, target) =>
+      val e = intercept[IllegalStateException] {
+        EtlJob.fromYaml(jobYaml("update", mergeKeys, target)).run()
+      }
+      assert(e.getMessage.contains("multiple source rows"), s"$ref: ${e.getMessage}")
+      assertRows(ref match {
+        case TableRef(t) => spark.table(t)
+        case PathRef(p) => spark.read.parquet(p)
+      }, cols, targetRows)
+      val lock = Writes.mergeLockPath(ref)
+      val fs = lock.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      assert(!fs.exists(lock), s"$ref: lock left behind")
+      val staging = lock.getName.stripSuffix("__graft_lock") + "__graft_staging_"
+      val leftovers = fs.listStatus(lock.getParent).map(_.getPath.getName)
+        .filter(_.startsWith(staging))
+      assert(leftovers.isEmpty, s"$ref: staging left behind: ${leftovers.mkString(", ")}")
     }
-    assert(e.getMessage.contains("multiple source rows"))
   }
 
   test("append to a path target") {

@@ -66,20 +66,27 @@ class MergeGuardSpec extends SparkSpec {
     try {
       // Each writer upserts a DISJOINT key set, so any serial order
       // yields the same final table — losing a writer's rows means the
-      // lease interleaved two stage-and-swaps.
-      val writers = (1 to 4).map { w =>
+      // lease interleaved two stage-and-swaps. A fifth writer matches the
+      // seed row twice: its guard must fire on its own counts, whatever
+      // the others' merges observe meanwhile, and publish nothing.
+      val sources = (1 to 4).map { w =>
+        Seq((w * 10L, s"w$w"), (w * 10L + 1, s"w$w"))
+      } :+ Seq((0L, "w5"), (0L, "w5b"))
+      val writers = sources.map { rows =>
         new Thread(() =>
-          try {
-            val src = Seq((w * 10L, s"w$w"), (w * 10L + 1, s"w$w")).toDF("pk", "v")
-            Writes.merge(src, PathRef(dir), ds, Seq("pk"), Seq("v"), "1=1",
-              insertWhenNotMatched = true)
-          } catch { case t: Throwable => failures.add(t) })
+          try Writes.merge(rows.toDF("pk", "v"), PathRef(dir), ds, Seq("pk"),
+            Seq("v"), "1=1", insertWhenNotMatched = true)
+          catch { case t: Throwable => failures.add(t) })
       }
       writers.foreach(_.start()); writers.foreach(_.join(120000))
-      assert(failures.isEmpty, s"writers failed: ${failures.peek()}")
+      assert(failures.size == 1, s"expected only the duplicate writer to fail: $failures")
+      assert(failures.peek().isInstanceOf[IllegalStateException] &&
+        failures.peek().getMessage.contains("multiple source rows"),
+        s"duplicate writer: ${failures.peek()}")
       val rows = spark.read.parquet(dir).collect()
         .map(r => r.getLong(0) -> r.getString(1)).toMap
       assert(rows.size == 9, s"expected seed + 8 upserted rows, got $rows")
+      assert(rows(0L) == "seed", s"duplicate writer published: $rows")
       (1 to 4).foreach { w =>
         assert(rows(w * 10L) == s"w$w" && rows(w * 10L + 1) == s"w$w",
           s"writer $w's rows lost: $rows")

@@ -2,7 +2,8 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.operators.Merge
+import graft.operators.{Merge, Writes}
+import graft.sources.{ParquetCatalogSource, PathRef}
 
 /** Property-style invariants of the merge join-rewrite over randomized
   * small tables (fixed seed — deterministic). Mirrors SURVEY.md §5's
@@ -74,57 +75,43 @@ class MergePropertySpec extends SparkSpec {
       .except(tgt).isEmpty)
   }
 
-  test("ambiguous source matches are detected") {
-    val tgt = Seq((1, "a", 1.0)).toDF("pk", "label", "v")
-    val dup = Seq((1, 10.0), (1, 20.0)).toDF("pk", "v")
-    intercept[IllegalStateException] {
-      Merge.checkAmbiguousMatches(tgt, dup, Seq("pk"), "1=1")
-    }
-    // non-duplicated source passes
-    Merge.checkAmbiguousMatches(tgt, Seq((1, 10.0)).toDF("pk", "v"), Seq("pk"), "1=1")
+  private val ds = new ParquetCatalogSource
+
+  /** A fresh parquet path target holding `df`. */
+  private def pathTarget(df: DataFrame): PathRef = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-merge").toString + "/t"
+    df.write.parquet(dir)
+    PathRef(dir)
   }
 
-  test("ambiguity guard honors baseCondition over non-pk columns (narrowed join)") {
-    val tgt = Seq((1, "hot", 1.0), (2, "cold", 2.0)).toDF("pk", "label", "v")
+  private def update(src: DataFrame, ref: PathRef, cond: String): Unit =
+    Writes.merge(src, ref, ds, Seq("pk"), Seq("v"), cond, insertWhenNotMatched = false)
+
+  test("ambiguous source matches are detected") {
+    val ref = pathTarget(Seq((1, "a", 1.0)).toDF("pk", "label", "v"))
+    val dup = Seq((1, 10.0), (1, 20.0)).toDF("pk", "v")
+    intercept[IllegalStateException] { update(dup, ref, "1=1") }
+    // non-duplicated source passes
+    update(Seq((1, 10.0)).toDF("pk", "v"), ref, "1=1")
+    assertRows(spark.read.parquet(ref.path), Seq("pk", "label", "v"),
+      Set(Seq(1, "a", 10.0)))
+  }
+
+  test("ambiguity guard honors baseCondition over non-pk columns") {
+    val ref = pathTarget(Seq((1, "hot", 1.0), (2, "cold", 2.0)).toDF("pk", "label", "v"))
     // two source rows hit pk=1, but only one passes the TGT.label gate —
-    // not ambiguous; three rows passing it on pk=2 — ambiguous.
+    // not ambiguous; both rows on pk=2 pass TGT.label = 'cold' — ambiguous.
     val src = Seq((1, 10.0), (1, 20.0), (2, 30.0), (2, 40.0)).toDF("pk", "v")
-    Merge.checkAmbiguousMatches(tgt, src, Seq("pk"),
-      "TGT.label = 'hot' AND SRC.v = 10.0")
+    update(src, ref, "TGT.label = 'hot' AND SRC.v = 10.0")
+    val afterPass = Set(Seq(1, "hot", 10.0), Seq(2, "cold", 2.0))
+    assertRows(spark.read.parquet(ref.path), Seq("pk", "label", "v"), afterPass)
     intercept[IllegalStateException] {
-      Merge.checkAmbiguousMatches(tgt, src, Seq("pk"), "TGT.label = 'cold'")
+      update(src, ref, "TGT.label = 'cold'")
     }
     // unqualified reference resolves and still gates correctly
     intercept[IllegalStateException] {
-      Merge.checkAmbiguousMatches(tgt, src, Seq("pk"), "label = 'cold'")
+      update(src, ref, "label = 'cold'")
     }
-  }
-
-  test("guardColumns keeps pk + referenced cols, falls back when unclassifiable") {
-    // qualified refs land on their side; unqualified on both sides that have it
-    assert(Merge.guardColumns(Seq("pk", "label", "v"), Seq("pk", "v"),
-      Seq("pk"), "TGT.label = 'x' AND SRC.v > 0") ===
-      Some((Seq("pk", "label"), Seq("pk", "v"))))
-    assert(Merge.guardColumns(Seq("pk", "label", "v"), Seq("pk", "v"),
-      Seq("pk"), "v > 0") === Some((Seq("pk", "v"), Seq("pk", "v"))))
-    assert(Merge.guardColumns(Seq("pk", "label"), Seq("pk"),
-      Seq("pk"), "1=1") === Some((Seq("pk"), Seq("pk"))))
-    // case-insensitive resolution keeps the ACTUAL column spelling
-    assert(Merge.guardColumns(Seq("PK", "Label"), Seq("pk"),
-      Seq("pk"), "TGT.LABEL = 'x'") === Some((Seq("PK", "Label"), Seq("pk"))))
-    // unknown reference → full-width fallback (analyzer raises there)
-    assert(Merge.guardColumns(Seq("pk"), Seq("pk"),
-      Seq("pk"), "TGT.nosuch = 1").isEmpty)
-    assert(Merge.guardColumns(Seq("pk"), Seq("pk"),
-      Seq("pk"), "nosuch = 1").isEmpty)
-    // a real column named like the alias is ambiguous → fallback
-    assert(Merge.guardColumns(Seq("pk", "tgt"), Seq("pk"),
-      Seq("pk"), "TGT.pk = 1").isEmpty)
-    // unparseable condition → fallback
-    assert(Merge.guardColumns(Seq("pk"), Seq("pk"),
-      Seq("pk"), "this is (not sql").isEmpty)
-    // missing pk on a side → fallback
-    assert(Merge.guardColumns(Seq("pk"), Seq("other"),
-      Seq("pk"), "1=1").isEmpty)
+    assertRows(spark.read.parquet(ref.path), Seq("pk", "label", "v"), afterPass)
   }
 }
