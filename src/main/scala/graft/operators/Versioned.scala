@@ -1852,40 +1852,6 @@ object Versioned {
       else scanGroups(spark, tableDir, groups, schemaDdl, mapping).count()
     }
 
-  /** The file groups among `candidates` that ACTUALLY contain a row
-    * matching `probe` — Delta's touched-file detection: one scan of the
-    * (stats-pruned) candidates tagged with `input_file_name()`, distinct
-    * on the group id, collected (bounded by the group count, never the
-    * row count). Turns conservative range pruning into exact file-level
-    * COW: a candidate whose bounds overlap but which holds no matching
-    * row still carries over metadata-only. */
-  private def touchedGroups(
-      spark: SparkSession, tableDir: String, candidates: Seq[String],
-      schemaDdl: Option[String],
-      mapping: Seq[(String, String)] = Seq.empty,
-      dvs: Seq[(String, String, Long)] = Seq.empty)(
-      probe: DataFrame => DataFrame): Set[String] = {
-    if (candidates.isEmpty) return Set.empty
-    // Tag with the group id from the scan's own row identity (LAST
-    // "/files/" segment — robust to a table path containing "/files/",
-    // and, unlike input_file_name(), still populated under the DV
-    // anti-join) and mask deletion vectors BEFORE probing: a DV'd row
-    // must not mark its group as touched.
-    val candSet = candidates.toSet
-    val dvFor = dvs.filter(d => candSet(d._1))
-    val tagged0 = scanGroupsTagged(spark, tableDir, candidates, schemaDdl, mapping)
-    val live =
-      if (dvFor.isEmpty) tagged0
-      else tagged0.join(dvMaskRows(spark, tableDir, dvFor),
-        Seq("__dv_rel", "__dv_pos"), "left_anti")
-    val tagged = live
-      .withColumn("__file", org.apache.spark.sql.functions
-        .substring_index(col("__dv_rel"), "/", 1))
-      .drop("__dv_rel", "__dv_pos")
-    probe(tagged).select("__file").distinct().collect()
-      .map(_.getString(0)).toSet
-  }
-
   /** LIVE rows across a version's `groups`: manifest-recorded totals
     * minus the groups' deletion-vector counts — pure metadata. */
   private def liveGroupRows(
@@ -1896,57 +1862,25 @@ object Versioned {
       m.dvs.filter(d => gs(d._1)).map(_._3).sum
   }
 
-  /** Copy-on-write `DELETE FROM ... WHERE preds` — Delta's delete
-    * economics over bare parquet, in two phases:
-    * 1. the stats sidecars prune to CANDIDATE groups at planning time
-    *    (metadata-only, KB of driver-side JSON);
-    * 2. one scan of the candidates finds the groups that actually hold
-    *    a matching row ([[touchedGroups]]); only THOSE are rewritten
-    *    (minus the matches), every other group carries into the new
-    *    manifest METADATA-ONLY — deleting one day from a
-    *    year-of-appends table rewrites one group, not 365.
-    * A predicate that matches NOTHING is a pure no-op: the current
-    * version number returns and no new version is committed.
-    *
-    * SQL DELETE null semantics: rows where the predicate evaluates NULL
-    * are KEPT (survivors are `NOT coalesce(pred, false)`), exactly as
-    * `DELETE FROM t WHERE p` behaves in Spark/Delta/ANSI. History is
-    * intact — the parent version still reads the pre-delete rows — and
-    * CDC consumers see a rewrite boundary ([[changes]] raises across it,
-    * [[pollChanges]] resyncs), since a file-group difference cannot
-    * represent removed rows. Returns the new (or unchanged) version. */
-  /** DV-masked tagged scan of `cand` filtered to `applied`, tagged with
-    * the owning group id (`__grp`), plus the per-group matched counts —
-    * the shared probe behind the DV-capable mutations ([[delete]],
-    * [[update]]). One scan serves both the touched-group set and the
-    * fraction the DV decision needs. */
-  private def probeMatches(
-      spark: SparkSession, tableDir: String, cand: Seq[String],
-      m: Manifest,
-      claimedOf: DataFrame => DataFrame): (DataFrame, Map[String, Long]) = {
-    val matchRows = claimedOf(liveTagged(spark, tableDir, cand, m))
-      .withColumn("__grp", org.apache.spark.sql.functions
-        .substring_index(col("__dv_rel"), "/", 1))
-    val perGroup: Map[String, Long] = matchRows.groupBy("__grp").count()
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    (matchRows, perGroup)
-  }
-
   /** The DV-masked, row-identity-tagged live scan of `groups` —
-    * [[scanVersionGroups]] content with `__dv_rel`/`__dv_pos` kept, the
-    * view claim transforms ([[deleteClaims]]/[[updateClaims]]) run on. */
+    * [[scanVersionGroups]] content plus `__dv_rel`/`__dv_pos` (the
+    * row's deletion-vector identity) and `__grp` (its owning group):
+    * the frame every [[RowAction]] runs on. */
   private def liveTagged(
       spark: SparkSession, tableDir: String,
       groups: Seq[String], m: Manifest): DataFrame = {
     val gs = groups.toSet
     val dvFor = m.dvs.filter(d => gs(d._1))
-    val tagged0 = scanGroupsTagged(spark, tableDir, groups, m.schemaDdl, m.mapping)
-    if (dvFor.isEmpty) tagged0
-    else tagged0.join(dvMaskRows(spark, tableDir, dvFor),
-      Seq("__dv_rel", "__dv_pos"), "left_anti")
+    val tagged = scanGroupsTagged(spark, tableDir, groups, m.schemaDdl, m.mapping)
+    val live =
+      if (dvFor.isEmpty) tagged
+      else tagged.join(dvMaskRows(spark, tableDir, dvFor),
+        Seq("__dv_rel", "__dv_pos"), "left_anti")
+    live.withColumn("__grp", org.apache.spark.sql.functions
+      .substring_index(col("__dv_rel"), "/", 1))
   }
 
-  /** Partition the matched groups into (dvGroups, rewriteGroups): a
+  /** The matched groups that go merge-on-read (the rest rewrite): a
     * group goes merge-on-read when its matched fraction of LIVE rows
     * is at or below `spark.graft.dv.maxDeleteFraction` (default 0.1;
     * 0 disables DVs). Group totals come from the manifest's recorded
@@ -1966,24 +1900,22 @@ object Versioned {
       spark: SparkSession, tableDir: String,
       perGroup: Map[String, Long],
       dvByGroup: Map[String, (String, String, Long)],
-      m: Manifest): (Seq[String], Seq[String]) = {
+      m: Manifest): Seq[String] = {
     val maxFrac = spark.conf.getOption("spark.graft.dv.maxDeleteFraction")
       .map(_.toDouble).getOrElse(0.1)
     // DVs disabled: everything rewrites — pay no sidecar I/O deciding it
-    if (maxFrac <= 0.0) return (Seq.empty, perGroup.keys.toSeq.sorted)
+    if (maxFrac <= 0.0) return Seq.empty
     val cumFrac = spark.conf.getOption("spark.graft.dv.maxCumulativeFraction")
       .map(_.toDouble).getOrElse(0.5)
     val fromSidecars = sidecarRows(spark, tableDir,
       perGroup.keys.toSeq.filterNot(m.fileRows.contains))
-    perGroup.keys.toSeq.sorted.partition { g =>
-      maxFrac > 0.0 && {
-        val total = m.fileRows.get(g).orElse(fromSidecars.get(g))
-          .getOrElse(-1L)
-        val prior = dvByGroup.get(g).map(_._3).getOrElse(0L)
-        val live = total - prior
-        live > 0 && perGroup(g).toDouble / live <= maxFrac &&
-          (prior + perGroup(g)).toDouble / total <= cumFrac
-      }
+    perGroup.keys.toSeq.sorted.filter { g =>
+      val total = m.fileRows.get(g).orElse(fromSidecars.get(g))
+        .getOrElse(-1L)
+      val prior = dvByGroup.get(g).map(_._3).getOrElse(0L)
+      val live = total - prior
+      live > 0 && perGroup(g).toDouble / live <= maxFrac &&
+        (prior + perGroup(g)).toDouble / total <= cumFrac
     }
   }
 
@@ -2007,11 +1939,12 @@ object Versioned {
   }
 
   /** Write ONE position artifact for `dvGroups`: this mutation's
-    * matched positions merged with the groups' prior DV rows (at most
-    * one live DV entry per group, always complete). Each fresh row is
-    * KIND-tagged (`kindCol`: 'delete' or 'update') so the change feed
-    * can attribute a mixed merge's position growth per row. Returns
-    * the new manifest entries; empty when no group takes the DV path.
+    * claimed positions (`claimRows`, rows of `dvGroups` only) merged
+    * with the groups' prior DV rows (at most one live DV entry per
+    * group, always complete). Each fresh row is KIND-tagged (`kindCol`:
+    * 'delete' or 'update') so the change feed can attribute a mixed
+    * merge's position growth per row. Returns the new manifest
+    * entries; empty when no group takes the DV path.
     *
     * ARTIFACT-ACCRETION BOUND: when `absorb` is non-empty (the caller
     * found the new manifest would reference more than
@@ -2022,14 +1955,14 @@ object Versioned {
     * of one directory per mutation (old directories age out via
     * vacuum's reference counting). */
   private def writeDvArtifact(
-      spark: SparkSession, tableDir: String, matchRows: DataFrame,
+      spark: SparkSession, tableDir: String, claimRows: DataFrame,
       dvGroups: Seq[String],
       dvByGroup: Map[String, (String, String, Long)],
       perGroup: Map[String, Long],
-      kindCol: Column = lit("delete"),
-      absorb: Seq[(String, String, Long)] = Seq.empty): Seq[(String, String, Long)] = {
+      kindCol: Column,
+      absorb: Seq[(String, String, Long)]): Seq[(String, String, Long)] = {
     if (dvGroups.isEmpty) return Seq.empty
-    val fresh = matchRows.filter(col("__grp").isin(dvGroups: _*))
+    val fresh = claimRows
       .select(col("__dv_rel").as("rel"), col("__dv_pos").as("pos"),
         kindCol.cast("string").as("kind"))
     val prior = dvGroups.flatMap(dvByGroup.get) ++ absorb
@@ -2067,9 +2000,9 @@ object Versioned {
     * nor re-vectored this round); `absorb` = those same entries marked
     * for the FOLD — non-empty iff carrying them as-is would leave the
     * new manifest referencing more than `spark.graft.dv.maxArtifacts`
-    * (default 8) distinct artifact directories. Callers pass `absorb`
-    * to [[writeDvArtifact]] (which re-emits the absorbed entries under
-    * the fresh artifact) and publish
+    * (default 8) distinct artifact directories. [[mutate]] passes
+    * `absorb` to [[writeDvArtifact]] (which re-emits the absorbed
+    * entries under the fresh artifact) and publishes
     * `(if (absorb.isEmpty) carried else Nil) ++ dvAdditions` — the
     * absorbed groups MUST re-enter via dvAdditions or their deleted
     * rows would resurrect. */
@@ -2089,116 +2022,199 @@ object Versioned {
     (carried, absorb)
   }
 
-  def delete(spark: SparkSession, tableDir: String)(preds: Column*): Long = {
-    require(preds.nonEmpty, "delete needs at least one predicate")
-    val cond = preds.reduce(_ && _)
-    val applied = coalesce(cond, lit(false))
-    deleteClaims(spark, tableDir, Some(cond),
-      claimedOf = _.filter(applied), keptOf = _.filter(!applied))
-  }
-
-  /** [[delete]]'s engine with the CLAIM generalized to a transform
-    * pair: `claimedOf` selects the rows to remove from a (DV-masked,
-    * `__dv_rel`/`__dv_pos`-tagged) live scan, `keptOf` its exact
-    * complement. A predicate delete passes filters; a claim that is a
-    * JOIN (the over-limit multi-column NOT IN fallback) passes
-    * anti/semi joins — the DV-vs-rewrite economics are identical
-    * either way. `prune` (when derivable from the claim) narrows the
-    * candidate groups through the stats sidecars; `None` scans all. */
-  private[graft] def deleteClaims(
-      spark: SparkSession, tableDir: String, prune: Option[Column],
-      claimedOf: DataFrame => DataFrame,
-      keptOf: DataFrame => DataFrame): Long = {
+  /** The latest version of `tableDir` and its parsed manifest — the
+    * prologue of every DML statement. */
+  private def latestManifest(
+      spark: SparkSession, tableDir: String): (Long, Manifest) = {
     val v = latestVersion(spark, tableDir)
     require(v >= 0, s"no versions committed under $tableDir")
     val m = parseManifest(spark, tableDir, v)
     require(m.files.nonEmpty, s"version $v of $tableDir lists no files")
-    val cand = prune match {
-      case Some(c) =>
-        pruneGroups(spark, tableDir, m.files, m.schemaDdl, c, m.mapping, m.fileStats)._1
-      case None => m.files
+    (v, m)
+  }
+
+  /** One DML statement's effect on each live row, over [[liveTagged]]:
+    *  - `view` adds what the statement reads (a MERGE left-joins its
+    *    source; GraftDml's NOT IN fallback flags its key-set hits);
+    *  - `kind` (over the view) is NULL for a kept row and 'delete' or
+    *    'update' for a claimed one — the label the deletion vector
+    *    records per position. [[mutate]] evaluates it ONCE per row into
+    *    the `__kind` column, so an image reads the claim as
+    *    `col("__kind")` even after it reassigns the columns `kind`
+    *    reads;
+    *  - `image` projects kept and updated rows to their post-image,
+    *    given the view and the table's column names;
+    *  - `mor` marks the claims that may go merge-on-read: a group goes
+    *    merge-on-read only when every one of its claims may. */
+  private final case class RowAction(
+      kind: Column,
+      image: (DataFrame, Seq[String]) => DataFrame,
+      view: DataFrame => DataFrame,
+      mor: Column = lit(true))
+
+  /** THE commit path of every DML statement — [[delete]], [[update]],
+    * [[merge]], [[mergeClauses]] and GraftDml's NOT IN fallback — in
+    * Delta's shape: find the touched groups, rewrite them or extend
+    * their deletion vectors, commit.
+    *  1. ONE probe aggregate over the DV-masked candidates `cand`
+    *     (already stats-pruned) yields the touched groups AND each
+    *     group's claim counts, so the merge-on-read decision costs no
+    *     second scan. A candidate whose bounds overlapped but which
+    *     holds no claimed row carries over metadata-only.
+    *  2. A touched group whose claims may all go merge-on-read and
+    *     whose claimed fraction passes [[dvClassify]] is NOT rewritten:
+    *     its claimed positions join its deletion vector, and its update
+    *     claims' post-images land in one COPIES group (Delta's DV-update
+    *     shape). Every other touched group is rewritten — kept and
+    *     updated rows, plus `inserted` — into ONE new group; a new
+    *     group left empty is dropped unless it is all the version
+    *     would list.
+    *  3. Every written group is checked against the table's
+    *     constraints, the live-row count is metadata arithmetic, and
+    *     the commit is optimistic ([[publishExpecting]]). EVERY group
+    *     and artifact written is deleted on ANY failure past the first
+    *     write: vacuum reclaims only manifest-referenced directories,
+    *     so an orphan is permanent — and an orphaned dv-* artifact is
+    *     worse than dead bytes (a schema-pinned file stream could
+    *     ingest it as all-NULL table rows).
+    * `mode` labels the commit, except that a statement whose entire
+    * effect is merge-on-read commits under that effect — 'delete' when
+    * every claim deletes, 'update' when every claim updates — so
+    * [[changesFeed]] serves it row by row; mixed ones keep `mode`, with
+    * KIND-tagged positions and the `copies` annotation. `schemaDdl`
+    * overrides the manifest's schema for the written groups (a star
+    * MERGE's validated source schema). Returns the new version, or `v`
+    * unchanged when nothing is claimed and nothing inserted. */
+  private def mutate(
+      spark: SparkSession, tableDir: String, v: Long, m: Manifest,
+      cand: Seq[String], act: RowAction, mode: String,
+      inserted: Option[DataFrame] = None,
+      schemaDdl: Option[String] = None): Long = {
+    import org.apache.spark.sql.functions.{count, sum, when}
+    // `groups`' live rows through the action's view, with the table's
+    // column names
+    def viewed(groups: Seq[String]): (DataFrame, Seq[String]) = {
+      val scan = liveTagged(spark, tableDir, groups, m)
+      (act.view(scan).withColumn("__kind", act.kind),
+        scan.columns.filterNot(reservedCols).toSeq)
     }
-    if (cand.isEmpty) return v
-    // One pass over the (DV-masked) candidates yields the touched
-    // groups AND each group's matched-row count — the DV decision
-    // needs the fraction, so fold it into the probe instead of a
-    // second scan.
-    val (matchRows, perGroup) =
-      probeMatches(spark, tableDir, cand, m, claimedOf)
-    if (perGroup.isEmpty) return v // nothing to delete anywhere
+    val kind = col("__kind")
+    def postImage(rows: (DataFrame, Seq[String]), keep: Column): DataFrame =
+      act.image(rows._1.filter(keep), rows._2).select(rows._2.map(col): _*)
+    // per touched group: (claims, delete claims, claims barred from
+    // merge-on-read)
+    val probe: Map[String, (Long, Long, Long)] =
+      if (cand.isEmpty) Map.empty
+      else viewed(cand)._1.filter(kind.isNotNull).groupBy("__grp")
+        .agg(count(lit(1)), sum(when(kind === "delete", 1L).otherwise(0L)),
+          sum(when(act.mor, 0L).otherwise(1L)))
+        .collect().map(r =>
+          r.getString(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
+    if (probe.isEmpty && inserted.isEmpty) return v
+    val claims = probe.map { case (g, c) => g -> c._1 }
     val dvByGroup = m.dvs.map(d => d._1 -> d).toMap
-    // DELETION-VECTOR path (merge-on-read): a touched group whose
-    // matched fraction of LIVE rows is at or below the threshold gets
-    // its deleted positions recorded in a bitmap-sidecar artifact
-    // instead of a rewrite — a GDPR-style 1-row-in-each-of-10k-groups
-    // delete writes KBs of positions, not 10k groups' bytes. Scans
-    // apply the DV; [[compact]]/[[cluster]] materialize it away.
-    val (dvGroups, rewriteGroups) =
-      dvClassify(spark, tableDir, perGroup, dvByGroup, m)
+    val dvGroups = dvClassify(spark, tableDir,
+      claims.filter { case (g, _) => probe(g)._3 == 0L }, dvByGroup, m)
+    val dvSet = dvGroups.toSet
+    val (touched, untouched) =
+      m.files.partition(g => probe.contains(g) && !dvSet(g))
+    val dvClaims = dvGroups.map(claims).sum
+    val dvUpdates = dvClaims - dvGroups.map(probe(_)._2).sum
+    val dvRows = if (dvGroups.isEmpty) None else Some(viewed(dvGroups))
+    val copies =
+      if (dvUpdates == 0L) None
+      else dvRows.map(postImage(_, kind === "update"))
+    val rewritten =
+      if (touched.isEmpty) None
+      else Some(postImage(viewed(touched),
+        kind.isNull || kind =!= "delete"))
+    val newData = (rewritten.toSeq ++ inserted).reduceOption(_ unionByName _)
+    val ddl = schemaDdl.orElse(m.schemaDdl)
     val f = fs(spark, tableDir)
-    val hit = rewriteGroups.toSet
-    val (touched, untouched) = m.files.partition(hit)
-    // entries that would carry over unchanged — folded into the fresh
-    // artifact instead when that keeps the artifact count bounded
     val (dvCarried, dvAbsorb) = dvCarryPlan(spark, m, untouched, dvGroups)
-    val dvAdditions =
-      writeDvArtifact(spark, tableDir, matchRows, dvGroups, dvByGroup,
-        perGroup, absorb = dvAbsorb)
-    // EVERY unpublished artifact/group this mutation wrote must be
-    // reclaimed on ANY failure past this point, not only on a lost
-    // publish race: vacuum reclaims only manifest-referenced dirs, so
-    // an orphan is permanent — and an orphaned dv-* artifact is worse
-    // than dead bytes (a schema-pinned file stream could ingest it as
-    // all-NULL table rows). Double deletes (enforceConstraints and
-    // publishExpecting clean their own group on their own failures)
-    // are harmless no-ops.
-    val cleanupOnFailure =
+    val dvAdditions = dvRows.fold(Seq.empty[(String, String, Long)])(rows =>
+      writeDvArtifact(spark, tableDir, rows._1.filter(kind.isNotNull),
+        dvGroups, dvByGroup, claims, kind, dvAbsorb))
+    val written =
       scala.collection.mutable.ArrayBuffer[String](dvAdditions.map(_._2).distinct: _*)
+    def write(df: DataFrame): (String, Long) = {
+      val (g, n) = writeGroup(df, tableDir, m.mapping)
+      written += g
+      enforceConstraints(spark, tableDir, g, ddl, m.constraints, m.mapping)
+      (g, n)
+    }
     try {
-      // Rewrite path for the heavily-hit groups (classic COW).
-      val (rewriteGroup, kept) =
-        if (touched.isEmpty) (None, 0L)
-        else {
-          val survivors = keptOf(liveTagged(spark, tableDir, touched, m))
-            .drop("__dv_rel", "__dv_pos")
-          val (group, n) = writeGroup(survivors, tableDir, m.mapping)
-          cleanupOnFailure += group
-          enforceConstraints(spark, tableDir, group, m.schemaDdl, m.constraints, m.mapping)
-          if (n == 0L && (untouched.nonEmpty || dvAdditions.nonEmpty)) {
-            // every touched row deleted: drop the empty rewrite group
-            f.delete(new Path(s"$tableDir/files/$group"), true)
-            (None, 0L)
-          } else (Some(group), n)
-        }
-      val groups = untouched ++ rewriteGroup.toSeq
-      // DV entries: prior entries for groups still present and not
-      // re-DV'd (nor absorbed) this round, plus this round's additions.
-      val dvs = (if (dvAbsorb.isEmpty) dvCarried else Seq.empty) ++ dvAdditions
-      val untouchedLive = liveGroupRows(spark, tableDir, untouched, m)
-      val deletedInDv = dvGroups.map(perGroup).sum
-      publishExpecting(spark, tableDir, v, groups,
-        rewriteGroup.toSeq, untouchedLive - deletedInDv + kept, "delete",
-        m.schemaDdl, mapping = m.mapping, dvs = dvs,
-        rowsByGroup = m.fileRows ++ rewriteGroup.map(_ -> kept))
+      val copiesGroup = copies.map(write)
+      val newGroup = newData.map(write) match {
+        case Some((g, 0L)) if untouched.nonEmpty || copiesGroup.nonEmpty =>
+          f.delete(new Path(s"$tableDir/files/$g"), true)
+          None
+        case other => other
+      }
+      val added = newGroup.toSeq ++ copiesGroup.toSeq
+      val label =
+        if (dvAdditions.isEmpty || touched.nonEmpty || newGroup.nonEmpty) mode
+        else if (dvUpdates == 0L) "delete"
+        else if (dvUpdates == dvClaims) "update"
+        else mode
+      publishExpecting(spark, tableDir, v, untouched ++ added.map(_._1),
+        added.map(_._1),
+        liveGroupRows(spark, tableDir, untouched, m) - dvClaims + added.map(_._2).sum,
+        label, ddl, mapping = m.mapping,
+        dvs = (if (dvAbsorb.isEmpty) dvCarried else Seq.empty) ++ dvAdditions,
+        rowsByGroup = m.fileRows ++ added,
+        copies = copiesGroup.map(_._1).toSeq)
     } catch {
       case scala.util.control.NonFatal(e) =>
-        cleanupOnFailure.foreach(g => scala.util.Try(
+        written.foreach(g => scala.util.Try(
           f.delete(new Path(s"$tableDir/files/$g"), true)))
         throw e
     }
   }
 
-  /** Copy-on-write `UPDATE ... SET assignments WHERE cond` — the third
-    * leg of the DML triad ([[delete]], [[merge]]), same two-phase
-    * economics: stats sidecars prune to candidates, exact touched-file
-    * detection ([[touchedGroups]]) picks the groups that actually hold
-    * a matching row, only those rewrite (each assignment applies under
-    * `coalesce(cond, false)` — NULL-predicate rows are NOT updated,
-    * ANSI semantics), everything else carries metadata-only. The
-    * rewrite may not reshape the table: an assignment that would change
-    * a column's type raises before any write. A no-match update returns
-    * the current version unchanged. CDC: rewrite boundary, like the
-    * other mutations.
+  /** `DELETE FROM ... WHERE preds` — Delta's delete economics over bare
+    * parquet, in two phases:
+    * 1. the stats sidecars prune to CANDIDATE groups at planning time
+    *    (metadata-only, KB of driver-side JSON);
+    * 2. one scan of the candidates finds the groups that actually hold
+    *    a matching row ([[mutate]]'s probe); only THOSE change — a
+    *    heavily-hit group is rewritten minus its matches, a group whose
+    *    matched fraction of live rows is at or below
+    *    `spark.graft.dv.maxDeleteFraction` records the deleted
+    *    positions in a deletion vector instead (merge-on-read: a
+    *    GDPR-style 1-row-in-each-of-10k-groups delete writes KBs of
+    *    positions, not 10k groups' bytes; scans apply the vector and
+    *    [[compact]]/[[cluster]] materialize it away). Every other group
+    *    carries into the new manifest METADATA-ONLY — deleting one day
+    *    from a year-of-appends table rewrites one group, not 365.
+    * A predicate that matches NOTHING is a pure no-op: the current
+    * version number returns and no new version is committed.
+    *
+    * SQL DELETE null semantics: rows where the predicate evaluates NULL
+    * are KEPT (survivors are `NOT coalesce(pred, false)`), exactly as
+    * `DELETE FROM t WHERE p` behaves in Spark/Delta/ANSI. History is
+    * intact — the parent version still reads the pre-delete rows. CDC:
+    * [[changes]] raises across a delete and [[pollChanges]] resyncs,
+    * since a file-group difference cannot represent removed rows;
+    * [[changesFeed]] serves a merge-on-read delete row by row (its new
+    * positions are the deleted rows) and raises on a rewrite. Returns
+    * the new (or unchanged) version. */
+  def delete(spark: SparkSession, tableDir: String)(preds: Column*): Long = {
+    require(preds.nonEmpty, "delete needs at least one predicate")
+    val cond = preds.reduce(_ && _)
+    mutateWhere(spark, tableDir, Some(cond), coalesce(cond, lit(false)), Nil)
+  }
+
+  /** `UPDATE ... SET assignments WHERE cond` — the third leg of the DML
+    * triad ([[delete]], [[merge]]), same two-phase economics: stats
+    * sidecars prune to candidates, one probe scan picks the groups
+    * that actually hold a matching row, only those change (each
+    * assignment applies under `coalesce(cond, false)` — NULL-predicate
+    * rows are NOT updated, ANSI semantics; assignments apply in order,
+    * so a later one reads an earlier one's result), everything else
+    * carries metadata-only. The update may not reshape the table: an
+    * assignment that would change a column's type raises before any
+    * write. A no-match update returns the current version unchanged.
     *
     * MERGE-ON-READ updates: a touched group whose matched fraction of
     * live rows is at or below `spark.graft.dv.maxDeleteFraction` is
@@ -2206,54 +2222,42 @@ object Versioned {
     * one new file group and the ORIGINAL positions join the group's
     * deletion vector (Delta's DV-update shape). A scattered update
     * (one row in each of 10k groups) writes the changed rows plus KBs
-    * of positions instead of 10k groups' bytes; [[changesFeed]] reads
-    * such a version as update_preimage/update_postimage rows. */
+    * of positions instead of 10k groups' bytes. CDC: [[changes]]
+    * raises across any update and [[pollChanges]] resyncs;
+    * [[changesFeed]] reads a merge-on-read update as
+    * update_preimage/update_postimage rows and raises on a rewrite. */
   def update(
       spark: SparkSession, tableDir: String, cond: Column,
       assignments: (String, Column)*): Long = {
-    val applied = cond.isNotNull && cond // NULL predicate → row untouched
-    updateClaims(spark, tableDir, Some(cond),
-      claimedOf = _.filter(applied), keptOf = _.filter(!applied),
-      assignments: _*)
+    require(assignments.nonEmpty, "update needs at least one assignment")
+    mutateWhere(spark, tableDir, Some(cond), cond.isNotNull && cond, assignments)
   }
 
-  /** [[update]]'s engine with the CLAIM generalized to a transform
-    * pair over the tagged live scan — see [[deleteClaims]]. Claimed
-    * rows take every assignment; kept rows carry unchanged. */
-  private[graft] def updateClaims(
+  /** [[delete]] (no `assignments`) or [[update]] of the rows `claimed`
+    * selects over `view` of the tagged live scan — a predicate for the
+    * two public statements, a key-set join flag for GraftDml's
+    * over-limit NOT IN fallback. `prune` (when derivable from the
+    * claim) narrows the candidate groups through the stats sidecars;
+    * `None` probes all. */
+  private[graft] def mutateWhere(
       spark: SparkSession, tableDir: String, prune: Option[Column],
-      claimedOf: DataFrame => DataFrame, keptOf: DataFrame => DataFrame,
-      assignments: (String, Column)*): Long = {
-    require(assignments.nonEmpty, "update needs at least one assignment")
-    val v = latestVersion(spark, tableDir)
-    require(v >= 0, s"no versions committed under $tableDir")
-    val m = parseManifest(spark, tableDir, v)
-    require(m.files.nonEmpty, s"version $v of $tableDir lists no files")
-    val cand = prune match {
-      case Some(c) =>
-        pruneGroups(spark, tableDir, m.files, m.schemaDdl, c, m.mapping, m.fileStats)._1
-      case None => m.files
-    }
-    if (cand.isEmpty) return v
-    val (matchRows, perGroup) =
-      probeMatches(spark, tableDir, cand, m, claimedOf)
-    if (perGroup.isEmpty) return v
-    val resolver = org.apache.spark.sql.catalyst.analysis.caseInsensitiveResolution
-    val tableCols = matchRows.columns.filterNot(reservedCols)
-    assignments.foreach { case (c, _) =>
-      require(tableCols.exists(resolver(_, c)),
-        s"update assignment targets unknown column '$c' " +
-          s"(table has ${tableCols.mkString(", ")})")
-    }
-    val dvByGroup = m.dvs.map(d => d._1 -> d).toMap
-    val (dvGroups, rewriteGroups) =
-      dvClassify(spark, tableDir, perGroup, dvByGroup, m)
-    val hit = rewriteGroups.toSet
-    val (touched, untouched) = m.files.partition(hit)
-    def applyAssignments(df: DataFrame, under: Column): DataFrame = {
+      claimed: Column, assignments: Seq[(String, Column)],
+      view: DataFrame => DataFrame = identity): Long = {
+    val (v, m) = latestManifest(spark, tableDir)
+    val cand = prune.fold(m.files)(c =>
+      pruneGroups(spark, tableDir, m.files, m.schemaDdl, c, m.mapping, m.fileStats)._1)
+    val mode = if (assignments.isEmpty) "delete" else "update"
+    val kind = org.apache.spark.sql.functions.when(claimed, lit(mode))
+    def assign(df: DataFrame, tableCols: Seq[String]): DataFrame = {
+      val resolver = org.apache.spark.sql.catalyst.analysis.caseInsensitiveResolution
+      assignments.foreach { case (c, _) =>
+        require(tableCols.exists(resolver(_, c)),
+          s"update assignment targets unknown column '$c' " +
+            s"(table has ${tableCols.mkString(", ")})")
+      }
       val out = assignments.foldLeft(df) { case (d, (c, expr)) =>
-        d.withColumn(c, org.apache.spark.sql.functions.when(under, expr)
-          .otherwise(col(c)))
+        d.withColumn(c, org.apache.spark.sql.functions
+          .when(col("__kind").isNotNull, expr).otherwise(col(c)))
       }
       df.schema.fields.zip(out.schema.fields).foreach { case (a, b) =>
         require(a.dataType == b.dataType,
@@ -2263,127 +2267,45 @@ object Versioned {
       }
       out
     }
-    val f = fs(spark, tableDir)
-    // DV path: updated COPIES of the matched rows → one new group;
-    // their original positions → the groups' deletion vectors.
-    val (dvCarried, dvAbsorb) = dvCarryPlan(spark, m, untouched, dvGroups)
-    val dvAdditions =
-      writeDvArtifact(spark, tableDir, matchRows, dvGroups, dvByGroup,
-        perGroup, kindCol = lit("update"), absorb = dvAbsorb)
-    // Same orphan discipline as [[delete]]: any failure past the
-    // artifact write (a constraint-violating assignment is the common
-    // one) must reclaim the artifact and every group written so far —
-    // vacuum cannot, and a stray dv-* artifact is poison to
-    // schema-pinned file streams. Double deletes are no-ops.
-    val cleanupOnFailure =
-      scala.collection.mutable.ArrayBuffer[String](dvAdditions.map(_._2).distinct: _*)
-    try {
-      val (copiesGroup, nCopies) =
-        if (dvGroups.isEmpty) (None, 0L)
-        else {
-          val copies = applyAssignments(
-            matchRows.filter(col("__grp").isin(dvGroups: _*))
-              .drop("__dv_rel", "__dv_pos", "__grp"), lit(true))
-          val (g, n) = writeGroup(copies, tableDir, m.mapping)
-          cleanupOnFailure += g
-          enforceConstraints(spark, tableDir, g, m.schemaDdl, m.constraints, m.mapping)
-          (Some(g), n)
-        }
-      // Rewrite path for the heavily-hit groups (classic COW).
-      val (rewriteGroup, nRewrite) =
-        if (touched.isEmpty) (None, 0L)
-        else {
-          val scan = liveTagged(spark, tableDir, touched, m)
-          val content = applyAssignments(
-            claimedOf(scan).drop("__dv_rel", "__dv_pos"), lit(true))
-            .unionByName(keptOf(scan).drop("__dv_rel", "__dv_pos"))
-          val (g, n) = writeGroup(content, tableDir, m.mapping)
-          cleanupOnFailure += g
-          enforceConstraints(spark, tableDir, g, m.schemaDdl, m.constraints, m.mapping)
-          (Some(g), n)
-        }
-      val groups = untouched ++ rewriteGroup.toSeq ++ copiesGroup.toSeq
-      val dvs = (if (dvAbsorb.isEmpty) dvCarried else Seq.empty) ++ dvAdditions
-      val untouchedLive = liveGroupRows(spark, tableDir, untouched, m)
-      // total live rows are unchanged by an update: the DV'd positions
-      // are exactly offset by their updated copies
-      val nRows = untouchedLive - dvGroups.map(perGroup).sum + nCopies + nRewrite
-      publishExpecting(spark, tableDir, v, groups,
-        rewriteGroup.toSeq ++ copiesGroup.toSeq, nRows, "update",
-        m.schemaDdl, mapping = m.mapping, dvs = dvs,
-        rowsByGroup = m.fileRows ++ rewriteGroup.map(_ -> nRewrite) ++
-          copiesGroup.map(_ -> nCopies),
-        copies = copiesGroup.toSeq)
-    } catch {
-      case scala.util.control.NonFatal(e) =>
-        cleanupOnFailure.foreach(g => scala.util.Try(
-          f.delete(new Path(s"$tableDir/files/$g"), true)))
-        throw e
-    }
+    mutate(spark, tableDir, v, m, cand, RowAction(kind, assign, view), mode)
   }
 
   /** Copy-on-write MERGE (upsert-by-replacement) into a versioned table:
     * target rows whose `keyCols` match a source row are REPLACED by that
     * source row, unmatched target rows are kept, unmatched source rows
     * are inserted — `MERGE WHEN MATCHED THEN UPDATE SET * WHEN NOT
-    * MATCHED THEN INSERT *`.
+    * MATCHED THEN INSERT *`, run as exactly that [[mergeClauses]]
+    * program with merge-on-read off: every touched group is rewritten.
     *
     * Delta's two-phase shape: the source's per-key min/max (ONE
     * aggregate, collected as 2·|keys| scalars) builds a range predicate
     * that prunes to CANDIDATE groups from the stats sidecars
-    * (metadata-only); then one semi-join of the candidates against the
-    * source keys finds the groups that actually hold a match
-    * ([[touchedGroups]]) — so a source whose keys are scattered (two
-    * extreme ids, or fresh insert keys beyond every bound) still
-    * rewrites only the files with real matches. Soundness: a matched
-    * row needs equality on EVERY key, so a group outside the source's
-    * range on any key provably holds no match — a daily upsert against
-    * a time-keyed 100 TB table rewrites the recent groups only.
+    * (metadata-only); then one probe of the candidates against the
+    * source keys finds the groups that actually hold a match — so a
+    * source whose keys are scattered (two extreme ids, or fresh insert
+    * keys beyond every bound) still rewrites only the files with real
+    * matches. Soundness: a matched row needs equality on EVERY key, so
+    * a group outside the source's range on any key provably holds no
+    * match — a daily upsert against a time-keyed 100 TB table rewrites
+    * the recent groups only.
     *
     * Contracts: the source schema must match the table's ([[append]]'s
     * no-evolution validation), and source keys must be UNIQUE — two
     * source rows matching one target row is ambiguous, and raises here
-    * exactly as Delta's MERGE does. CDC consumers see a rewrite boundary
-    * (same as [[delete]]). Returns the new (or unchanged) version. */
+    * exactly as Delta's MERGE does. CDC: [[changes]] raises across any
+    * merge and [[pollChanges]] resyncs; [[changesFeed]] serves an
+    * insert-only merge as inserts and raises on a rewrite. Returns the
+    * new (or unchanged) version. */
   def merge(
       spark: SparkSession,
       tableDir: String,
       source: DataFrame,
       keyCols: Seq[String]): Long = {
-    require(keyCols.nonEmpty, "merge needs at least one key column")
-    val v = latestVersion(spark, tableDir)
-    require(v >= 0, s"no versions committed under $tableDir")
-    val m = parseManifest(spark, tableDir, v)
-    require(m.files.nonEmpty, s"version $v of $tableDir lists no files")
-    val schemaDdl = validateAppendSchema(source, m.schemaDdl, evolve = false)
-    // The source feeds two consumers (the stats pass, anti-join +
-    // union); pin it once so its plan runs once.
-    val src = source.capLineage()
-    val (srcRows, rangePred) =
-      mergeSourceStats(src, keyCols, checkDups = true, needBounds = true)
-    if (srcRows == 0L) return v
-    val (cand, _) = pruneGroups(spark, tableDir, m.files, m.schemaDdl, rangePred.get, m.mapping, m.fileStats)
-    val srcKeys = src.select(keyCols.map(col): _*)
-    val hit = touchedGroups(spark, tableDir, cand, m.schemaDdl, m.mapping, m.dvs)(
-      _.join(srcKeys, keyCols, "left_semi"))
-    val (touched, untouched) = m.files.partition(hit)
-    // Align the source to the table's column order (names already
-    // validated; resolution is case-insensitive).
-    val tableCols = scanGroups(spark, tableDir, m.files, m.schemaDdl, m.mapping).columns
-    val srcAligned = src.select(tableCols.map(col): _*)
-    val newData =
-      if (touched.isEmpty) srcAligned
-      else scanVersionGroups(spark, tableDir, touched, m.schemaDdl, m.mapping, m.dvs)
-        .join(srcKeys, keyCols, "left_anti")
-        .unionByName(srcAligned)
-    val (group, n) = writeGroup(newData, tableDir, m.mapping)
-    enforceConstraints(spark, tableDir, group, schemaDdl, m.constraints, m.mapping)
-    val untouchedRows = liveGroupRows(spark, tableDir, untouched, m)
-    publishExpecting(spark, tableDir, v, untouched :+ group, Seq(group),
-      untouchedRows + n, "merge", schemaDdl, mapping = m.mapping,
-      dvs = { val unSet = untouched.toSet
-        m.dvs.filter(d => unSet(d._1)) },
-      rowsByGroup = m.fileRows + (group -> n))
+    import MergeClause._
+    mergeWith(spark, tableDir, source, keyCols,
+      Seq(MatchedUpdate(source.columns.toSeq.map(c => c -> col(s"SRC.$c"))),
+        NotMatchedInsert()),
+      onResidual = None, mergeOnRead = false)
   }
 
   /** ONE aggregate pass over a merge source decides its row count, the
@@ -2466,18 +2388,20 @@ object Versioned {
     * NULL keys never match.
     *
     * Scale shape: matched/insert work prunes exactly like [[merge]]
-    * (source key range → candidate groups → exact touched-group
-    * semi-join). NOT-MATCHED-BY-SOURCE clauses act on rows ABSENT from
-    * the source, which any group may hold — those clauses widen the
-    * rewrite to the groups whose stats admit a row satisfying their
-    * conditions (an unconditional by-source clause rewrites every
-    * group, exactly the cost Delta pays for it). Untouched groups
-    * carry metadata-only either way.
+    * (source key range → candidate groups). NOT-MATCHED-BY-SOURCE
+    * clauses act on rows ABSENT from the source, which any group may
+    * hold — those clauses widen the candidates to the groups whose
+    * stats admit a row satisfying their conditions (an unconditional
+    * by-source clause probes every group, exactly the cost Delta pays
+    * for it). One probe of the candidates evaluates every clause per
+    * row ([[mutate]]): only groups holding a row some clause actually
+    * CLAIMS change; every other group carries metadata-only.
     *
     * MERGE-ON-READ matched actions (Delta's DV-backed MERGE): a group
-    * hit only by MATCHED clauses whose claimed fraction of live rows
-    * is at or below `spark.graft.dv.maxDeleteFraction` is NOT
-    * rewritten — delete claims join its deletion vector, update claims
+    * whose claims all come from MATCHED clauses and whose claimed
+    * fraction of live rows is at or below
+    * `spark.graft.dv.maxDeleteFraction` is NOT rewritten — delete
+    * claims join its deletion vector, update claims
     * write updated copies into one new group ([[update]]'s shape); a
     * scattered-key SQL MERGE writes positions + changed rows instead
     * of every touched group. When the merge's entire effect is a pure
@@ -2501,7 +2425,7 @@ object Versioned {
     * exists (ambiguous, as Delta raises) — and always when a residual
     * is given (two same-key source rows with different residual truth
     * cannot be disambiguated per target row here; refusal is loud,
-    * never a wrong merge); with INSERT clauses the
+    * never a wrong merge); with an INSERT * clause the
     * source schema must match the table's; update assignments are cast
     * to the column's type and may not reshape the table. Returns the
     * new (or unchanged) version. */
@@ -2511,7 +2435,16 @@ object Versioned {
       source: DataFrame,
       keyCols: Seq[String],
       clauses: Seq[MergeClause],
-      onResidual: Option[Column] = None): Long = {
+      onResidual: Option[Column] = None): Long =
+    mergeWith(spark, tableDir, source, keyCols, clauses, onResidual,
+      mergeOnRead = true)
+
+  /** [[mergeClauses]] with merge-on-read switchable: off, every touched
+    * group is rewritten — [[merge]]'s copy-on-write contract. */
+  private def mergeWith(
+      spark: SparkSession, tableDir: String, source: DataFrame,
+      keyCols: Seq[String], clauses: Seq[MergeClause],
+      onResidual: Option[Column], mergeOnRead: Boolean): Long = {
     import MergeClause._
     require(keyCols.nonEmpty, "merge needs at least one key column")
     require(clauses.nonEmpty, "merge needs at least one clause")
@@ -2524,10 +2457,7 @@ object Versioned {
       case c: NotMatchedBySourceUpdate => c: MergeClause
       case c: NotMatchedBySourceDelete => c: MergeClause
     }
-    val v = latestVersion(spark, tableDir)
-    require(v >= 0, s"no versions committed under $tableDir")
-    val m = parseManifest(spark, tableDir, v)
-    require(m.files.nonEmpty, s"version $v of $tableDir lists no files")
+    val (v, m) = latestManifest(spark, tableDir)
     // Only STAR inserts need the source to mirror the table; a partial
     // INSERT (cols) VALUES (...) source may have any shape (unlisted
     // table columns become NULL).
@@ -2554,37 +2484,21 @@ object Versioned {
       col(s"TGT.$k") === col(s"SRC.$k")).reduce(_ && _)
     // matched-ness = key equality AND the ON residual (when given)
     val matchCond = onResidual.foldLeft(keyJoinCond)(_ && _)
-    val hitMatch: Set[String] =
-      if (matched.isEmpty || srcEmpty) Set.empty
-      else if (onResidual.isEmpty)
-        touchedGroups(spark, tableDir, cand, m.schemaDdl, m.mapping, m.dvs)(
-          _.join(srcKeys, keyCols, "left_semi"))
-      else
-        // the residual narrows the probe too: a group whose key-equal
-        // pairs all fail the residual holds no matched row
-        touchedGroups(spark, tableDir, cand, m.schemaDdl, m.mapping, m.dvs)(
-          _.alias("TGT").join(src.alias("SRC"), matchCond, "left_semi"))
-    // By-source clauses touch groups that may HOLD a claimable row:
-    // prune by the (approximate) union of their conditions, then the
-    // exact contains-a-row probe. Matched-ness cannot be decided per
-    // group, so a group whose qualifying rows all turn out matched
-    // rewrites to identical content — sound, never wrong.
-    val hitBySource: Set[String] =
-      if (bySource.isEmpty) Set.empty
+    // By-source clauses claim rows ABSENT from the source, which any
+    // group may hold: their candidates are the groups whose stats admit
+    // a row satisfying the (approximate) union of their conditions.
+    val bsCand: Seq[String] =
+      if (bySource.isEmpty) Seq.empty
       else {
-        // the conditions speak TGT.*; the prune/probe run on the bare scan
+        // the conditions speak TGT.*; the prune runs on the bare scan
         val bsCond = org.apache.spark.sql.graftshim.GraftSqlBridge
           .stripTgtQualifier(bySource.map {
             case NotMatchedBySourceUpdate(_, c) => c.getOrElse(lit(true))
             case NotMatchedBySourceDelete(c) => c.getOrElse(lit(true))
             case _ => lit(true)
           }.reduce(_ || _))
-        val (bsCand, _) =
-          pruneGroups(spark, tableDir, m.files, m.schemaDdl, bsCond, m.mapping, m.fileStats)
-        touchedGroups(spark, tableDir, bsCand, m.schemaDdl, m.mapping, m.dvs)(
-          _.filter(bsCond))
+        pruneGroups(spark, tableDir, m.files, m.schemaDdl, bsCond, m.mapping, m.fileStats)._1
       }
-    val hit = hitMatch ++ hitBySource
 
     val tableSchema = scanGroups(spark, tableDir, m.files, m.schemaDdl, m.mapping)
       .schema
@@ -2662,88 +2576,17 @@ object Versioned {
         }.otherwise(col(s"TGT.${f.name}")).as(f.name)
     }
 
-    // MERGE-ON-READ for MATCHED actions (Delta's DV-backed MERGE): a
-    // touched group hit ONLY by matched clauses (a by-source clause may
-    // claim rows in its groups that the per-group probe cannot rule
-    // matched, so those always rewrite) whose CLAIMED fraction of live
-    // rows is at or below the DV threshold is NOT rewritten — DELETE
-    // claims join the group's deletion vector; UPDATE claims write
-    // their updated copies into one new group and their original
-    // positions join the vector (Versioned.update's shape). A
-    // scattered-key SQL MERGE thus writes positions + changed rows, not
-    // every touched group's bytes. Groups whose matched rows are all
-    // UNCLAIMED (every clause condition false) carry over untouched.
-    val maxFracOn = spark.conf.getOption("spark.graft.dv.maxDeleteFraction")
-      .map(_.toDouble).getOrElse(0.1) > 0.0
-    val dvEligible: Seq[String] =
-      if (!maxFracOn || matched.isEmpty || srcEmpty)
-        Seq.empty
-      else (hitMatch -- hitBySource).toSeq.sorted
-    val matchedIds: Seq[Int] = (1 to matched.size)
-    val matchedDeleteIds = branches.collect {
-      case (_, id, _: MatchedDelete) if id <= matched.size => id }
-    val matchedUpdateIds = branches.collect {
-      case (_, id, _: MatchedUpdate) if id <= matched.size => id }
-    val dvByGroup = m.dvs.map(d => d._1 -> d).toMap
-
-    // DV-masked tagged scan of `groups` joined with the source, action
-    // id attached — the per-row claim view the DV path works from.
-    def joinedTagged(groups: Seq[String]): DataFrame =
-      liveTagged(spark, tableDir, groups, m)
-        .withColumn("__grp", org.apache.spark.sql.functions
-          .substring_index(col("__dv_rel"), "/", 1))
-        .alias("TGT")
-        .join(s, matchCond, "left")
-        .withColumn("__action", action)
-
-    // classification: per-group claimed counts (+ delete-claim counts,
-    // for the CDF-compatible mode label) — ONE aggregate, nothing
-    // materialized
-    val (dvGroups, claimsAll, dvDeleteClaims) =
-      if (dvEligible.isEmpty)
-        (Seq.empty[String], Map.empty[String, Long], 0L)
-      else {
-        val agg = joinedTagged(dvEligible)
-          .filter(col("__action").isin(matchedIds: _*))
-          .groupBy("__grp")
-          .agg(org.apache.spark.sql.functions.count(lit(1)).as("__n"),
-            org.apache.spark.sql.functions.sum(
-              org.apache.spark.sql.functions.when(
-                if (matchedDeleteIds.isEmpty) lit(false)
-                else col("__action").isin(matchedDeleteIds: _*), 1L)
-                .otherwise(0L)).as("__d"))
-          .collect()
-        val claims = agg.map(r => r.getString(0) -> r.getLong(1)).toMap
-        val dels = agg.map(r => r.getString(0) -> r.getLong(2)).toMap
-        val (dv, _) = dvClassify(spark, tableDir, claims, dvByGroup, m)
-        (dv, claims, dv.map(g => dels.getOrElse(g, 0L)).sum)
-      }
-    val dvGroupSet = dvGroups.toSet
-    val dvClaims = claimsAll.filter { case (g, _) => dvGroupSet(g) }
-    // matched-eligible groups whose matched rows are all unclaimed:
-    // nothing to do — carry over metadata-only instead of rewriting to
-    // identical content
-    val noopGroups: Set[String] = dvEligible.filterNot(claimsAll.contains).toSet
-    val rewriteHit = hit -- dvGroupSet -- noopGroups
-    val (touchedRw, untouchedFiles) = m.files.partition(rewriteHit)
-
-    // Rewrite of the heavily-hit / by-source groups: one left join
-    // against the source, a first-applicable action id per row, drops
-    // filtered, updates applied column-wise (cast to the column's type
-    // — the rewrite may not reshape the table).
-    val rewritten: Option[DataFrame] =
-      if (touchedRw.isEmpty) None
-      else {
-        val t = scanVersionGroups(
-          spark, tableDir, touchedRw, m.schemaDdl, m.mapping, m.dvs)
-          .alias("TGT")
-        val withAction = t.join(s, matchCond, "left")
-          .withColumn("__action", action)
-        val kept =
-          if (dropIds.isEmpty) withAction
-          else withAction.filter(!col("__action").isin(dropIds: _*))
-        Some(kept.select(out: _*))
-      }
+    // UPDATE SET * + INSERT * without merge-on-read ([[merge]]): a
+    // matched row's post-image IS its source row, so the rewrite drops
+    // the matched target rows and the WHOLE source lands as inserts —
+    // one join with the candidates instead of two (no anti-join of the
+    // source against the candidates' keys).
+    val replace = !mergeOnRead && onResidual.isEmpty && (clauses match {
+      case Seq(MatchedUpdate(as, None), NotMatchedInsert(None, Seq())) =>
+        as.forall { case (c, e) => e == col(s"SRC.$c") } &&
+          tableCols.forall(t => as.exists(a => resolver(a._1, t)))
+      case _ => false
+    })
 
     // Inserts: source rows matching NOTHING in the candidate groups
     // (matches are provably confined there). FIRST-APPLICABLE clause
@@ -2752,7 +2595,8 @@ object Versioned {
     // expressions with unlisted table columns NULL (Delta's partial
     // INSERT — the reference's own upsert semantic).
     val inserted: Option[DataFrame] =
-      if (inserts.isEmpty || srcEmpty) None
+      if (replace) Some(src.select(tableCols.map(col): _*))
+      else if (inserts.isEmpty || srcEmpty) None
       else {
         val insAction = inserts.zipWithIndex.foldLeft(
           org.apache.spark.sql.functions.when(lit(false), 0)) {
@@ -2800,96 +2644,24 @@ object Versioned {
         Some(claimed.select(out: _*))
       }
 
-    val f = fs(spark, tableDir)
-    if (rewritten.isEmpty && inserted.isEmpty && dvGroups.isEmpty)
-      return v // nothing touched, nothing claimed, nothing to insert
-
-    // The DV groups' CLAIMED rows, materialized once (bounded by the
-    // threshold fraction of those groups): feeds the position artifact
-    // and the updated copies.
-    val claimedDv: Option[DataFrame] =
-      if (dvGroups.isEmpty) None
-      else Some(joinedTagged(dvGroups)
-        .filter(col("__action").isin(matchedIds: _*))
-        .capLineage())
-    val dvKind =
-      if (matchedDeleteIds.isEmpty) lit("update")
-      else if (matchedUpdateIds.isEmpty) lit("delete")
-      else org.apache.spark.sql.functions
-        .when(col("__action").isin(matchedDeleteIds: _*), "delete")
-        .otherwise("update")
-    val (dvCarried, dvAbsorb) = dvCarryPlan(spark, m, untouchedFiles, dvGroups)
-    val dvAdditions = claimedDv.map(cd =>
-      writeDvArtifact(spark, tableDir, cd, dvGroups, dvByGroup, dvClaims,
-        kindCol = dvKind, absorb = dvAbsorb))
-      .getOrElse(Seq.empty)
-    // Orphan discipline (same as delete/update): reclaim the artifact
-    // and every group written so far on ANY failure past this point.
-    val cleanupOnFailure =
-      scala.collection.mutable.ArrayBuffer[String](dvAdditions.map(_._2).distinct: _*)
-    try {
-      // updated COPIES of the UPDATE-claimed rows in DV groups (DELETE
-      // claims need only their positions)
-      val (copiesGroup, nCopies) = claimedDv match {
-        case Some(cd) if matchedUpdateIds.nonEmpty =>
-          val copies = cd.filter(col("__action").isin(matchedUpdateIds: _*))
-            .select(out: _*)
-          val (g, nc) = writeGroup(copies, tableDir, m.mapping)
-          cleanupOnFailure += g
-          if (nc == 0L) { // all claims were deletes
-            f.delete(new Path(s"$tableDir/files/$g"), true)
-            (None, 0L)
-          } else {
-            enforceConstraints(spark, tableDir, g, m.schemaDdl, m.constraints, m.mapping)
-            (Some(g), nc)
-          }
-        case _ => (None, 0L)
-      }
-      val pieces = rewritten.toSeq ++ inserted.toSeq
-      val (newGroup, n) =
-        if (pieces.isEmpty) (None, 0L)
-        else {
-          val newData = pieces.reduce(_ unionByName _)
-          val (g, nn) = writeGroup(newData, tableDir, m.mapping)
-          cleanupOnFailure += g
-          enforceConstraints(spark, tableDir, g, schemaDdl, m.constraints, m.mapping)
-          if (nn == 0L && (untouchedFiles.nonEmpty || copiesGroup.nonEmpty ||
-            dvAdditions.nonEmpty)) {
-            f.delete(new Path(s"$tableDir/files/$g"), true)
-            (None, 0L)
-          } else (Some(g), nn)
-        }
-      val groups = untouchedFiles ++ newGroup.toSeq ++ copiesGroup.toSeq
-      val dvs = (if (dvAbsorb.isEmpty) dvCarried else Seq.empty) ++ dvAdditions
-      val untouchedRows = liveGroupRows(spark, tableDir, untouchedFiles, m)
-      val dvClaimTotal = dvGroups.map(dvClaims).sum
-      val nRows = untouchedRows - dvClaimTotal + n + nCopies
-      // EFFECT-mode label: a merge whose entire effect is a pure-DV
-      // delete (all claims deletes, no copies, no inserts, no
-      // rewrites) commits as mode 'delete', and one whose effect is
-      // exactly a merge-on-read update (all claims updates, copies
-      // only) as 'update'. Mixed DV merges keep mode 'merge' — the
-      // feed attributes their rows via the artifact's per-row claim
-      // kinds and the manifest's copies annotation.
-      val mode =
-        if (dvAdditions.isEmpty) "merge"
-        else if (touchedRw.isEmpty && newGroup.isEmpty &&
-          copiesGroup.isEmpty && dvDeleteClaims == dvClaimTotal) "delete"
-        else if (touchedRw.isEmpty && newGroup.isEmpty &&
-          copiesGroup.nonEmpty && dvDeleteClaims == 0L) "update"
-        else "merge"
-      publishExpecting(spark, tableDir, v, groups,
-        newGroup.toSeq ++ copiesGroup.toSeq, nRows, mode,
-        schemaDdl, mapping = m.mapping, dvs = dvs,
-        rowsByGroup = m.fileRows ++ newGroup.map(_ -> n) ++
-          copiesGroup.map(_ -> nCopies),
-        copies = copiesGroup.toSeq)
-    } catch {
-      case scala.util.control.NonFatal(e) =>
-        cleanupOnFailure.foreach(g => scala.util.Try(
-          f.delete(new Path(s"$tableDir/files/$g"), true)))
-        throw e
-    }
+    val deletes = if (replace) Seq(1) else dropIds
+    val isDelete =
+      if (deletes.isEmpty) lit(false) else col("__action").isin(deletes: _*)
+    val act = RowAction(
+      kind = org.apache.spark.sql.functions.when(isDelete, "delete")
+        .when(col("__action") =!= 0, "update"),
+      image = (df, _) => df.select(out: _*),
+      view = _.alias("TGT").join(s, matchCond, "left")
+        .withColumn("__action", action),
+      // merge-on-read covers MATCHED claims only: a group holding a
+      // by-source claim always rewrites
+      mor = if (mergeOnRead) col("__action") <= matched.size else lit(false))
+    // matched claims lie in the key-range candidates, by-source claims
+    // in theirs
+    val probed =
+      (if (matched.isEmpty || srcEmpty) Set.empty[String] else cand.toSet) ++ bsCand
+    mutate(spark, tableDir, v, m, m.files.filter(probed), act, "merge",
+      inserted, schemaDdl)
   }
 
   /** OPTIMIZE-style compaction: rewrite the latest version's data as a

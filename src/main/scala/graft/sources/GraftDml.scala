@@ -776,7 +776,8 @@ private[graft] final case class GraftUpdateCommand(
   * lineage before any write, so a subquery over the target itself
   * reads the old version), then the existing merge-clause COW runs
   * keyed on the materialized set: source key range → candidate groups
-  * → exact touched-group semi-join, untouched groups metadata-only.
+  * → one probe for the groups holding a claimed row, untouched groups
+  * metadata-only.
   * Empty `sets` = DELETE; else UPDATE.
   *
   * `negation`: "" = the positive key-set path (IN / EXISTS rows become
@@ -897,8 +898,8 @@ private[graft] final case class GraftDmlKeysCommand(
     *     global no-op, decided by one aggregate (matches the literal
     *     path, where such a predicate never evaluates TRUE).
     * The hit identities union on the scan's (rel, pos) row identity
-    * and the claim lands on [[Versioned.deleteClaims]] /
-    * [[Versioned.updateClaims]] — DV-vs-rewrite economics included. */
+    * and the claim lands on [[Versioned.mutateWhere]] — DV-vs-rewrite
+    * economics included. */
   private def notInMultiJoin(
       spark: SparkSession, keys: org.apache.spark.sql.DataFrame,
       residual: Option[org.apache.spark.sql.Column],
@@ -964,33 +965,18 @@ private[graft] final case class GraftDmlKeysCommand(
               "explicitly or rewrite as NOT EXISTS")
         (Seq(h1) ++ h2 ++ h3).reduce(_ unionByName _)
       }
-      // Lineage-cap the hit set ONCE per scan (the same remedy
-      // mergeClauses applies to claimedDv): the mutation consumes the
-      // claim several times (per-group probe collect, DV artifact
-      // write, copies/rewrite writes; claimedOf AND keptOf over the
-      // rewrite scan), and without the cap each action re-executes the
-      // table-vs-key-set joins. Keyed by scan identity: the probe scan
-      // and the rewrite scan are different frames, each caps once.
+      // Each scan the mutation reads (probe, merge-on-read groups,
+      // rewrite) is flagged hit-or-not against ONE lineage-capped hit
+      // set, so its anti and semi branches and every write over it
+      // reuse the set instead of re-running the table-vs-key-set joins.
       import graft.operators.Checkpoints.CapOps
-      val hitsCache = scala.collection.mutable.Map.empty[DataFrame, DataFrame]
-      def hitsOf(df: DataFrame): DataFrame =
-        hitsCache.getOrElseUpdate(df, hits(df).capLineage())
-      def claimedOf(df: DataFrame): DataFrame = {
-        val c = df.join(hitsOf(df), id, "left_anti")
-        residual.map(r => c.filter(coalesce(r, lit(false)))).getOrElse(c)
+      def flagged(df: DataFrame): DataFrame = {
+        val h = hits(df).capLineage()
+        df.join(h, id, "left_anti").withColumn("__nin", lit(true))
+          .unionByName(df.join(h, id, "left_semi").withColumn("__nin", lit(false)))
       }
-      def keptOf(df: DataFrame): DataFrame = {
-        val h = hitsOf(df)
-        val base = df.join(h, id, "left_semi")
-        residual.map(r => base.unionByName(
-          df.join(h, id, "left_anti").filter(!coalesce(r, lit(false)))))
-          .getOrElse(base)
-      }
-      if (sets.isEmpty)
-        Versioned.deleteClaims(spark, tableDir, None, claimedOf, keptOf)
-      else
-        Versioned.updateClaims(spark, tableDir, None, claimedOf, keptOf,
-          assigns: _*)
+      val claimed = residual.foldLeft(col("__nin"))((c, r) => c && coalesce(r, lit(false)))
+      Versioned.mutateWhere(spark, tableDir, None, claimed, assigns, flagged)
       Seq.empty
     } finally skeys.unpersist()
   }

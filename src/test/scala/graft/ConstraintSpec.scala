@@ -4,6 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 import graft.operators.Versioned
+import graft.operators.Versioned.MergeClause
 
 /** CHECK constraints on versioned tables — Delta's `ALTER TABLE ADD
   * CONSTRAINT` semantics: add validates all existing rows, every write
@@ -16,6 +17,10 @@ class ConstraintSpec extends SparkSpec {
   import spark.implicits._
 
   private def tbl() = Files.createTempDirectory("graft-cons").toString + "/t"
+
+  private def dvArtifacts(dir: String): Seq[String] =
+    new java.io.File(s"$dir/files").listFiles().map(_.getName)
+      .filter(_.startsWith("dv-")).toSeq
 
   private def groupCount(dir: String): Int = {
     val p = new org.apache.hadoop.fs.Path(s"$dir/files")
@@ -59,16 +64,19 @@ class ConstraintSpec extends SparkSpec {
     Versioned.addConstraint(spark, dir, "score_pos", "score >= 0")
     // NULL score passed validation above; a NULL-bearing append passes too.
     Versioned.append(Seq((3L, None: Option[Long])).toDF("id", "score"), dir)
+    val groups = groupCount(dir)
     // update that would push a row negative: blocked.
     intercept[IllegalArgumentException] {
       Versioned.update(spark, dir, col("id") === 1L,
         "score" -> (col("score") - 100L))
     }
+    assert(groupCount(dir) == groups, "refused update must delete its group")
     // merge with a violating source row: blocked; clean merge passes.
     intercept[IllegalArgumentException] {
       Versioned.merge(spark, dir,
         Seq((1L, Some(-1L))).toDF("id", "score"), Seq("id"))
     }
+    assert(groupCount(dir) == groups, "refused merge must delete its group")
     Versioned.merge(spark, dir,
       Seq((1L, Some(99L))).toDF("id", "score"), Seq("id"))
     // commit (snapshot) enforces as well.
@@ -76,6 +84,33 @@ class ConstraintSpec extends SparkSpec {
       Versioned.commit(Seq((9L, Some(-9L))).toDF("id", "score"), dir)
     }
     assert(Versioned.read(spark, dir).filter(col("score") < 0).count() == 0L)
+
+    // Merge-on-read path: one row of a 100-row group is under the 0.1
+    // deletion-vector fraction, so these statements write a position
+    // artifact and a copies group BEFORE the constraint refuses the
+    // copies; the refusal must take both back.
+    val big = tbl()
+    Versioned.commit((0L until 100L).map(i => (i, Option(i))).toDF("id", "score"), big)
+    Versioned.addConstraint(spark, big, "score_pos", "score >= 0")
+    val v = Versioned.latestVersion(spark, big)
+    val bigGroups = groupCount(big)
+    def assertNothingLeft(what: String): Unit = {
+      assert(Versioned.latestVersion(spark, big) == v, s"refused $what committed")
+      assert(groupCount(big) == bigGroups, s"refused $what leaked a group")
+      assert(dvArtifacts(big).isEmpty, s"refused $what leaked ${dvArtifacts(big)}")
+    }
+    intercept[IllegalArgumentException] {
+      Versioned.update(spark, big, col("id") === 5L, "score" -> lit(-1L))
+    }
+    assertNothingLeft("deletion-vector update")
+    intercept[IllegalArgumentException] {
+      Versioned.mergeClauses(spark, big, Seq((5L, -1L)).toDF("id", "score"),
+        Seq("id"), Seq(MergeClause.MatchedUpdate(Seq("score" -> col("SRC.score")))))
+    }
+    assertNothingLeft("deletion-vector merge")
+    // the same statement with a clean value does take the DV path
+    val clean = Versioned.update(spark, big, col("id") === 5L, "score" -> lit(50L))
+    assert(Versioned.parseManifest(spark, big, clean).dvs.nonEmpty)
   }
 
   test("a snapshot that drops the constrained column is refused, named") {
