@@ -3930,9 +3930,6 @@ object SparkEntry {
         .orderBy("event_type"))
   )
 
-  /** DuckDB-dialect oracles, column names aligned with `queries`. Spark's
-    * `div 1000`-converted event timestamps equal DuckDB's TIMESTAMP_NS cast
-    * to microseconds on the 15-minute bucket boundaries used here. */
   /** Mechanically-unrolled N-round BPE oracle (same arithmetic and
     * replace semantics as the 3-round hand-written one): each round is
     * a FULL recount in DuckDB, which is exactly what the incremental
@@ -4022,6 +4019,9 @@ object SparkEntry {
     sb.toString
   }
 
+  /** DuckDB-dialect oracles, column names aligned with `queries`. Spark's
+    * `div 1000`-converted event timestamps equal DuckDB's TIMESTAMP_NS cast
+    * to microseconds on the 15-minute bucket boundaries used here. */
   def oracleSql: Map[String, String] = Map(
     "bpe_merges_deep" -> bpeDeepOracleSql(50, "doc_id % 20 = 0"),
     "bpe_encode_pack" ->

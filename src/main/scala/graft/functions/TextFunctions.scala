@@ -91,13 +91,12 @@ object TextFunctions {
 
   def subwordCount(c: Column): Column = subwordCountFrom(normalizeText(c))
 
-  /** Word n-gram shingles over normalized tokens. Documents shorter than
-    * `n` tokens yield a single shingle (the whole text) so they still
-    * participate in dedup. */
   /** Word n-gram shingles of the normalized text — the native
     * [[WordShingles]] expression (one normalize + one substring pass per
-    * row). The HOF tree it replaces ([[wordShinglesTree]], retained as
-    * the verification twin WordShinglesSpec pins bit-equality against)
+    * row). A document of at most `n` tokens yields a single shingle (the
+    * whole normalized text), so it still participates in dedup. The HOF
+    * tree it replaces ([[wordShinglesTree]], retained as the
+    * verification twin WordShinglesSpec pins bit-equality against)
     * re-evaluated the whole normalize+split chain once PER SHINGLE
     * inside its interpreted `transform` lambda. Self-registers on the
     * active/default session, same convention as [[qualityScore]]. */

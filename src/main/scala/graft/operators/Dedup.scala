@@ -813,9 +813,6 @@ object Dedup {
     result
   }
 
-  /** Keep one representative per near-dup cluster found by minHashLsh:
-    * drops every id that appears as the greater member of a qualifying
-    * pair (transitive chains collapse to their smallest id stepwise). */
   /** SemDeDup-style semantic near-duplicate removal (Abbas et al. 2023,
     * arXiv:2303.09540) over an embedding column: k-means cluster blocking
     * (cells reused from the IVF machinery) generates candidate pairs at
@@ -852,6 +849,9 @@ object Dedup {
     df.join(losers, Seq(idCol), "left_anti")
   }
 
+  /** Keep one representative per near-dup cluster found by minHashLsh:
+    * drops every id that appears as the greater member of a qualifying
+    * pair (transitive chains collapse to their smallest id stepwise). */
   def minHashDedup(
       df: DataFrame,
       textCol: String,

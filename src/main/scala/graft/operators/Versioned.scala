@@ -85,11 +85,8 @@ object Versioned {
     * rebuild after a vacuum, never a stale read). -1 = unreadable. */
   private def tableEpoch(spark: SparkSession, tableDir: String, lowest: Long): Long = {
     if (lowest < 0) return -1L
-    try {
-      val in = fs(spark, tableDir).open(manifestPath(tableDir, lowest))
-      val raw = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-      fnv64(raw) ^ lowest
-    } catch { case _: java.io.IOException => -1L }
+    try fnv64(readText(fs(spark, tableDir), manifestPath(tableDir, lowest))) ^ lowest
+    catch { case _: java.io.IOException => -1L }
   }
 
   /** Qualified-path cache key: trailing slashes and scheme-qualified vs
@@ -106,14 +103,18 @@ object Versioned {
           e: java.util.Map.Entry[String, V]): Boolean = size() > maxEntries
     }
 
-  /** `mapping` is Delta-style COLUMN MAPPING state: (logical, physical)
+  /** One version's resolved state, as [[ManifestCodec]] reads and
+    * writes it.
+    *
+    * `mapping` is Delta-style COLUMN MAPPING state: (logical, physical)
     * name pairs for every column of the logical schema, plus tombstones
     * `("", physical)` for dropped columns. Empty = identity (tables
     * that never renamed/dropped pay nothing). `schema` always records
     * the LOGICAL schema; file groups store PHYSICAL column names, which
     * never change once assigned — that is what makes RENAME/DROP
-    * metadata-only. */
-  /** `dvs` is DELETION-VECTOR state (Delta's merge-on-read deletes):
+    * metadata-only.
+    *
+    * `dvs` is DELETION-VECTOR state (Delta's merge-on-read deletes):
     * one entry per file group carrying a DV — (group, artifact,
     * deletedRows) where `artifact` is a parquet directory under
     * `files/` holding (rel, pos) rows: `rel` is the file's path suffix
@@ -121,23 +122,30 @@ object Versioned {
     * `pos` its `_metadata.row_index`. Every scan of a version
     * anti-joins the DV'd groups against their artifacts; a rewrite of
     * a group materializes (drops) its entry. At most one entry per
-    * group per version. */
-  /** `fileRows` is the PER-GROUP row count, recorded at commit time
+    * group per version.
+    *
+    * `fileRows` is the PER-GROUP row count, recorded at commit time
     * (aligned with `files` in the JSON) — the metadata every mutation's
     * planning needs (untouched-row totals, DV fraction classification).
     * Without it each DML paid one serial driver-side sidecar read PER
     * GROUP: invisible on a local FS, but at 100k groups on an object
     * store (~10-20 ms/GET) that is tens of minutes of serial driver
     * time per mutation. Empty for pre-upgrade manifests — readers fall
-    * back to the sidecars once, and the next publish records it. */
-  /** `fileStats` is the PER-GROUP min/max/null-count stats JSON
+    * back to the sidecars once, and the next publish records it.
+    *
+    * `fileStats` is the PER-GROUP min/max/null-count stats JSON
     * ([[GroupStats.toJson]] text, parsed on use), recorded at commit
     * time alongside `fileRows` — what moves planning-time data
     * skipping from one sidecar GET per group to ZERO metadata I/O
     * beyond the manifest itself. Coverage may be partial (pre-upgrade
     * groups, complex-typed-only groups): a group without an entry
     * conservatively falls back to its sidecar, and an absent sidecar
-    * just means "cannot prune". */
+    * just means "cannot prune".
+    *
+    * `copies` marks which ADDED group(s) hold a DV mutation's updated
+    * row copies (vs inserts) — the change feed's postimage attribution
+    * for mixed merges. Like mode, n_rows, committed_at and txn it
+    * belongs to its version alone and is never carried forward. */
   private[graft] final case class Manifest(
       files: Seq[String], nRows: Long, mode: String, committedAt: String,
       txn: Option[(String, Long)] = None,
@@ -148,11 +156,6 @@ object Versioned {
       fileRows: Map[String, Long] = Map.empty,
       copies: Seq[String] = Seq.empty,
       fileStats: Map[String, String] = Map.empty)
-
-  private def jsonEscape(s: String): String =
-    s.replace("\\", "\\\\").replace("\"", "\\\"")
-  private def jsonUnescape(s: String): String =
-    s.replace("\\\"", "\"").replace("\\\\", "\\")
 
   /** Checkpoint SIDECAR path for a version — a FULL record written by
     * [[vacuum]] beside a delta record whose ancestors it is about to
@@ -171,6 +174,11 @@ object Versioned {
     h
   }
 
+  private def readText(f: org.apache.hadoop.fs.FileSystem, path: Path): String = {
+    val in = f.open(path)
+    try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
+  }
+
   /** Raw text of the record at `path`, FAIL-CLOSED on torn reads: on
     * the local scheme manifest content is atomic (FsAtomic links a
     * fully-written temp file into place), but other filesystems publish
@@ -185,8 +193,7 @@ object Versioned {
     var raw = ""
     var attempt = 0
     while ({
-      val in = f.open(path)
-      raw = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
+      raw = readText(f, path)
       val t = raw.trim
       val complete = t.startsWith("{") && t.endsWith("}")
       if (!complete) {
@@ -274,16 +281,7 @@ object Versioned {
       expectHash: Option[Long] = None): (Long, Manifest) = {
     val f = fs(spark, tableDir)
     def key(w: Long) = cacheKey(spark, tableDir) + "#" + w
-    def parentRef(raw: String, w: Long): (Long, Long) = {
-      val p = "\"parent\":(\\d+)".r.findFirstMatchIn(raw).map(_.group(1).toLong)
-        .getOrElse(throw new IllegalStateException(
-          s"delta manifest v$w of $tableDir has no parent — corrupt"))
-      val ph = "\"parent_hash\":\"(-?\\d+)\"".r.findFirstMatchIn(raw)
-        .map(_.group(1).toLong)
-        .getOrElse(throw new IllegalStateException(
-          s"delta manifest v$w of $tableDir has no parent_hash — corrupt"))
-      (p, ph)
-    }
+    def what(w: Long) = s"manifest v$w of $tableDir"
     val raw0 = recordRaw(f, manifestPath(tableDir, v))
     val h0 = fnv64(raw0)
     expectHash.foreach { e =>
@@ -299,16 +297,17 @@ object Versioned {
     // walk DOWN the chain, collecting unresolved delta records
     // oldest-first, until a full record, a hash-verified cached
     // ancestor, or the vacuum boundary's checkpoint sidecar
-    var chain = List.empty[(Long, String, Long)] // (version, raw, hash)
+    var chain = List.empty[(Long, org.json4s.JValue, Long)] // (version, record, hash)
     var curV = v; var curRaw = raw0; var curH = h0
     var base: Manifest = null
     while (base == null) {
-      if (!curRaw.trim.startsWith("{\"delta\":")) {
-        base = parseFullRecord(curRaw, curV)
+      val j = ManifestCodec.parse(curRaw, what(curV))
+      if (!ManifestCodec.isDelta(j)) {
+        base = ManifestCodec.decodeFull(j, what(curV))
         resolvedManifestCache.put(key(curV), curH, base)
       } else {
-        val (p, ph) = parentRef(curRaw, curV)
-        chain = (curV, curRaw, curH) :: chain
+        val (p, ph) = ManifestCodec.parentRef(j, what(curV))
+        chain = (curV, j, curH) :: chain
         resolvedManifestCache.get(key(p)) match {
           case Some((ch, m)) if ch == ph => base = m
           case _ =>
@@ -328,8 +327,9 @@ object Versioned {
                 // vacuumed parent: curV is the retention boundary and
                 // carries a checkpoint sidecar — it IS curV's state,
                 // so curV leaves the fold list
-                base = parseFullRecord(
-                  recordRaw(f, checkpointPath(tableDir, curV)), curV)
+                val sidecar = s"checkpoint sidecar c$curV of $tableDir"
+                base = ManifestCodec.decodeFull(ManifestCodec.parse(
+                  recordRaw(f, checkpointPath(tableDir, curV)), sidecar), sidecar)
                 resolvedManifestCache.put(key(curV), curH, base)
                 chain = chain.tail
             }
@@ -338,316 +338,11 @@ object Versioned {
     }
     // fold forward, caching every intermediate for the next walk
     var m = base
-    chain.foreach { case (cv, craw, ch) =>
-      m = foldDelta(m, craw, cv)
+    chain.foreach { case (cv, cj, ch) =>
+      m = ManifestCodec.foldDelta(m, cj)
       resolvedManifestCache.put(key(cv), ch, m)
     }
     (h0, m)
-  }
-
-  private def parseFullRecord(raw: String, v: Long): Manifest = {
-    // Minimal JSON of our own writing:
-    // {"version":n,"mode":"...","files":["g1",...],"n_rows":n,"committed_at":"...",
-    //  "txn_app":"...","txn_batch":n}  (txn fields only on appendOnce commits)
-    // files: the same linear fail-closed array scan as the other
-    // arrays (the old regex parse failed OPEN — an unterminated array
-    // read as "no files", an empty table).
-    val files = quotedArray(raw, "files").getOrElse(Seq.empty)
-    val nRows = "\"n_rows\":(\\d+)".r.findFirstMatchIn(raw).map(_.group(1).toLong).getOrElse(0L)
-    val mode = "\"mode\":\"([^\"]*)\"".r.findFirstMatchIn(raw).map(_.group(1)).getOrElse("")
-    val at = "\"committed_at\":\"([^\"]*)\"".r.findFirstMatchIn(raw).map(_.group(1)).getOrElse("")
-    val txn = for {
-      app <- "\"txn_app\":\"([^\"]*)\"".r.findFirstMatchIn(raw).map(_.group(1))
-      b <- "\"txn_batch\":(-?\\d+)".r.findFirstMatchIn(raw).map(_.group(1).toLong)
-    } yield (app, b)
-    // schema is a JSON-escaped DDL string; scanned linearly (see
-    // [[quotedArray]]'s rationale — a regex alternation per char
-    // overflows the stack on a wide table's 100KB DDL).
-    val schemaDdl = scanQuoted(raw, "\"schema\":\"").map(jsonUnescape)
-    // constraints: a flat JSON array of escaped strings alternating
-    // [name, expr, name, expr, ...].
-    val constraints = quotedArray(raw, "constraints")
-      .map(_.grouped(2).collect { case Seq(n, e) => (n, e) }.toSeq)
-      .getOrElse(Seq.empty)
-    // column mapping: flat [logical, physical, ...] pairs, same shape
-    // as constraints; "" logical marks a dropped column's tombstone.
-    val mapping = quotedArray(raw, "mapping")
-      .map(_.grouped(2).collect { case Seq(l, p) => (l, p) }.toSeq)
-      .getOrElse(Seq.empty)
-    // deletion vectors: flat [group, artifact, count, ...] triples
-    // (count serialized as a quoted string so the array body stays a
-    // run of quoted strings like constraints/mapping).
-    val dvs = quotedArray(raw, "dvs")
-      .map(_.grouped(3).collect { case Seq(g, a, c) => (g, a, c.toLong) }.toSeq)
-      .getOrElse(Seq.empty)
-    // per-group row counts: quoted numbers aligned 1:1 with `files`
-    // (absent in pre-upgrade manifests; a LENGTH MISMATCH is corruption
-    // and fails closed like every other malformed field)
-    val fileRows = quotedArray(raw, "file_rows") match {
-      case None => Map.empty[String, Long]
-      case Some(rows) =>
-        if (rows.size != files.size)
-          throw new IllegalStateException(
-            s"manifest v$v: file_rows has ${rows.size} entries for " +
-              s"${files.size} files — corrupt manifest")
-        files.zip(rows.map(_.toLong)).toMap
-    }
-    // `copies` marks which ADDED group(s) hold a DV mutation's updated
-    // row copies (vs inserts) — the change feed's postimage attribution
-    // for mixed merges. Per-version annotation, never carried forward.
-    val copies = quotedArray(raw, "copies").getOrElse(Seq.empty)
-    // per-group stats JSON: flat [group, statsJson, ...] pairs —
-    // coverage may be PARTIAL (see the Manifest field doc)
-    val fileStats = quotedArray(raw, "file_stats")
-      .map(_.grouped(2).collect { case Seq(g, s) => (g, s) }.toMap)
-      .getOrElse(Map.empty[String, String])
-    Manifest(files, nRows, mode, at, txn, schemaDdl, constraints, mapping, dvs,
-      fileRows, copies, fileStats)
-  }
-
-  /** Reconstruct a delta record's full state over its resolved parent.
-    * Cumulative fields fold (files/dvs/fileRows/fileStats; schema,
-    * constraints and mapping inherit unless the record carries the key
-    * — an EMPTY array is "changed to empty", an absent key "unchanged");
-    * per-version fields (mode, n_rows, committed_at, txn, copies) come
-    * from the record itself. */
-  private def foldDelta(parent: Manifest, raw: String, v: Long): Manifest = {
-    val removed = quotedArray(raw, "remove_files").getOrElse(Seq.empty).toSet
-    val added = quotedArray(raw, "add_files").getOrElse(Seq.empty)
-    val files = parent.files.filterNot(removed) ++ added
-    val nRows = "\"n_rows\":(\\d+)".r.findFirstMatchIn(raw).map(_.group(1).toLong).getOrElse(0L)
-    val mode = "\"mode\":\"([^\"]*)\"".r.findFirstMatchIn(raw).map(_.group(1)).getOrElse("")
-    val at = "\"committed_at\":\"([^\"]*)\"".r.findFirstMatchIn(raw).map(_.group(1)).getOrElse("")
-    val txn = for {
-      app <- "\"txn_app\":\"([^\"]*)\"".r.findFirstMatchIn(raw).map(_.group(1))
-      b <- "\"txn_batch\":(-?\\d+)".r.findFirstMatchIn(raw).map(_.group(1).toLong)
-    } yield (app, b)
-    val schemaDdl = scanQuoted(raw, "\"schema\":\"").map(jsonUnescape)
-      .orElse(parent.schemaDdl)
-    val constraints = quotedArray(raw, "constraints")
-      .map(_.grouped(2).collect { case Seq(n, e) => (n, e) }.toSeq)
-      .getOrElse(parent.constraints)
-    val mapping = quotedArray(raw, "mapping")
-      .map(_.grouped(2).collect { case Seq(l, p) => (l, p) }.toSeq)
-      .getOrElse(parent.mapping)
-    val dvDrop = quotedArray(raw, "dv_drop").getOrElse(Seq.empty).toSet
-    val dvSet = quotedArray(raw, "dv_set")
-      .map(_.grouped(3).collect { case Seq(g, a, c) => (g, a, c.toLong) }.toSeq)
-      .getOrElse(Seq.empty)
-    val dvSetG = dvSet.map(_._1).toSet
-    val dvs = parent.dvs.filterNot(d =>
-      dvDrop(d._1) || dvSetG(d._1) || removed(d._1)) ++ dvSet
-    // row counts: complete iff the parent covers every carried group
-    // and the record aligns a count with every added group — otherwise
-    // empty (the pre-upgrade reading), same contract as full records.
-    // The WRITER prefers a full record whenever a delta would degrade
-    // coverage, so the empty case only survives on pre-upgrade chains.
-    val addRows = quotedArray(raw, "add_file_rows").map(_.map(_.toLong))
-      .getOrElse(Seq.empty)
-    val addedSet = added.toSet
-    val carriedRows = parent.fileRows.filter { case (g, _) => !removed(g) }
-    val fileRows =
-      if (addRows.size == added.size &&
-          files.forall(g => carriedRows.contains(g) || addedSet(g)))
-        carriedRows ++ added.zip(addRows)
-      else Map.empty[String, Long]
-    val addStats = quotedArray(raw, "add_file_stats")
-      .map(_.grouped(2).collect { case Seq(g, s) => (g, s) }.toMap)
-      .getOrElse(Map.empty[String, String])
-    val fileStats =
-      parent.fileStats.filter { case (g, _) => !removed(g) } ++ addStats
-    val copies = quotedArray(raw, "copies").getOrElse(Seq.empty)
-    val _ = v
-    Manifest(files, nRows, mode, at, txn, schemaDdl, constraints, mapping, dvs,
-      fileRows, copies, fileStats)
-  }
-
-  /** The JSON-escaped string starting right after `marker`, scanned
-    * LINEARLY with escape awareness (returned still escaped). */
-  private def scanQuoted(raw: String, marker: String): Option[String] = {
-    val start = raw.indexOf(marker)
-    if (start < 0) return None
-    var i = start + marker.length
-    val sb = new StringBuilder
-    var escaped = false
-    while (i < raw.length) {
-      val c = raw.charAt(i)
-      if (escaped) { sb.append(c); escaped = false }
-      else if (c == '\\') { sb.append(c); escaped = true }
-      else if (c == '"') return Some(sb.toString)
-      else sb.append(c)
-      i += 1
-    }
-    // marker present but the string never closes: the manifest is
-    // corrupt (the complete-object guard in parseManifest already
-    // excludes torn reads) — fail closed, never "field absent".
-    throw new IllegalStateException(
-      s"unterminated JSON string after $marker — corrupt manifest")
-  }
-
-  /** The flat array of quoted strings stored under `key`, each entry
-    * unescaped — a LINEAR scan. The natural regex for "a run of quoted
-    * strings" costs one interpreter stack frame per element in Java's
-    * engine and overflows on manifests with thousands of entries (a
-    * 10k-group scatter delete's dvs array, a many-column mapping), so
-    * array bodies must never be regex-matched. */
-  private def quotedArray(raw: String, key: String): Option[Seq[String]] = {
-    val marker = "\"" + key + "\":["
-    val start = raw.indexOf(marker)
-    if (start < 0) return None
-    var i = start + marker.length
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    val sb = new StringBuilder
-    var inStr = false
-    var escaped = false
-    while (i < raw.length) {
-      val c = raw.charAt(i)
-      if (inStr) {
-        if (escaped) { sb.append(c); escaped = false }
-        else if (c == '\\') { sb.append(c); escaped = true }
-        else if (c == '"') { out += jsonUnescape(sb.toString); sb.clear(); inStr = false }
-        else sb.append(c)
-      } else c match {
-        case '"' => inStr = true
-        case ']' => return Some(out.toSeq)
-        case _ => () // comma / whitespace
-      }
-      i += 1
-    }
-    // Unterminated array = corrupt manifest. A best-effort PREFIX here
-    // would fail OPEN: dvs is the last key, so a truncated manifest
-    // would silently drop deletion-vector entries and resurrect
-    // deleted rows for whoever read it.
-    throw new IllegalStateException(
-      s"unterminated JSON array '$key' — corrupt manifest")
-  }
-
-  private def readManifest(
-      spark: SparkSession, tableDir: String, v: Long): (Seq[String], Long, String) = {
-    val m = parseManifest(spark, tableDir, v)
-    (m.files, m.nRows, m.mode)
-  }
-
-  /** Publish `groups` as the next version. Create-exclusive decides the
-    * version number under concurrency; the data files are already
-    * durable before the manifest appears, so a reader can never observe
-    * a version whose data is incomplete. */
-  private def manifestJson(
-      v: Long, mode: String, groups: Seq[String], nRows: Long,
-      txn: Option[(String, Long)], schemaDdl: Option[String],
-      constraints: Seq[(String, String)] = Seq.empty,
-      mapping: Seq[(String, String)] = Seq.empty,
-      dvs: Seq[(String, String, Long)] = Seq.empty,
-      fileRows: Option[Seq[Long]] = None,
-      copies: Seq[String] = Seq.empty,
-      fileStats: Map[String, String] = Map.empty,
-      committedAt: Option[String] = None): String = {
-    require(fileRows.forall(_.size == groups.size),
-      s"file_rows (${fileRows.map(_.size)}) must align with files (${groups.size})")
-    val rowsJson = fileRows.map(rs =>
-      rs.map("\"" + _ + "\"").mkString(""","file_rows":[""", ",", "]"))
-      .getOrElse("")
-    val statsJson = statsPairsJson("file_stats", fileStats)
-    val copiesJson =
-      if (copies.isEmpty) ""
-      else copies.map(s => "\"" + jsonEscape(s) + "\"")
-        .mkString(""","copies":[""", ",", "]")
-    val txnJson = txn.map { case (app, b) =>
-      s""","txn_app":"$app","txn_batch":$b"""
-    }.getOrElse("")
-    val schemaJson = schemaDdl.map(d => s""","schema":"${jsonEscape(d)}"""").getOrElse("")
-    val consJson =
-      if (constraints.isEmpty) ""
-      else constraints.flatMap { case (n, e) => Seq(n, e) }
-        .map(s => "\"" + jsonEscape(s) + "\"").mkString(""","constraints":[""", ",", "]")
-    val mapJson =
-      if (mapping.isEmpty) ""
-      else mapping.flatMap { case (l, p) => Seq(l, p) }
-        .map(s => "\"" + jsonEscape(s) + "\"").mkString(""","mapping":[""", ",", "]")
-    val dvJson =
-      if (dvs.isEmpty) ""
-      else dvs.flatMap { case (g, a, c) => Seq(g, a, c.toString) }
-        .map(s => "\"" + jsonEscape(s) + "\"").mkString(""","dvs":[""", ",", "]")
-    val at = committedAt.getOrElse(java.time.Instant.now().toString)
-    s"""{"version":$v,"mode":"$mode","files":[${groups.map("\"" + _ + "\"").mkString(",")}],""" +
-      s""""n_rows":$nRows,"committed_at":"$at"$rowsJson$statsJson$copiesJson$txnJson$schemaJson$consJson$mapJson$dvJson}"""
-  }
-
-  /** A resolved [[Manifest]] re-serialized as a standalone FULL record
-    * — what [[vacuum]] writes as the retention boundary's checkpoint
-    * sidecar. Preserves the original `committed_at` (time travel and
-    * history audit read it verbatim). */
-  private def fullRecordOf(m: Manifest, v: Long): String =
-    manifestJson(v, m.mode, m.files, m.nRows, m.txn, m.schemaDdl,
-      m.constraints, m.mapping, m.dvs,
-      if (m.files.forall(m.fileRows.contains))
-        Some(m.files.map(m.fileRows)) else None,
-      m.copies, m.fileStats, Some(m.committedAt))
-
-  /** Flat [group, statsJson, ...] pairs under `key` (sorted for
-    * deterministic bytes), or "" when empty. */
-  private def statsPairsJson(key: String, stats: Map[String, String]): String =
-    if (stats.isEmpty) ""
-    else stats.toSeq.sortBy(_._1).flatMap { case (g, s) => Seq(g, s) }
-      .map(s => "\"" + jsonEscape(s) + "\"")
-      .mkString(s""","$key":[""", ",", "]")
-
-  /** A DELTA record: O(churn) bytes — the file/DV changes against the
-    * parent plus the per-version fields, chained to the parent's exact
-    * bytes via `parent_hash`. `schemaDdl`/`constraints`/`mapping` are
-    * emitted ONLY when passed Some (= changed vs the parent); an
-    * absent key folds as "inherit". The leading `"delta":1` key is the
-    * record-shape marker ([[resolveWithHash]] dispatches on it
-    * position-pinned, immune to user content echoing the word). */
-  private def deltaJson(
-      v: Long, mode: String, parentV: Long, parentHash: Long,
-      nRows: Long, addFiles: Seq[String], removeFiles: Seq[String],
-      addRows: Option[Seq[Long]], addStats: Map[String, String],
-      dvSet: Seq[(String, String, Long)], dvDrop: Seq[String],
-      txn: Option[(String, Long)], schemaDdl: Option[String],
-      constraints: Option[Seq[(String, String)]],
-      mapping: Option[Seq[(String, String)]],
-      copies: Seq[String]): String = {
-    require(addRows.forall(_.size == addFiles.size),
-      s"add_file_rows (${addRows.map(_.size)}) must align with " +
-        s"add_files (${addFiles.size})")
-    def strArr(key: String, xs: Seq[String]): String =
-      if (xs.isEmpty) ""
-      else xs.map(s => "\"" + jsonEscape(s) + "\"")
-        .mkString(s""","$key":[""", ",", "]")
-    val addJson = strArr("add_files", addFiles)
-    val remJson = strArr("remove_files", removeFiles)
-    val rowsJson = addRows.map(rs =>
-      rs.map("\"" + _ + "\"").mkString(""","add_file_rows":[""", ",", "]"))
-      .getOrElse("")
-    val statsJson = statsPairsJson("add_file_stats", addStats)
-    val dvSetJson =
-      if (dvSet.isEmpty) ""
-      else dvSet.flatMap { case (g, a, c) => Seq(g, a, c.toString) }
-        .map(s => "\"" + jsonEscape(s) + "\"")
-        .mkString(""","dv_set":[""", ",", "]")
-    val dvDropJson = strArr("dv_drop", dvDrop)
-    val copiesJson = strArr("copies", copies)
-    val txnJson = txn.map { case (app, b) =>
-      s""","txn_app":"$app","txn_batch":$b"""
-    }.getOrElse("")
-    val schemaJson = schemaDdl.map(d =>
-      s""","schema":"${jsonEscape(d)}"""").getOrElse("")
-    // changed-to-empty serializes as [] (quotedArray reads Some(empty)
-    // — an override), unchanged omits the key (fold inherits)
-    val consJson = constraints.map(cs =>
-      cs.flatMap { case (n, e) => Seq(n, e) }
-        .map(s => "\"" + jsonEscape(s) + "\"")
-        .mkString(""","constraints":[""", ",", "]")).getOrElse("")
-    val mapJson = mapping.map(ms =>
-      ms.flatMap { case (l, p) => Seq(l, p) }
-        .map(s => "\"" + jsonEscape(s) + "\"")
-        .mkString(""","mapping":[""", ",", "]")).getOrElse("")
-    s"""{"delta":1,"version":$v,"parent":$parentV,"parent_hash":"$parentHash",""" +
-      s""""mode":"$mode","n_rows":$nRows,""" +
-      s""""committed_at":"${java.time.Instant.now()}"""" +
-      addJson + remJson + rowsJson + statsJson + dvSetJson + dvDropJson +
-      copiesJson + txnJson + schemaJson + consJson + mapJson + "}"
   }
 
   /** Row counts for `groups` from their stats sidecars, read as ONE
@@ -728,16 +423,18 @@ object Versioned {
       knownRows.get(g).orElse(sidecarSt.get(g).map(_.nRows)))
     val fileRows =
       if (perRows.forall(_.isDefined)) Some(perRows.map(_.get)) else None
-    def statsOf(gs: Seq[String]): Map[String, String] =
-      gs.flatMap(g => knownStats.get(g)
-        .orElse(sidecarSt.get(g).map(GroupStats.toJson)).map(g -> _)).toMap
+    val next = Manifest(groups, nRows, mode, java.time.Instant.now().toString,
+      txn, schemaDdl, cons, mapping, dvs,
+      fileRows.map(groups.zip(_).toMap).getOrElse(Map.empty), copies,
+      groups.flatMap(g => knownStats.get(g)
+        .orElse(sidecarSt.get(g).map(GroupStats.toJson)).map(g -> _)).toMap)
     val json = parentOpt match {
       case Some((phash, parent)) if !checkpointSlot &&
           // the delta fold must reproduce the exact file sequence
           (parent.files.filter(groups.toSet) ++ added) == groups &&
           // row-count coverage must not degrade through the fold: a
           // CARRIED group's count must come from the parent RECORD —
-          // that is all foldDelta can see (a rowsByGroup entry for a
+          // that is all the fold can see (a rowsByGroup entry for a
           // carried group would satisfy the writer but fold to empty)
           (fileRows.isDefined && groups.filterNot(added.toSet)
             .forall(parent.fileRows.contains)
@@ -745,24 +442,8 @@ object Versioned {
           // a recorded schema cannot CLEAR through a delta (absent =
           // inherit) — never happens in practice, full record if so
           !(schemaDdl.isEmpty && parent.schemaDdl.nonEmpty) =>
-        val removed = parent.files.filterNot(groups.toSet)
-        val pdv = parent.dvs.map(d => d._1 -> d).toMap
-        val dvSet = dvs.filterNot(d => pdv.get(d._1).contains(d))
-        val ndv = dvs.map(_._1).toSet
-        val removedSet = removed.toSet
-        val dvDrop = parent.dvs.map(_._1)
-          .filter(g => !ndv(g) && !removedSet(g))
-        val addRows = fileRows.map(_ => added.map(g =>
-          rowsByGroup.get(g).orElse(sidecarSt.get(g).map(_.nRows)).get))
-        deltaJson(v, mode, v - 1, phash, nRows, added, removed,
-          addRows, statsOf(added), dvSet, dvDrop, txn,
-          if (schemaDdl == parent.schemaDdl) None else schemaDdl,
-          if (cons == parent.constraints) None else Some(cons),
-          if (mapping == parent.mapping) None else Some(mapping),
-          copies)
-      case _ =>
-        manifestJson(v, mode, groups, nRows, txn, schemaDdl, cons,
-          mapping, dvs, fileRows, copies, statsOf(groups))
+        ManifestCodec.encodeDelta(v, phash, parent, next)
+      case _ => ManifestCodec.encodeFull(v, next)
     }
     val ok = graft.sources.FsAtomic.createExclusive(
       f, manifestPath(tableDir, v), json)
@@ -782,7 +463,8 @@ object Versioned {
       val tmp = new Path(
         s"$tableDir/_versions/._last_checkpoint.${java.util.UUID.randomUUID()}.tmp")
       val out = f.create(tmp, true)
-      try out.write(s"""{"version":$v}""".getBytes("UTF-8")) finally out.close()
+      try out.write(ManifestCodec.encodeLastCheckpoint(v).getBytes("UTF-8"))
+      finally out.close()
       val dst = new Path(s"$tableDir/_versions/_last_checkpoint")
       if (f.exists(dst)) f.delete(dst, false)
       if (!f.rename(tmp, dst)) scala.util.Try(f.delete(tmp, false))
@@ -795,13 +477,10 @@ object Versioned {
       val p = new Path(s"$tableDir/_versions/_last_checkpoint")
       val f = fs(spark, tableDir)
       if (!f.exists(p)) None
-      else {
-        val in = f.open(p)
-        val raw = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-        "\"version\":(\\d+)".r.findFirstMatchIn(raw).map(_.group(1).toLong)
-      }
-    } catch { case _: java.io.IOException => None }
+      else ManifestCodec.decodeLastCheckpoint(readText(f, p))
+    } catch {
+      case _: java.io.IOException | _: IllegalStateException => None
+    }
 
   private def publish(
       spark: SparkSession, tableDir: String, groups: Seq[String],
@@ -1476,8 +1155,7 @@ object Versioned {
     * monotone per appId — exactly what the streaming engine provides. */
   def appendOnce(
       df: DataFrame, tableDir: String, appId: String, batchId: Long): Option[Long] = {
-    require(appId.nonEmpty && !appId.exists(c => c == '"' || c == '\\'),
-      s"appId must be non-empty and quote-free: '$appId'")
+    require(appId.nonEmpty, "appId must be non-empty")
     val spark = df.sparkSession
     if (lastCommittedBatch(spark, tableDir, appId) >= batchId) return None
     val latest0 = latestVersion(spark, tableDir)
@@ -1588,6 +1266,12 @@ object Versioned {
     snapshotExpecting(action(read(spark, tableDir, v)), tableDir, v)
   }
 
+  /** Test seam: runs once per rebase publish attempt, after the winner
+    * set is read and before the conditional publish. CompactRebaseSpec
+    * injects appends here to force deterministic race losses; production
+    * leaves it a no-op. */
+  private[graft] var rebaseAttemptHook: () => Unit = () => ()
+
   /** REBASE publication for MAINTENANCE rewrites ([[compact]],
     * [[cluster]]) — Delta's OPTIMIZE conflict resolution: a compaction
     * of version P losing the publish race to PURE APPENDS must not
@@ -1607,12 +1291,6 @@ object Versioned {
     * manifest adopts the latest schema and the compacted groups
     * null-fill the new columns, the same contract any old group has.
     * Returns the published version. */
-  /** Test seam: runs once per rebase publish attempt, after the winner
-    * set is read and before the conditional publish. CompactRebaseSpec
-    * injects appends here to force deterministic race losses; production
-    * leaves it a no-op. */
-  private[graft] var rebaseAttemptHook: () => Unit = () => ()
-
   private[graft] def rebasePublish(
       spark: SparkSession, tableDir: String, expectedParent: Long,
       newGroups: Seq[(String, Long)],
@@ -2683,7 +2361,7 @@ object Versioned {
     require(targetFileBytes > 0, s"targetFileBytes must be positive: $targetFileBytes")
     val v = latestVersion(spark, tableDir)
     require(v >= 0, s"no versions committed under $tableDir")
-    val groups = readManifest(spark, tableDir, v)._1
+    val groups = parseManifest(spark, tableDir, v).files
     val f = fs(spark, tableDir)
     val bytes = groups.map { g =>
       f.getContentSummary(new Path(s"$tableDir/files/$g")).getLength
@@ -2786,6 +2464,13 @@ object Versioned {
     }
   }
 
+  /** Version modes whose manifests can only ADD file groups (append)
+    * or leave them untouched (metadata-only DDL) — the modes a
+    * file-group-differencing CDC window may safely cross. */
+  private val appendSafeModes: Set[String] = Set(
+    "append", "add_constraint", "drop_constraint",
+    "rename_column", "drop_column")
+
   /** CDC-style incremental read: the rows ADDED after `fromVersion`, up
     * to `toVersion` (inclusive; default latest), served by reading ONLY
     * the file groups that joined the manifest in that range — the
@@ -2798,13 +2483,6 @@ object Versioned {
     * an APPEND: a snapshot rewrites the file set, so "what changed"
     * stops being a file-group difference — crossing one raises (use
     * [[diffVersions]] for a row-level diff instead). */
-  /** Version modes whose manifests can only ADD file groups (append)
-    * or leave them untouched (metadata-only DDL) — the modes a
-    * file-group-differencing CDC window may safely cross. */
-  private val appendSafeModes: Set[String] = Set(
-    "append", "add_constraint", "drop_constraint",
-    "rename_column", "drop_column")
-
   def changes(
       spark: SparkSession,
       tableDir: String,
@@ -2825,7 +2503,7 @@ object Versioned {
           s"(mode=${m.mode}); file-group differencing is only valid over " +
           "append/metadata chains — use diffVersions for a row-level diff")
     }
-    val fromGroups = readManifest(spark, tableDir, fromVersion)._1.toSet
+    val fromGroups = parseManifest(spark, tableDir, fromVersion).files.toSet
     val toManifest = parseManifest(spark, tableDir, to)
     val added = toManifest.files.filterNot(fromGroups)
     if (added.isEmpty) read(spark, tableDir, to).limit(0)
@@ -3275,8 +2953,8 @@ object Versioned {
   def versions(spark: SparkSession, tableDir: String): DataFrame = {
     import spark.implicits._
     (0L to latestVersion(spark, tableDir)).flatMap { v =>
-      scala.util.Try(readManifest(spark, tableDir, v)).toOption
-        .map { case (_, n, mode) => (v, mode, n) }
+      scala.util.Try(parseManifest(spark, tableDir, v)).toOption
+        .map(m => (v, m.mode, m.nRows))
     }.toDF("version", "mode", "n_rows")
   }
 
@@ -3352,10 +3030,14 @@ object Versioned {
     // so a racing reader always finds either the chain or the sidecar.
     if (dropVersions.nonEmpty && keepFrom > 0) {
       val raw = recordRaw(f, manifestPath(tableDir, keepFrom))
-      if (raw.trim.startsWith("{\"delta\":")) {
+      if (ManifestCodec.isDelta(
+          ManifestCodec.parse(raw, s"manifest v$keepFrom of $tableDir"))) {
+        // the resolved state as a standalone full record, keeping its
+        // committed_at (time travel and history read it verbatim)
         val m = parseManifest(spark, tableDir, keepFrom)
         val created = graft.sources.FsAtomic.createExclusive(
-          f, checkpointPath(tableDir, keepFrom), fullRecordOf(m, keepFrom))
+          f, checkpointPath(tableDir, keepFrom),
+          ManifestCodec.encodeFull(keepFrom, m))
         // The sidecar is what keeps the surviving table readable: a
         // swallowed write failure followed by the manifest deletes
         // below would leave EVERY version >= keepFrom unresolvable.
@@ -3418,7 +3100,7 @@ object Versioned {
     require(latest >= 0, s"no versions committed under $tableDir")
     if (cursor >= latest) return (read(spark, tableDir, latest).limit(0), latest, false)
     val windowIsAppend = cursor >= 0 &&
-      scala.util.Try(readManifest(spark, tableDir, cursor)).isSuccess &&
+      scala.util.Try(parseManifest(spark, tableDir, cursor)).isSuccess &&
       ((cursor + 1) to latest).forall { v =>
         scala.util.Try(parseManifest(spark, tableDir, v)).toOption
           .exists(m => appendSafeModes(m.mode))

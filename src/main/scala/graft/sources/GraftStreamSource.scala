@@ -104,13 +104,6 @@ final class GraftStreamSource(
       json: String): org.apache.spark.sql.connector.read.streaming.Offset =
     LongOffset(json.trim.toLong)
 
-  /** The resolved start is PERSISTED under the stream's metadata path
-    * on first resolution (create-exclusive; a racing restart re-reads
-    * the winner's value): `startingVersion=latest` means "versions
-    * committed after the QUERY first started", and without persistence
-    * a restart would re-resolve 'latest' and silently skip everything
-    * committed between the runs — the same reason Delta's source
-    * writes its initial offset into the checkpoint. */
   /** Whether THIS instance created the stream's metadata marker — i.e.
     * the stream is FRESH, with provably no prior checkpoint. A fresh
     * stream may cap its very first offer (there is no engine offset it
@@ -119,6 +112,13 @@ final class GraftStreamSource(
     * lost creation race) conservatively reads as restart. */
   private var createdMarker: Boolean = false
 
+  /** The resolved start is PERSISTED under the stream's metadata path
+    * on first resolution (create-exclusive; a racing restart re-reads
+    * the winner's value): `startingVersion=latest` means "versions
+    * committed after the QUERY first started", and without persistence
+    * a restart would re-resolve 'latest' and silently skip everything
+    * committed between the runs — the same reason Delta's source
+    * writes its initial offset into the checkpoint. */
   private val startingVersion: Long = {
     def requested(): Long = options.get("startingVersion") match {
       case None => 0L

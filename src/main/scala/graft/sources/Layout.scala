@@ -82,12 +82,6 @@ object Layout {
     ranked.withColumn(outCol, z).drop(rankCols: _*)
   }
 
-  /** Write `df` to `path` as parquet, z-order-clustered on `dims`
-    * (numeric columns). `numFiles` bounds the file count — at cluster
-    * scale set it so files land near the row-group/HDFS-block sweet spot
-    * (~128 MB–1 GB). `bitsPerDim` trades curve resolution against the
-    * quantile pass (2^bits boundaries per dimension); 8 bits = 256
-    * equi-depth buckets per dimension is plenty below ~10⁵ files. */
   /** Equi-depth bucket boundaries for every layout dimension in ONE
     * quantile pass (one job, not one per dim — at 100 TB each quantile
     * pass is a full scan). Boundary precision only needs to resolve
@@ -105,6 +99,12 @@ object Layout {
     df.stat.approxQuantile(dims.toArray, probs, err).toSeq
   }
 
+  /** Write `df` to `path` as parquet, z-order-clustered on `dims`
+    * (numeric columns). `numFiles` bounds the file count — at cluster
+    * scale set it so files land near the row-group/HDFS-block sweet spot
+    * (~128 MB–1 GB). `bitsPerDim` trades curve resolution against the
+    * quantile pass (2^bits boundaries per dimension); 8 bits = 256
+    * equi-depth buckets per dimension is plenty below ~10⁵ files. */
   def zorderWrite(
       df: DataFrame,
       dims: Seq[String],

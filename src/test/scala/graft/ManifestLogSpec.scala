@@ -194,6 +194,119 @@ class ManifestLogSpec extends SparkSpec {
     assert(Versioned.parseManifest(spark, dir, 2L).nRows == 30L)
   }
 
+  test("every record is standard JSON, whatever text a constraint carries") {
+    val dir = tbl()
+    val expr = "id >= 0\n\tAND note <> 'a\"b\\\\c é'"
+    spark.conf.set("spark.graft.manifest.checkpointInterval", "3")
+    try {
+      def rows(lo: Long, hi: Long) = (lo until hi).map(i => (i, s"n$i")).toDF("id", "note")
+      // every record file present now parses with the STRICT parser,
+      // which raises on a raw control character inside a string
+      def strictRecords(): Set[String] =
+        new java.io.File(s"$dir/_versions").listFiles().map(_.getName)
+          .filter(_.matches("[vc]\\d+\\.json|_last_checkpoint")).map { n =>
+            org.json4s.jackson.JsonMethods.parse(new String(
+              Files.readAllBytes(Paths.get(s"$dir/_versions/$n")), "UTF-8"))
+            n
+          }.toSet
+      Versioned.commit(rows(0L, 10L), dir)                        // v0: full
+      Versioned.addConstraint(spark, dir, "odd", expr)            // v1: delta
+      (2 to 5).foreach(i => Versioned.append(rows(i * 10L, i * 10L + 10L), dir)) // v3 full
+      assert(isDelta(dir, 1L) && !isDelta(dir, 3L) && isDelta(dir, 5L))
+      val before = strictRecords()
+      Versioned.vacuum(spark, dir, keepFrom = 5L)                 // writes c5.json
+      Versioned.addConstraint(spark, dir, "small", "id < 1000")   // v6: delta
+      val checked = before ++ strictRecords()
+      assert(Set("v1.json", "v3.json", "c5.json", "v6.json", "_last_checkpoint")
+        .subsetOf(checked), checked)
+      Versioned.clearResolvedManifestCache()
+      assert(Versioned.constraints(spark, dir) == Seq("odd" -> expr, "small" -> "id < 1000"))
+      assert(Versioned.parseManifest(spark, dir, 5L).constraints == Seq("odd" -> expr))
+      // the latest record as the codec's predecessor wrote it: control
+      // characters raw inside strings — still resolves to the same state
+      val m6 = Versioned.parseManifest(spark, dir, 6L)
+      val legacy = raw(dir, 6L).replace("\\n", "\n").replace("\\t", "\t")
+      assert(legacy.contains("\n\tAND") && legacy != raw(dir, 6L))
+      intercept[Exception](org.json4s.jackson.JsonMethods.parse(legacy))
+      Files.write(Paths.get(s"$dir/_versions/v6.json"), legacy.getBytes("UTF-8"))
+      Versioned.clearResolvedManifestCache()
+      assert(Versioned.parseManifest(spark, dir, 6L) == m6)
+      assert(Versioned.read(spark, dir).count() == 50L)
+    } finally spark.conf.unset("spark.graft.manifest.checkpointInterval")
+  }
+
+  test("the record format is unchanged: earlier records decode and re-encode byte for byte") {
+    import graft.operators.ManifestCodec
+    import graft.operators.Versioned.Manifest
+    // v4 (full) and v5 (delta) of one table, as written before the
+    // codec existed: commit, rename note -> memo, add a constraint, DV
+    // delete, appendOnce at checkpoint slot 4, then a DV update
+    val fullRecord =
+      """{"version":4,"mode":"append","files":["8902cf1d-941b-41e5-8421-a90f09f37c54",""" +
+        """"1b292476-e003-45d3-b927-abf2cbdb1f50"],"n_rows":9,""" +
+        """"committed_at":"2026-10-18T19:23:55.629022971Z","file_rows":["8","2"],""" +
+        """"file_stats":["1b292476-e003-45d3-b927-abf2cbdb1f50","{\"n_rows\":2,\"cols\":""" +
+        """{\"id\":{\"t\":\"long\",\"min\":8,\"max\":9,\"nulls\":0},\"note\":{\"t\":""" +
+        """\"string\",\"min\":\"n8\",\"max\":\"n9\",\"nulls\":0}}}",""" +
+        """"8902cf1d-941b-41e5-8421-a90f09f37c54","{\"n_rows\":8,\"cols\":{\"id\":""" +
+        """{\"t\":\"long\",\"min\":0,\"max\":7,\"nulls\":0},\"note\":{\"t\":\"string\",""" +
+        """\"min\":\"n0\",\"max\":\"n7\",\"nulls\":0}}}"],"txn_app":"ingest","txn_batch":7,""" +
+        """"schema":"id BIGINT,memo STRING","constraints":["pos","id >= 0"],""" +
+        """"mapping":["id","id","memo","note"],"dvs":["8902cf1d-941b-41e5-8421-a90f09f37c54",""" +
+        """"dv-d871310b-f77a-4b47-93ad-22236e17ef12","1"]}"""
+    val deltaRecord =
+      """{"delta":1,"version":5,"parent":4,"parent_hash":"2904849240880233539",""" +
+        """"mode":"update","n_rows":9,"committed_at":"2026-10-18T19:23:58.553426474Z",""" +
+        """"add_files":["563fcbfd-f3b4-49d3-9bf3-69886f74a19a"],"add_file_rows":["1"],""" +
+        """"add_file_stats":["563fcbfd-f3b4-49d3-9bf3-69886f74a19a","{\"n_rows\":1,""" +
+        """\"cols\":{\"id\":{\"t\":\"long\",\"min\":2,\"max\":2,\"nulls\":0},\"note\":""" +
+        """{\"t\":\"string\",\"min\":\"two\",\"max\":\"two\",\"nulls\":0}}}"],""" +
+        """"dv_set":["8902cf1d-941b-41e5-8421-a90f09f37c54",""" +
+        """"dv-49d8ca0c-edd8-43df-8978-161f7d845eb2","2"],""" +
+        """"copies":["563fcbfd-f3b4-49d3-9bf3-69886f74a19a"]}"""
+    val (g0, g1, g2) = ("8902cf1d-941b-41e5-8421-a90f09f37c54",
+      "1b292476-e003-45d3-b927-abf2cbdb1f50", "563fcbfd-f3b4-49d3-9bf3-69886f74a19a")
+    def stats(n: Int, lo: Int, hi: Int, slo: String, shi: String) =
+      s"""{"n_rows":$n,"cols":{"id":{"t":"long","min":$lo,"max":$hi,"nulls":0},""" +
+        s""""note":{"t":"string","min":"$slo","max":"$shi","nulls":0}}}"""
+    val m4 = Manifest(Seq(g0, g1), 9L, "append", "2026-10-18T19:23:55.629022971Z",
+      txn = Some(("ingest", 7L)), schemaDdl = Some("id BIGINT,memo STRING"),
+      constraints = Seq("pos" -> "id >= 0"), mapping = Seq("id" -> "id", "memo" -> "note"),
+      dvs = Seq((g0, "dv-d871310b-f77a-4b47-93ad-22236e17ef12", 1L)),
+      fileRows = Map(g0 -> 8L, g1 -> 2L),
+      fileStats = Map(g0 -> stats(8, 0, 7, "n0", "n7"), g1 -> stats(2, 8, 9, "n8", "n9")))
+    val m5 = m4.copy(files = Seq(g0, g1, g2), mode = "update",
+      committedAt = "2026-10-18T19:23:58.553426474Z", txn = None,
+      dvs = Seq((g0, "dv-49d8ca0c-edd8-43df-8978-161f7d845eb2", 2L)),
+      fileRows = m4.fileRows + (g2 -> 1L), copies = Seq(g2),
+      fileStats = m4.fileStats + (g2 -> stats(1, 2, 2, "two", "two")))
+    val fullJ = ManifestCodec.parse(fullRecord, "v4")
+    val deltaJ = ManifestCodec.parse(deltaRecord, "v5")
+    assert(!ManifestCodec.isDelta(fullJ) && ManifestCodec.isDelta(deltaJ))
+    assert(ManifestCodec.decodeFull(fullJ, "v4") == m4)
+    assert(ManifestCodec.parentRef(deltaJ, "v5") == ((4L, 2904849240880233539L)))
+    assert(ManifestCodec.foldDelta(m4, deltaJ) == m5)
+    assert(ManifestCodec.encodeFull(4L, m4) == fullRecord)
+    assert(ManifestCodec.encodeDelta(5L, 2904849240880233539L, m4, m5) == deltaRecord)
+    // through the resolver: the delta's parent_hash pin still matches
+    // the full record's bytes
+    val dir = tbl()
+    Files.createDirectories(Paths.get(s"$dir/_versions"))
+    Files.write(Paths.get(s"$dir/_versions/v4.json"), fullRecord.getBytes("UTF-8"))
+    Files.write(Paths.get(s"$dir/_versions/v5.json"), deltaRecord.getBytes("UTF-8"))
+    assert(Versioned.parseManifest(spark, dir, 5L) == m5)
+    // a key present with the wrong JSON type fails closed, never "absent"
+    val nullFiles = fullRecord.replaceFirst("\"files\":\\[[^\\]]*\\]", "\"files\":null")
+    assert(nullFiles.contains("\"files\":null"))
+    intercept[IllegalStateException](
+      ManifestCodec.decodeFull(ManifestCodec.parse(nullFiles, "v4"), "v4"))
+    // so does a pair or triple array with a ragged tail
+    val raggedDvs = fullRecord.replace(""","1"]}""", "]}")
+    assert(raggedDvs != fullRecord)
+    intercept[IllegalStateException](
+      ManifestCodec.decodeFull(ManifestCodec.parse(raggedDvs, "v4"), "v4"))
+  }
+
   test("checkpointInterval=1 restores full-record-per-commit behavior") {
     val dir = tbl()
     spark.conf.set("spark.graft.manifest.checkpointInterval", "1")

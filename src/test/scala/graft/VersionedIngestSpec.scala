@@ -43,6 +43,17 @@ class VersionedIngestSpec extends SparkSpec {
     assert(f.listStatus(new org.apache.hadoop.fs.Path(s"$dir/files")).length == 2)
   }
 
+  test("appendOnce: any non-empty appId, quotes and backslashes included") {
+    val dir = tbl()
+    val app = "a\"b\\c"
+    assert(Versioned.appendOnce(rows(0, 5), dir, app, 0L).contains(0L))
+    assert(Versioned.appendOnce(rows(0, 5), dir, app, 0L).isEmpty)
+    Versioned.clearResolvedManifestCache()
+    assert(Versioned.lastCommittedBatch(spark, dir, app) == 0L)
+    assert(Versioned.parseManifest(spark, dir, 0L).txn.contains((app, 0L)))
+    intercept[IllegalArgumentException](Versioned.appendOnce(rows(5, 6), dir, "", 1L))
+  }
+
   test("appendOnce: distinct appIds have independent watermarks") {
     val dir = tbl()
     assert(Versioned.appendOnce(rows(0, 5), dir, "appA", 3L).isDefined)
