@@ -167,6 +167,29 @@ object GraftFunctions {
     WordShingles(children.head, n)
   }
 
+  val SigMatchesName = "graft_sig_matches"
+
+  private val sigMatchesInfo =
+    new ExpressionInfo(classOf[SigMatches].getName, SigMatchesName)
+  private val sigMatchesBuilder = (children: Seq[Expression]) => {
+    require(children.length == 2, s"$SigMatchesName takes (sigA, sigB)")
+    SigMatches(children.head, children(1))
+  }
+
+  val ShingleJaccardName = "graft_shingle_jaccard"
+
+  private val shingleJaccardInfo =
+    new ExpressionInfo(classOf[ShingleJaccard].getName, ShingleJaccardName)
+  private val shingleJaccardBuilder = (children: Seq[Expression]) => {
+    require(children.length == 3, s"$ShingleJaccardName takes (a, b, shingleSize)")
+    val n = children(2) match {
+      case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, IntegerType) => v
+      case other => throw new IllegalArgumentException(
+        s"$ShingleJaccardName shingleSize must be an integer literal, got $other")
+    }
+    ShingleJaccard(children.head, children(1), n)
+  }
+
   // Spark's own runtime-filter expression pair, surfaced as session
   // functions: `graft_bloom_agg(key, estItems)` builds the serialized
   // filter (BinaryType), `graft_might_contain(bloom, key)` probes it.
@@ -221,6 +244,10 @@ object GraftFunctions {
     spark.sessionState.functionRegistry.registerFunction(
       FunctionIdentifier(WordShinglesName), wordShinglesInfo, wordShinglesBuilder)
     spark.sessionState.functionRegistry.registerFunction(
+      FunctionIdentifier(SigMatchesName), sigMatchesInfo, sigMatchesBuilder)
+    spark.sessionState.functionRegistry.registerFunction(
+      FunctionIdentifier(ShingleJaccardName), shingleJaccardInfo, shingleJaccardBuilder)
+    spark.sessionState.functionRegistry.registerFunction(
       FunctionIdentifier(BloomAggName), bloomAggInfo, bloomAggBuilder)
     spark.sessionState.functionRegistry.registerFunction(
       FunctionIdentifier(MightContainName), mightContainInfo, mightContainBuilder)
@@ -234,6 +261,9 @@ object GraftFunctions {
     ext.injectFunction((FunctionIdentifier(BucketRankName), bucketRankInfo, bucketRankBuilder))
     ext.injectFunction((FunctionIdentifier(QualityScoreName), qualityInfo, qualityBuilder))
     ext.injectFunction((FunctionIdentifier(WordShinglesName), wordShinglesInfo, wordShinglesBuilder))
+    ext.injectFunction((FunctionIdentifier(SigMatchesName), sigMatchesInfo, sigMatchesBuilder))
+    ext.injectFunction((FunctionIdentifier(ShingleJaccardName), shingleJaccardInfo,
+      shingleJaccardBuilder))
     ext.injectFunction((FunctionIdentifier(BloomAggName), bloomAggInfo, bloomAggBuilder))
     ext.injectFunction((FunctionIdentifier(MightContainName), mightContainInfo, mightContainBuilder))
   }

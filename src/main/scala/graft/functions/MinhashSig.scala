@@ -56,13 +56,7 @@ case class MinhashSig(child: Expression, shingleSize: Int, numHashes: Int)
     val per = numHashes / Regions
     val acc = new Array[Long](numHashes)
     val filled = new Array[Boolean](numHashes)
-
-    // One OPH update from one shingle string.
-    @inline def update(sh: UTF8String): Unit = {
-      // xxhash64(string): seed-42 hash of the UTF8 bytes — byte-for-byte
-      // the InterpretedHashFunction path of the builtin.
-      val h = XXH64.hashUnsafeBytes(
-        sh.getBaseObject, sh.getBaseOffset, sh.numBytes, 42L)
+    ShingleHashes.foreach(in, charMode, shingleSize) { h =>
       var r = 0
       while (r < Regions) {
         // xxhash64(h, r) chains: seed 42 → hashLong(h) → hashInt(r).
@@ -70,40 +64,6 @@ case class MinhashSig(child: Expression, shingleSize: Int, numHashes: Int)
         val slot = r * per + (((hr % per) + per) % per).toInt
         if (!filled(slot) || hr < acc(slot)) { acc(slot) = hr; filled(slot) = true }
         r += 1
-      }
-    }
-
-    if (charMode) {
-      val t = in.asInstanceOf[UTF8String]
-      val nSh = math.max(t.numChars() - shingleSize + 1, 1)
-      var i = 0
-      while (i < nSh) {
-        // substringSQL(i+1, n): the same 1-based, codepoint-counted window
-        // as Column.substr — bit-parity with the exploded char path.
-        update(t.substringSQL(i + 1, shingleSize))
-        i += 1
-      }
-    } else {
-      val toks = in.asInstanceOf[ArrayData]
-      val len = toks.numElements()
-      val nSh = math.max(len - shingleSize + 1, 1)
-      val sep = UTF8String.fromString(" ")
-      var i = 0
-      while (i < nSh) {
-        val end = math.min(i + shingleSize, len)
-        val parts = new Array[UTF8String](end - i)
-        // Null elements stay null in `parts` and concatWs skips them —
-        // the same contract as the exploded twin's `concat_ws(" ",
-        // slice(...))`. The isNullAt guard is load-bearing: columnar
-        // ArrayData getUTF8String on a null slot is undefined (garbage
-        // offsets), not null.
-        var j = i
-        while (j < end) {
-          if (!toks.isNullAt(j)) parts(j - i) = toks.getUTF8String(j)
-          j += 1
-        }
-        update(UTF8String.concatWs(sep, parts: _*))
-        i += 1
       }
     }
     // Densify empty slots with the global min — every rehash lands in
@@ -127,4 +87,52 @@ case class MinhashSig(child: Expression, shingleSize: Int, numHashes: Int)
     copy(child = newChild)
 
   override def prettyName: String = "graft_minhash_sig"
+}
+
+/** The shingle → hash loop [[MinhashSig]] and [[ShingleJaccard]] share,
+  * so the two agree on a document's shingles by construction.
+  *
+  * Word mode (`ARRAY<STRING>` tokens): windows of `n` tokens joined by
+  * " " (`concat_ws(" ", slice(toks, i, n))`), null tokens skipped. Char
+  * mode (`STRING`, pre-normalized text): windows `substringSQL(i, n)`,
+  * the same 1-based, code-point-counted window as `Column.substr`. A
+  * document shorter than one window yields one whole-text shingle. The
+  * hash is seed-42 xxhash64 of the shingle's UTF-8 bytes, byte-for-byte
+  * the builtin `xxhash64(string)`. */
+private[functions] object ShingleHashes {
+  private val Sep = UTF8String.fromString(" ")
+
+  def foreach(in: Any, charMode: Boolean, n: Int)(f: Long => Unit): Unit =
+    if (charMode) {
+      val t = in.asInstanceOf[UTF8String]
+      val nSh = math.max(t.numChars() - n + 1, 1)
+      var i = 0
+      while (i < nSh) {
+        f(hash(t.substringSQL(i + 1, n)))
+        i += 1
+      }
+    } else {
+      val toks = in.asInstanceOf[ArrayData]
+      val len = toks.numElements()
+      val nSh = math.max(len - n + 1, 1)
+      var i = 0
+      while (i < nSh) {
+        val end = math.min(i + n, len)
+        val parts = new Array[UTF8String](end - i)
+        // Null elements stay null in `parts` and concatWs skips them. The
+        // isNullAt guard is load-bearing: columnar ArrayData
+        // getUTF8String on a null slot is undefined (garbage offsets),
+        // not null.
+        var j = i
+        while (j < end) {
+          if (!toks.isNullAt(j)) parts(j - i) = toks.getUTF8String(j)
+          j += 1
+        }
+        f(hash(UTF8String.concatWs(Sep, parts: _*)))
+        i += 1
+      }
+    }
+
+  private def hash(sh: UTF8String): Long =
+    XXH64.hashUnsafeBytes(sh.getBaseObject, sh.getBaseOffset, sh.numBytes, 42L)
 }

@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import graft.functions.TextFunctions._
@@ -16,16 +17,28 @@ import graft.operators.Checkpoints.CapOps
   * (exact Jaccard / hamming / cosine) runs only on candidate pairs.
   * Nothing ever collects to the driver.
   *
-  * Signature computation: BOTH shingle granularities use the native
-  * [[graft.functions.MinhashSig]] expression — a pure projection (one
-  * tight JVM loop per row, no explode, no shuffle; ~3× faster warm and
-  * ~10× cold than the aggregate it replaced, which paid a Janino
-  * compile): word mode over the token array, char mode over the
-  * normalized text. The explode + NARROW hash-aggregate formulation
-  * ([[minhashSigs]]) remains as the verification twin — bit-equality is
-  * pinned by StreamingCurationSpec (word) and DedupSpec (char). Neither
-  * path uses interpreted higher-order-function lambdas (O(k × elements)
-  * per row, measured 50× slower) or k-column aggregates.
+  * MinHash LSH ([[minHashLsh]], [[ngramJaccardPairs]],
+  * [[minHashDedup]], [[minHashLshIncremental]]) is one query of two
+  * sides over the input:
+  *  - the BAND side computes every document's signature with the native
+  *    [[graft.functions.MinhashSig]] projection (word mode over the token
+  *    array, char mode over the normalized text), explodes band hashes,
+  *    caps hot buckets and self-joins them into candidate id pairs;
+  *  - the VERIFICATION side semi-joins the input down to the candidate
+  *    ids, computes `(signature, shingle input)` for those documents
+  *    only, joins them to both ends of each pair and keeps a pair when
+  *    `graft_sig_matches` passes the 3σ signature prefilter and
+  *    `graft_shingle_jaccard` (exact Jaccard of the distinct shingle
+  *    hashes) reaches the threshold.
+  *
+  * Both checks are native expressions over one projection: no
+  * interpreted higher-order lambda, no explode + `collect_set` shuffle,
+  * no persisted intermediate. The signature and the Jaccard shingle the
+  * text through one shared loop, so they agree by construction; DedupSpec
+  * pins both bit-equal to the explode/`collect_set` formulation they
+  * replaced. The explode + NARROW hash-aggregate signature
+  * ([[minhashSigs]]) remains as the signature's verification twin,
+  * pinned by StreamingCurationSpec (word) and DedupSpec (char).
   */
 object Dedup {
 
@@ -265,7 +278,7 @@ object Dedup {
     * than `n` units yield one whole-text shingle, mirroring
     * `TextFunctions.wordShingles`. Duplicate shingles are kept — minhash
     * over a multiset equals minhash over its set. */
-  private def explodedWordShingles(
+  private[graft] def explodedWordShingles(
       df: DataFrame, textCol: String, idCol: String, n: Int): DataFrame =
     df.select(col(idCol).as("__id"), tokens(col(textCol)).as("__t"))
       .select(col("__id"), col("__t"),
@@ -274,7 +287,7 @@ object Dedup {
         xxhash64(concat_ws(" ", slice(col("__t"), col("__i"), lit(n)))).as("__h"))
 
   /** Exploded char-shingle hashes, same contract as the word variant. */
-  private def explodedCharShingles(
+  private[graft] def explodedCharShingles(
       df: DataFrame, textCol: String, idCol: String, n: Int): DataFrame =
     df.select(col(idCol).as("__id"), normalizeText(col(textCol)).as("__t"))
       .select(col("__id"), col("__t"),
@@ -291,14 +304,16 @@ object Dedup {
   val DefaultMaxBucket = 10000
 
   /** Drop blocking buckets with more than `maxBucket` members. `keys` are
-    * the bucket columns. One count-aggregate over the (persisted, narrow)
-    * bucket table + an equi-join — cheap relative to the n² it prevents. */
+    * the bucket columns. One windowed count per bucket: a single shuffle
+    * on the keys, which also leaves the rows partitioned for the bucket
+    * self-join that follows — cheap relative to the n² it prevents. */
   private[graft] def capBuckets(
-      buckets: DataFrame, keys: Seq[String], maxBucket: Int): DataFrame = {
-    val ok = buckets.groupBy(keys.map(col): _*).count()
-      .filter(col("count") <= maxBucket).drop("count")
-    buckets.join(ok, keys)
-  }
+      buckets: DataFrame, keys: Seq[String], maxBucket: Int): DataFrame =
+    buckets
+      .withColumn("__bucket_n",
+        count(lit(1)).over(Window.partitionBy(keys.map(col): _*)))
+      .filter(col("__bucket_n") <= maxBucket)
+      .drop("__bucket_n")
 
   /** Number of independent rehash regions in the minhash signature. A
     * pure one-permutation signature (1 region) leaves
@@ -355,17 +370,7 @@ object Dedup {
     * path did. */
   private[graft] def rowLocalCharMinhashSig(
       text: Column, n: Int, numHashes: Int): Column =
-    call_function(graft.functions.GraftFunctions.MinhashSigName,
-      normalizeText(text), lit(n), lit(numHashes))
-
-  /** Char-shingle signatures `(__id, __sig)` as a native projection. */
-  private def nativeCharSigs(
-      df: DataFrame, textCol: String, idCol: String,
-      n: Int, numHashes: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
-    df.select(col(idCol).as("__id"),
-      rowLocalCharMinhashSig(col(textCol), n, numHashes).as("__sig"))
-  }
+    minhashSig(normalizeText(text), n, numHashes)
 
   /** ROW-LOCAL twin of [[minhashSigs]] for STREAMING inputs: identical
     * region-partitioned OPH signature (same shingle hashes, same region
@@ -381,8 +386,7 @@ object Dedup {
     * `GraftFunctions.register(spark)`. */
   private[graft] def rowLocalMinhashSig(
       text: Column, shingleSize: Int, numHashes: Int): Column =
-    call_function(graft.functions.GraftFunctions.MinhashSigName,
-      tokens(text), lit(shingleSize), lit(numHashes))
+    minhashSig(tokens(text), shingleSize, numHashes)
 
   /** Band-hash struct array `array<struct<b:int, h:long>>` from a
     * signature column — the single definition both the batch band join
@@ -405,27 +409,20 @@ object Dedup {
         explode(bandStructs(col("sig"), numHashes, bands)).as("__bh"))
       .select(col("__id"), col("__bh.b").as("__band"), col("__bh.h").as("__bandhash"))
 
-  /** LSH band candidate pairs from persisted OPH signatures `(__id, __sig)`.
+  /** LSH band candidate pairs from OPH signatures `(__id, __sig)`.
     *
     * band hash = xxhash64 of the band's signature slice; candidates come
     * from a self-equi-join on (band index, band hash), id_a < id_b,
     * distinct. Only doc ids cross the band join — signatures and shingle
-    * sets are attached later to the (small) candidate set, so
+    * inputs are attached later to the (small) candidate set, so
     * band-collision skew can't amplify wide rows. */
-  private def bandCandidates(
+  private[graft] def bandCandidates(
       sigs: DataFrame,
       numHashes: Int,
       bands: Int,
       maxBucket: Int): DataFrame = {
-    val rows = numHashes / bands
-    val bandCols = (0 until bands).map { bi =>
-      struct(lit(bi).as("b"),
-        xxhash64(slice(col("__sig"), bi * rows + 1, rows)).as("h"))
-    }
-    // banded is re-derived per consumer, but from the PERSISTED sigs —
-    // 16 slice+hash structs over one narrow cached row per doc.
     val banded = sigs
-      .select(col("__id"), explode(array(bandCols: _*)).as("__bh"))
+      .select(col("__id"), explode(bandStructs(col("__sig"), numHashes, bands)).as("__bh"))
       .select(col("__id"), col("__bh.b").as("__band"), col("__bh.h").as("__bandhash"))
     val capped = capBuckets(banded, Seq("__band", "__bandhash"), maxBucket)
     val l = capped.withColumnRenamed("__id", "id_a")
@@ -436,89 +433,87 @@ object Dedup {
       .dropDuplicates("id_a", "id_b")
   }
 
-  /** Signature-estimate prefilter: band collisions at char-shingle
-    * granularity are noisy (baseline similarity between unrelated docs is
-    * high), so the band join can emit 50-100× more candidates than
-    * survive exact verification. Estimating Jaccard from the fraction of
-    * matching signature slots — data already in hand — and cutting at
-    * `threshold − 3σ` (σ = √(t(1−t)/k)) drops the junk BEFORE the
-    * expensive collect_set/array_intersect verification. Precision is
-    * unaffected: exact Jaccard still decides membership. The 3σ margin
-    * keeps the miss probability for a true-threshold pair near 0.1%
-    * even at k=32 (a 2.5σ cut measurably dropped ~4 of 256 borderline
-    * pairs at sf0.1); the cost is ~4× more sub-threshold candidates
-    * surviving into exact verification, which is still a small fraction
-    * of the raw band-join output. */
-  private def sigPrefilter(
-      candidates: DataFrame,
-      sigs: DataFrame,
-      numHashes: Int,
-      threshold: Double): DataFrame = {
+  /** What a signature is computed from: the token array (word shingles)
+    * or the normalized text (char shingles). */
+  private def shingleInput(text: Column, charMode: Boolean): Column =
+    if (charMode) normalizeText(text) else tokens(text)
+
+  /** The native signature of a [[shingleInput]]. */
+  private def minhashSig(input: Column, n: Int, numHashes: Int): Column =
+    call_function(graft.functions.GraftFunctions.MinhashSigName, input, lit(n), lit(numHashes))
+
+  /** OPH signatures `(__id, __sig)` as one native projection. */
+  private def nativeSigs(
+      df: DataFrame, textCol: String, idCol: String,
+      charMode: Boolean, n: Int, numHashes: Int): DataFrame = {
+    graft.functions.GraftFunctions.register(df.sparkSession)
+    df.select(col(idCol).as("__id"),
+      minhashSig(shingleInput(col(textCol), charMode), n, numHashes).as("__sig"))
+  }
+
+  /** Verified near-dup pairs `(id_a, id_b, jaccard)` among `candidates`
+    * (`id_a`, `id_b`), in one projection over the pairs.
+    *
+    * `docs` is semi-joined down to the candidate ids first, so signatures
+    * and shingle inputs are computed only for documents in some pair (AQE
+    * broadcasts the id list) — never for the whole corpus. Each pair then
+    * passes two native checks in order:
+    *  - the signature prefilter: `graft_sig_matches ≥ (t − 3σ)·k`, with
+    *    σ = √(t(1−t)/k). Band collisions at char-shingle granularity are
+    *    noisy (unrelated docs share many char grams), so the band join
+    *    can emit 50-100× more candidates than survive; the slot-match
+    *    estimate drops that junk before the exact check. Precision is
+    *    unaffected. The 3σ margin keeps the miss probability for a
+    *    true-threshold pair near 0.1% even at k=32 (a 2.5σ cut dropped
+    *    ~4 of 256 borderline pairs at sf0.1);
+    *  - exact Jaccard, `graft_shingle_jaccard ≥ t`, over the distinct
+    *    shingle hashes of both documents. */
+  private def verifiedPairs(
+      docs: DataFrame, textCol: String, idCol: String, candidates: DataFrame,
+      charMode: Boolean, n: Int, numHashes: Int, threshold: Double): DataFrame = {
+    import graft.functions.GraftFunctions.{ShingleJaccardName, SigMatchesName}
+    graft.functions.GraftFunctions.register(docs.sparkSession)
     val sigma = math.sqrt(threshold * (1 - threshold) / numHashes)
     val minMatches = math.max(0.0, threshold - 3.0 * sigma) * numHashes
-    val matches = aggregate(
-      zip_with(col("__sa"), col("__sb"),
-        (x, y) => when(x === y, lit(1)).otherwise(lit(0))),
-      lit(0), (acc, z) => acc + z)
-    candidates
-      .join(sigs.select(col("__id").as("id_a"), col("__sig").as("__sa")), "id_a")
-      .join(sigs.select(col("__id").as("id_b"), col("__sig").as("__sb")), "id_b")
-      .filter(matches >= minMatches)
-      .select("id_a", "id_b")
-  }
-
-  /** Exact-Jaccard verification of candidate pairs. Shingling is expensive
-    * (O(chars) substrings + hashes per doc), so the corpus is first
-    * semi-joined down to ids that appear in a candidate pair — shingle
-    * SETS (collect_set of the exploded hashes) are built only for that
-    * small set (AQE broadcasts the id list), never for the whole corpus. */
-  private def verifyJaccard(
-      df: DataFrame,
-      idCol: String,
-      candidates: DataFrame,
-      threshold: Double,
-      explodedShingles: DataFrame => DataFrame): DataFrame = {
-    val candIds = candidates
-      .select(explode(array(col("id_a"), col("id_b"))).as("__cand_id"))
-      .distinct()
-    val candDocs = explodedShingles(
-      df.join(candIds, df(idCol) === candIds("__cand_id"), "left_semi"))
-      .groupBy("__id").agg(collect_set(col("__h")).as("__sh"))
-    val shA = candDocs.select(col("__id").as("id_a"), col("__sh").as("__sh_a"))
-    val shB = candDocs.select(col("__id").as("id_b"), col("__sh").as("__sh_b"))
-    candidates.join(shA, "id_a").join(shB, "id_b")
-      .withColumn("jaccard",
-        size(array_intersect(col("__sh_a"), col("__sh_b"))).cast("double") /
-          size(array_union(col("__sh_a"), col("__sh_b"))))
+    val candIds = candidates.select(explode(array(col("id_a"), col("id_b"))).as(idCol))
+    val candDocs = docs.join(candIds, Seq(idCol), "left_semi")
+      .select(col(idCol).as("__id"), shingleInput(col(textCol), charMode).as("__in"))
+      .select(col("__id"), col("__in"),
+        minhashSig(col("__in"), n, numHashes).as("__sig"))
+    def end(s: String) = candDocs.select(col("__id").as(s"id_$s"),
+      col("__in").as(s"__in_$s"), col("__sig").as(s"__sig_$s"))
+    candidates.join(end("a"), "id_a").join(end("b"), "id_b")
+      .filter(call_function(SigMatchesName, col("__sig_a"), col("__sig_b")) >= minMatches)
+      .select(col("id_a"), col("id_b"),
+        call_function(ShingleJaccardName, col("__in_a"), col("__in_b"), lit(n)).as("jaccard"))
       .filter(col("jaccard") >= threshold)
-      .select("id_a", "id_b", "jaccard")
   }
 
-  /** Shared LSH pipeline: OPH signatures → band candidates → signature
-    * prefilter → exact-Jaccard verification. EAGER: the small result is
-    * materialized (persisted) so the narrow signature cache — the only
-    * big intermediate — can be released before returning; long-lived
-    * sessions running many dedup passes don't accumulate storage. */
-  private def lshJaccardPipeline(
+  /** Shared LSH pipeline, LAZY: native signatures → band candidates →
+    * [[verifiedPairs]]. It reads `df` twice (the band side and the
+    * verification side), so `df` must be deterministic. */
+  private def lshJaccardPairs(
       df: DataFrame,
+      textCol: String,
       idCol: String,
-      shingler: DataFrame => DataFrame,
-      sigSource: DataFrame => DataFrame,
+      charMode: Boolean,
+      n: Int,
       numHashes: Int,
       bands: Int,
-      threshold: Double,
-      maxBucket: Int): DataFrame = {
+      threshold: Double): DataFrame = {
     require(numHashes % bands == 0, "numHashes must divide evenly into bands")
-    val sigs = sigSource(df)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val candidates = bandCandidates(sigs, numHashes, bands, maxBucket)
-    val prefiltered = sigPrefilter(candidates, sigs, numHashes, threshold)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val result = verifyJaccard(df, idCol, prefiltered, threshold, shingler)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    result.count() // materialize, then release the upstream caches
-    prefiltered.unpersist()
-    sigs.unpersist()
+    val candidates = bandCandidates(
+      nativeSigs(df, textCol, idCol, charMode, n, numHashes), numHashes, bands,
+      DefaultMaxBucket)
+    verifiedPairs(df, textCol, idCol, candidates, charMode, n, numHashes, threshold)
+  }
+
+  /** Persist and count: the small pair set is materialized once, so
+    * every later use (clustering, retention, reports) reads the cache
+    * instead of re-running the pipeline. */
+  private def materialized(pairs: DataFrame): DataFrame = {
+    val result = pairs.persist(StorageLevel.MEMORY_AND_DISK)
+    result.count()
     result
   }
 
@@ -526,6 +521,9 @@ object Dedup {
     * n-gram shingles → k-slot OPH minhash signature → band equi-join
     * candidates → signature prefilter → exact Jaccard ≥ threshold.
     * Returns (id_a, id_b, jaccard) with id_a < id_b.
+    *
+    * EAGER: the result is persisted and materialized before it is
+    * returned (the caller may `unpersist` it); nothing else stays cached.
     *
     * `seed` is retained for API stability but unused: one-permutation
     * hashing derives every slot from the single fixed-seed xxhash64, so
@@ -539,10 +537,8 @@ object Dedup {
       bands: Int = 16,
       threshold: Double = 0.8,
       seed: Long = 42L): DataFrame =
-    lshJaccardPipeline(df, idCol,
-      explodedWordShingles(_, textCol, idCol, shingleSize),
-      nativeWordSigs(_, textCol, idCol, shingleSize, numHashes),
-      numHashes, bands, threshold, DefaultMaxBucket)
+    materialized(lshJaccardPairs(df, textCol, idCol, charMode = false,
+      shingleSize, numHashes, bands, threshold))
 
   /** A tuned [[minHashLsh]] configuration: `numHashes = rowsPerBand ×
     * bands`, `missAtThreshold` the S-curve probability that a pair at
@@ -663,20 +659,6 @@ object Dedup {
         t.numHashes))
   }
 
-  /** Word-shingle signatures via the native [[graft.functions.MinhashSig]]
-    * expression: bit-identical to the [[minhashSigs]] aggregate
-    * (StreamingCurationSpec pins it) but a pure PROJECTION — no explode,
-    * no shuffle, and ~3× faster warm / ~10× cold (the aggregate pays a
-    * Janino compile). The char-shingle paths keep the aggregate (the
-    * expression shingles at token granularity). */
-  private def nativeWordSigs(
-      df: DataFrame, textCol: String, idCol: String,
-      shingleSize: Int, numHashes: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
-    df.select(col(idCol).as("__id"),
-      rowLocalMinhashSig(col(textCol), shingleSize, numHashes).as("__sig"))
-  }
-
   // ------------------------------------------------- incremental minhash
 
   /** Persist the OPH minhash signature store for a corpus slice: one
@@ -693,7 +675,7 @@ object Dedup {
       path: String,
       shingleSize: Int = 3,
       numHashes: Int = 64): Unit =
-    nativeWordSigs(df, textCol, idCol, shingleSize, numHashes)
+    nativeSigs(df, textCol, idCol, charMode = false, shingleSize, numHashes)
       .select(col("__id").as("id"), col("__sig").as("sig"))
       .write.mode("overwrite").parquet(path)
 
@@ -712,9 +694,11 @@ object Dedup {
     * the bucket-cap union and its checkpoint are overlap-sized, not
     * corpus-sized; the batch-vs-store candidate join is an equi-join on
     * (band, bandhash) whose batch side AQE broadcasts in the
-    * daily-batch regime, so stored-corpus band rows never shuffle. Exact-Jaccard verification
-    * re-shingles ONLY candidate docs — `corpus` is semi-joined down to
-    * the ids the band join surfaced before any text is read.
+    * daily-batch regime, so stored-corpus band rows never shuffle.
+    * Verification is [[minHashLsh]]'s: `corpus ∪ batch` is semi-joined
+    * down to the ids the band join surfaced, and only those documents
+    * are re-shingled. Like [[minHashLsh]], the result is persisted and
+    * materialized before it is returned.
     *
     * Contract: `corpus` must be the data the store was built from (it
     * supplies text for candidate verification), and batch ids must be
@@ -734,16 +718,11 @@ object Dedup {
     require(numHashes % bands == 0, "numHashes must divide evenly into bands")
     val stored = spark.read.parquet(sigPath)
       .select(col("id").as("__id"), col("sig").as("__sig"))
-    val fresh = nativeWordSigs(batch, textCol, idCol, shingleSize, numHashes)
+    val fresh = nativeSigs(batch, textCol, idCol, charMode = false, shingleSize, numHashes)
       .persist(StorageLevel.MEMORY_AND_DISK)
 
-    val rows = numHashes / bands
-    val bandCols = (0 until bands).map { bi =>
-      struct(lit(bi).as("b"),
-        xxhash64(slice(col("__sig"), bi * rows + 1, rows)).as("h"))
-    }
     def banded(sigs: DataFrame, isNew: Boolean) = sigs
-      .select(col("__id"), explode(array(bandCols: _*)).as("__bh"))
+      .select(col("__id"), explode(bandStructs(col("__sig"), numHashes, bands)).as("__bh"))
       .select(col("__id"), lit(isNew).as("__new"),
         col("__bh.b").as("__band"), col("__bh.h").as("__bandhash"))
     // Bloom-prune the STORED band stream against the batch's band keys
@@ -772,7 +751,7 @@ object Dedup {
     // Cap hot band buckets over the UNION — a boilerplate bucket is hot
     // because of its total population, stored + new alike. Eager
     // localCheckpoint, NOT persist: this node is referenced by four join
-    // branches, each of which verifyJaccard references again — with lazy
+    // branches, each of which the verification references twice — with lazy
     // lineage the logical tree DUPLICATES multiplicatively per level
     // (measured: a 2.1 MB plan string, 126 BroadcastExchange nodes, 40+
     // concurrent single-task broadcast jobs re-deriving band rows, ~14 s
@@ -798,17 +777,10 @@ object Dedup {
       .select(least(col("__n"), col("__o")).as("id_a"),
         greatest(col("__n"), col("__o")).as("id_b"))
     val candidates = newNew.union(newOld).dropDuplicates("id_a", "id_b")
-    val sigs = stored.unionByName(fresh)
-    // Same lineage cut before verification: verifyJaccard references the
-    // candidate set three times (id extraction + the pair join).
-    val prefiltered = sigPrefilter(candidates, sigs, numHashes, threshold)
-      .capLineage()
     val docs = corpus.select(col(idCol), col(textCol))
       .unionByName(batch.select(col(idCol), col(textCol)))
-    val result = verifyJaccard(docs, idCol, prefiltered, threshold,
-      explodedWordShingles(_, textCol, idCol, shingleSize))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    result.count() // materialize, then release the upstream caches
+    val result = materialized(verifiedPairs(docs, textCol, idCol, candidates,
+      charMode = false, shingleSize, numHashes, threshold))
     fresh.unpersist()
     result
   }
@@ -851,7 +823,13 @@ object Dedup {
 
   /** Keep one representative per near-dup cluster found by minHashLsh:
     * drops every id that appears as the greater member of a qualifying
-    * pair (transitive chains collapse to their smallest id stepwise). */
+    * pair (transitive chains collapse to their smallest id stepwise).
+    *
+    * LAZY, unlike [[minHashLsh]]: the pair plan is composed into the
+    * anti-join, so the returned frame is one query and nothing is
+    * cached or run until an action. That query scans `df` three times
+    * (band side, verification side, the anti-join), so `df` must be
+    * deterministic; checkpoint it first if it is costly to recompute. */
   def minHashDedup(
       df: DataFrame,
       textCol: String,
@@ -860,8 +838,8 @@ object Dedup {
       numHashes: Int = 64,
       bands: Int = 16,
       threshold: Double = 0.8): DataFrame = {
-    val losers = minHashLsh(df, textCol, idCol, shingleSize, numHashes, bands, threshold)
-      .select(col("id_b").as(idCol)).distinct()
+    val losers = lshJaccardPairs(df, textCol, idCol, charMode = false,
+      shingleSize, numHashes, bands, threshold).select(col("id_b").as(idCol))
     df.join(losers, Seq(idCol), "left_anti")
   }
 
@@ -994,7 +972,8 @@ object Dedup {
 
   /** Character n-gram Jaccard near-dup pairs. Candidates via minhash-LSH
     * over the char-shingle hashes (same banding machinery), verified with
-    * exact n-gram Jaccard. Catches small edits word-shingles miss. */
+    * exact n-gram Jaccard. Catches small edits word-shingles miss. EAGER
+    * like [[minHashLsh]]: the result is persisted and materialized. */
   def ngramJaccardPairs(
       df: DataFrame,
       textCol: String,
@@ -1004,10 +983,8 @@ object Dedup {
       numHashes: Int = 64,
       bands: Int = 16,
       seed: Long = 7L): DataFrame =
-    lshJaccardPipeline(df, idCol,
-      explodedCharShingles(_, textCol, idCol, n),
-      nativeCharSigs(_, textCol, idCol, n, numHashes),
-      numHashes, bands, threshold, DefaultMaxBucket)
+    materialized(lshJaccardPairs(df, textCol, idCol, charMode = true,
+      n, numHashes, bands, threshold))
 
   /** Verification twin (spec-only): the explode + aggregate formulation
     * of the WORD-shingle signatures — StreamingCurationSpec pins the

@@ -253,10 +253,13 @@ object Versioned {
     def clear(): Unit = synchronized { map.clear(); total = 0L }
   }
 
-  /** Test hook: drop every cached resolved manifest (simulates a cold
-    * JVM so specs can exercise the full chain walk). */
-  private[graft] def clearResolvedManifestCache(): Unit =
+  /** Test hook: drop every cached resolved manifest and txn watermark
+    * (simulates a cold JVM, so specs exercise the full chain walk and
+    * [[lastCommittedBatch]] re-reads the records). */
+  private[graft] def clearResolvedManifestCache(): Unit = {
     resolvedManifestCache.clear()
+    txnWatermarkCache.synchronized(txnWatermarkCache.clear())
+  }
 
   private[graft] def parseManifest(
       spark: SparkSession, tableDir: String, v: Long): Manifest =
@@ -1106,9 +1109,9 @@ object Versioned {
     * a 10k-batch stream. Versions dropped by [[vacuum]] no longer
     * witness their batches, so retention must exceed the longest replay
     * window a restarting writer can attempt — the exact contract Delta
-    * documents for its SetTransaction retention; the cache keeps the
-    * max it witnessed BEFORE the vacuum for the session's lifetime,
-    * which only widens the replay protection. */
+    * documents for its SetTransaction retention. A vacuum drops the
+    * oldest record and so rolls the cache epoch: the next call re-reads
+    * the records that remain. */
   def lastCommittedBatch(
       spark: SparkSession, tableDir: String, appId: String): Long = {
     val (lowest, latest) = versionBounds(spark, tableDir)

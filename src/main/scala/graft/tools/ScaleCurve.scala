@@ -21,6 +21,22 @@ import graft.operators.Dedup
   * pairs (jaccard ≥ threshold), and wall seconds for the full
   * minHashLsh pipeline. */
 object ScaleCurve {
+  /** The one session every curve runs in: `local[N]` with N from
+    * `SPARK_GRAFT_CPUS`, else the box's core count, and as many shuffle
+    * partitions as task threads. */
+  private def session(): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("ERROR")
+    spark
+  }
+
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val multipliers = args.drop(1).headOption
@@ -36,14 +52,7 @@ object ScaleCurve {
     if (family == "dvdepth") { dvDepthCurve(dir, multipliers); return }
     if (family == "cowdepth") { cowDepthCurve(dir, multipliers); return }
     if (family == "manifest") { manifestCurve(multipliers); return }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = session()
     val base = spark.read.parquet(s"$dir/documents.parquet")
       .select("doc_id", "text")
 
@@ -81,14 +90,7 @@ object ScaleCurve {
     * multipliers argument is read as ROUND counts (default
     * 100,200,300,400,500). */
   private def bpeCurve(dir: String, blocks: Seq[Int]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = session()
     val rounds = if (blocks == Seq(1, 2, 5, 10)) Seq(100, 200, 300, 400, 500)
       else blocks
     // The synthetic corpus has a small distinct-word set (it exhausts
@@ -124,14 +126,7 @@ object ScaleCurve {
     * its group count grow m× — the same linearity evidence the dedup
     * curves record, for the mutation path. */
   private def mergeCurve(dir: String, multipliers: Seq[Int]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = session()
     import graft.operators.Versioned
     import graft.operators.Versioned.MergeClause._
     val base = spark.read.parquet(s"$dir/documents.parquet")
@@ -201,14 +196,7 @@ object ScaleCurve {
     * curve that shows a years-of-daily-deletes history does not grow
     * the plan. Row-count sanity: genesis inserts + exactly k deletes. */
   private def dvDepthCurve(dir: String, depths: Seq[Int]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = session()
     import graft.operators.Versioned
     val base = spark.read.parquet(s"$dir/documents.parquet")
       .select("doc_id", "lang", "n_chars")
@@ -279,14 +267,7 @@ object ScaleCurve {
     * one checkpoint), never O(groups × versions). Multipliers are read
     * as GROUP COUNTS. */
   private def manifestCurve(groupCounts: Seq[Int]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = session()
     import graft.operators.Versioned
     groupCounts.foreach { g =>
       Seq(("full", "1"), ("delta", "10")).foreach { case (label, interval) =>
@@ -327,14 +308,7 @@ object ScaleCurve {
     * — the "years of daily merges" history must not replay one plan
     * frame per version. Multipliers are read as DEPTHS. */
   private def cowDepthCurve(dir: String, depths: Seq[Int]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = session()
     import graft.operators.Versioned
     import Versioned.MergeClause._
     val base = spark.read.parquet(s"$dir/documents.parquet")
@@ -376,14 +350,7 @@ object ScaleCurve {
     * rewritten) while the DV commit's new bytes stay ~flat (a KB-scale
     * position artifact), with identical surviving rows. */
   private def dvCurve(dir: String, multipliers: Seq[Int]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = session()
     import graft.operators.Versioned
     val base = spark.read.parquet(s"$dir/documents.parquet")
       .select("doc_id", "lang", "n_chars")
@@ -444,14 +411,7 @@ object ScaleCurve {
     * DV new bytes ∝ the CHURN (positions + copies + inserts only) —
     * and the feed still attributes every row (asserted). */
   private def dvMergeCurve(dir: String, multipliers: Seq[Int]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = session()
     import graft.operators.Versioned
     import graft.operators.Versioned.MergeClause._
     val base = spark.read.parquet(s"$dir/documents.parquet")
@@ -533,14 +493,7 @@ object ScaleCurve {
     * pairs stay ~flat — i.e. the incremental path's materialized work
     * tracks the BATCH, not the corpus. */
   private def incrementalCurve(dir: String, multipliers: Seq[Int]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = session()
     val base = spark.read.parquet(s"$dir/documents.parquet")
       .select("doc_id", "text")
     def salted(c: Int): DataFrame = base.select(
@@ -607,14 +560,7 @@ object ScaleCurve {
     * equality does not. Candidate volume is the fingerprint-join fan-out
     * Σ c·(c−1) over kept fingerprints — the number the DF guard bounds. */
   private def containmentCurve(dir: String, multipliers: Seq[Int]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = session()
     val alphabet = "abcdefghijklmnopqrstuvwxyz"
     val base = spark.read.parquet(s"$dir/documents.parquet")
       .select("doc_id", "text")
@@ -670,13 +616,7 @@ object ScaleCurve {
     * clean recorded evidence; this mode exists to check the within-copy
     * line and the wall-time shape. */
   private def embeddingCurve(dir: String, multipliers: Seq[Int]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = session()
     val base = spark.read.parquet(s"$dir/embeddings.parquet")
       .select("vec_id", "embedding")
     val dim = base.select(size(col("embedding"))).first().getInt(0)

@@ -28,26 +28,6 @@ class DmlJobCountSpec extends SparkSpec {
     dir
   }
 
-  /** Jobs started while `body` runs. Every job-start event is posted
-    * before a blocking action returns, so once the listener bus drains
-    * the count is final. */
-  private def jobsOf(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    org.apache.spark.sql.graftshim.GraftSqlBridge.waitListenerBusEmpty(sc, 30000L)
-    val counter = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        counter.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    try {
-      body
-      org.apache.spark.sql.graftshim.GraftSqlBridge.waitListenerBusEmpty(sc, 30000L)
-      counter.get()
-    } finally sc.removeSparkListener(listener)
-  }
-
   private def assertJobs(what: String, jobs: Int, bound: Int): Unit =
     assert(jobs <= bound, s"$what ran $jobs jobs (expected <= $bound)")
 

@@ -34,6 +34,26 @@ abstract class SparkSpec extends AnyFunSuite {
         s"\nexpected:\n  ${expected.toSeq.map(_.mkString(",")).sorted.mkString("\n  ")}")
   }
 
+  /** Jobs started while `body` runs. Every job-start event is posted
+    * before a blocking action returns, so once the listener bus drains
+    * the count is final. */
+  def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    org.apache.spark.sql.graftshim.GraftSqlBridge.waitListenerBusEmpty(sc, 30000L)
+    val counter = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        counter.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      body
+      org.apache.spark.sql.graftshim.GraftSqlBridge.waitListenerBusEmpty(sc, 30000L)
+      counter.get()
+    } finally sc.removeSparkListener(listener)
+  }
+
   def countAndSum(table: String, sumCol: String = "c1"): (Long, Long) = {
     val r = sql(s"SELECT count(*), sum($sumCol) FROM $table").collect()(0)
     (r.getLong(0), r.getLong(1))

@@ -54,6 +54,38 @@ class VersionedIngestSpec extends SparkSpec {
     intercept[IllegalArgumentException](Versioned.appendOnce(rows(5, 6), dir, "", 1L))
   }
 
+  test("clearing the manifest caches makes lastCommittedBatch re-read the records") {
+    val dir = tbl()
+    Versioned.commit(rows(0, 5), dir)                                     // v0
+    assert(Versioned.appendOnce(rows(5, 10), dir, "app", 0L).isDefined)   // v1
+    assert(Versioned.appendOnce(rows(10, 15), dir, "app", 1L).isDefined)  // v2
+    Versioned.append(rows(15, 20), dir)                                   // v3
+    assert(Versioned.appendOnce(rows(20, 25), dir, "app", 2L).isDefined)  // v4
+    Versioned.append(rows(25, 30), dir)                                   // v5
+    assert(Versioned.lastCommittedBatch(spark, dir, "app") == 2L)
+    // What a reader with no cache gets from the records that remain.
+    def cold(): Long = {
+      Versioned.clearResolvedManifestCache()
+      val (lo, hi) = Versioned.versionBounds(spark, dir)
+      (lo to hi).flatMap(v =>
+          scala.util.Try(Versioned.parseManifest(spark, dir, v).txn).toOption.flatten)
+        .collect { case ("app", b) => b }.foldLeft(-1L)(math.max)
+    }
+    // The vacuum drops the record that witnesses batch 0 (and rolls the
+    // cache epoch, since it drops the oldest record).
+    Versioned.vacuum(spark, dir, 2L)
+    assert(Versioned.lastCommittedBatch(spark, dir, "app") == 2L)
+    // Drop the record that witnesses batch 2 from the middle of the log:
+    // bounds and epoch stay, so only the cleared caches force a re-read.
+    new org.apache.hadoop.fs.Path(dir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .delete(new org.apache.hadoop.fs.Path(s"$dir/_versions/v4.json"), false)
+    val expected = cold()
+    assert(expected == 1L)
+    Versioned.clearResolvedManifestCache()
+    assert(Versioned.lastCommittedBatch(spark, dir, "app") == expected)
+  }
+
   test("appendOnce: distinct appIds have independent watermarks") {
     val dir = tbl()
     assert(Versioned.appendOnce(rows(0, 5), dir, "appA", 3L).isDefined)
