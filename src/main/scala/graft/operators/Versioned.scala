@@ -16,11 +16,27 @@ import graft.operators.Checkpoints.CapOps
   *     never modified or deleted by commits;
   *   - `_versions/v<n>.json` — one manifest per version listing the file
   *     groups that version reads. The manifest is the COMMIT: it is
-  *     published with create-exclusive, so version numbers are an atomic
-  *     total order even under concurrent committers (the loser of a
-  *     create race retries at the next number — same arbiter as the
-  *     merge lease), and a crashed writer leaves only unreferenced data
-  *     files, never a torn version.
+  *     published with create-exclusive (the same arbiter as the merge
+  *     lease), so version numbers are an atomic total order even under
+  *     concurrent committers, and a crashed writer leaves only
+  *     unreferenced data files, never a torn version.
+  *
+  * Concurrency is Delta's optimistic commit
+  * (https://docs.delta.io/latest/concurrency-control.html): every write
+  * publishes through one loop ([[commitLoop]]). A writer that finds its
+  * version number taken reads the WINNER's record and applies its
+  * operation's rule:
+  *   - rebuild over any winner, re-checking schema, column mapping and
+  *     constraints against it — [[commit]], [[append]], [[appendOnce]]
+  *     (which returns None instead when a winner committed its batch),
+  *     [[convert]], [[cloneTable]];
+  *   - rebase over append winners, raise on any other — [[compact]],
+  *     [[cluster]];
+  *   - raise on any winner — [[delete]], [[update]], [[merge]],
+  *     [[mergeClauses]], constraint and column DDL, [[restore]],
+  *     [[curate]].
+  * A raise is a `ConcurrentModificationException` (re-run against the
+  * new latest version) and deletes the groups the write produced.
   *
   * Two commit modes, mirroring Delta's economics:
   *   - [[commit]] — full snapshot: writes the frame, manifest lists only
@@ -155,7 +171,16 @@ object Versioned {
       dvs: Seq[(String, String, Long)] = Seq.empty,
       fileRows: Map[String, Long] = Map.empty,
       copies: Seq[String] = Seq.empty,
-      fileStats: Map[String, String] = Map.empty)
+      fileStats: Map[String, String] = Map.empty) {
+    /** This version's table state as the draft of a next version in
+      * `mode` — the fields that belong to one version alone (txn,
+      * copies) cleared. */
+    def carried(mode: String): Manifest =
+      copy(mode = mode, txn = None, copies = Seq.empty)
+  }
+
+  /** The state an absent table's first version builds on. */
+  private val noTable = Manifest(Seq.empty, 0L, "", "")
 
   /** Checkpoint SIDECAR path for a version — a FULL record written by
     * [[vacuum]] beside a delta record whose ancestors it is about to
@@ -383,32 +408,29 @@ object Versioned {
     }
 
   /** Serialize and publish version `v` (create-exclusive; false = lost
-    * the race). Chooses the record shape: a FULL record when `v` is a
-    * checkpoint slot, the parent is missing/unreadable, or the delta
-    * encoding cannot represent the transition (group order diverged,
-    * row-count coverage would degrade, a recorded schema would have to
-    * clear); otherwise an O(churn) DELTA record chained to the
-    * parent's bytes. ONE batched sidecar pass serves both the
+    * the race) from `draft` over `parent`, version `v - 1`'s hash and
+    * state as [[commitLoop]] resolved them (None for v0). The draft's
+    * `fileRows` are the counts its writer knows; its `committedAt` and
+    * `fileStats` are filled here. Chooses the record shape: a FULL
+    * record when `v` is a checkpoint slot, there is no parent, or the
+    * delta encoding cannot represent the transition (group order
+    * diverged, row-count coverage would degrade, a recorded schema
+    * would have to clear); otherwise an O(churn) DELTA record chained
+    * to the parent's bytes. ONE batched sidecar pass serves both the
     * row-count fallback and the stats embed, so commit metadata I/O is
     * O(new groups) — and a checkpoint back-fills stats coverage for
     * groups older records never carried. */
   private def publishRecordAt(
       spark: SparkSession, tableDir: String, v: Long,
-      mode: String, groups: Seq[String], nRows: Long,
-      txn: Option[(String, Long)], schemaDdl: Option[String],
-      cons: Seq[(String, String)], mapping: Seq[(String, String)],
-      dvs: Seq[(String, String, Long)],
-      rowsByGroup: Map[String, Long], copies: Seq[String]): Boolean = {
+      parent: Option[(Long, Manifest)], draft: Manifest): Boolean = {
     val f = fs(spark, tableDir)
-    val parentOpt: Option[(Long, Manifest)] =
-      if (v == 0) None
-      else scala.util.Try(resolveWithHash(spark, tableDir, v - 1)).toOption
-    val pm = parentOpt.map(_._2)
-    val knownRows = pm.map(_.fileRows).getOrElse(Map.empty) ++ rowsByGroup
+    val groups = draft.files
+    val pm = parent.map(_._2)
+    val knownRows = pm.map(_.fileRows).getOrElse(Map.empty) ++ draft.fileRows
     val knownStats = pm.map(_.fileStats).getOrElse(Map.empty)
     val interval = checkpointInterval(spark)
     val checkpointSlot =
-      parentOpt.isEmpty || interval <= 1 || (v % interval == 0)
+      parent.isEmpty || interval <= 1 || (v % interval == 0)
     val parentSet = pm.map(_.files.toSet).getOrElse(Set.empty)
     val added = groups.filterNot(parentSet)
     // one concurrent sidecar batch: row counts for groups no record
@@ -426,26 +448,25 @@ object Versioned {
       knownRows.get(g).orElse(sidecarSt.get(g).map(_.nRows)))
     val fileRows =
       if (perRows.forall(_.isDefined)) Some(perRows.map(_.get)) else None
-    val next = Manifest(groups, nRows, mode, java.time.Instant.now().toString,
-      txn, schemaDdl, cons, mapping, dvs,
-      fileRows.map(groups.zip(_).toMap).getOrElse(Map.empty), copies,
-      groups.flatMap(g => knownStats.get(g)
+    val next = draft.copy(committedAt = java.time.Instant.now().toString,
+      fileRows = fileRows.map(groups.zip(_).toMap).getOrElse(Map.empty),
+      fileStats = groups.flatMap(g => knownStats.get(g)
         .orElse(sidecarSt.get(g).map(GroupStats.toJson)).map(g -> _)).toMap)
-    val json = parentOpt match {
-      case Some((phash, parent)) if !checkpointSlot &&
+    val json = parent match {
+      case Some((phash, prev)) if !checkpointSlot &&
           // the delta fold must reproduce the exact file sequence
-          (parent.files.filter(groups.toSet) ++ added) == groups &&
+          (prev.files.filter(groups.toSet) ++ added) == groups &&
           // row-count coverage must not degrade through the fold: a
           // CARRIED group's count must come from the parent RECORD —
-          // that is all the fold can see (a rowsByGroup entry for a
+          // that is all the fold can see (a draft `fileRows` entry for a
           // carried group would satisfy the writer but fold to empty)
           (fileRows.isDefined && groups.filterNot(added.toSet)
-            .forall(parent.fileRows.contains)
-            || fileRows.isEmpty && parent.fileRows.isEmpty) &&
+            .forall(prev.fileRows.contains)
+            || fileRows.isEmpty && prev.fileRows.isEmpty) &&
           // a recorded schema cannot CLEAR through a delta (absent =
           // inherit) — never happens in practice, full record if so
-          !(schemaDdl.isEmpty && parent.schemaDdl.nonEmpty) =>
-        ManifestCodec.encodeDelta(v, phash, parent, next)
+          !(draft.schemaDdl.isEmpty && prev.schemaDdl.nonEmpty) =>
+        ManifestCodec.encodeDelta(v, phash, prev, next)
       case _ => ManifestCodec.encodeFull(v, next)
     }
     val ok = graft.sources.FsAtomic.createExclusive(
@@ -485,63 +506,93 @@ object Versioned {
       case _: java.io.IOException | _: IllegalStateException => None
     }
 
-  private def publish(
-      spark: SparkSession, tableDir: String, groups: Seq[String],
-      nRows: Long, mode: String, schemaDdl: Option[String],
-      constraintsOverride: Option[Seq[(String, String)]] = None,
-      mapping: Seq[(String, String)] = Seq.empty,
-      dvs: Seq[(String, String, Long)] = Seq.empty,
-      rowsByGroup: Map[String, Long] = Map.empty): Long = {
-    // Constraints are table-level metadata: every commit carries the
-    // live set forward unless explicitly changed (add/dropConstraint).
-    val cons = constraintsOverride.getOrElse(constraints(spark, tableDir))
-    var v = latestVersion(spark, tableDir) + 1
-    while (true) {
-      // FsAtomic: Hadoop's local create(overwrite=false) is check-then-
-      // act; a non-atomic create here could publish the SAME version
-      // number twice under concurrent committers.
-      if (publishRecordAt(spark, tableDir, v, mode, groups, nRows, None,
-          schemaDdl, cons, mapping, dvs, rowsByGroup, Seq.empty))
-        return v
-      v += 1 // lost the race: next number
+  /** What a commit does when another writer published the version
+    * number it was about to take (the WINNER) — the per-operation
+    * conflict rules of the object doc. */
+  private sealed trait OnWinner
+  /** Parent-independent writes: rebuild the record over the winner. */
+  private case object Rebuild extends OnWinner
+  /** History-dependent writes: a mutation computed against version P
+    * may only land as P + 1 — sliding past a winner would silently DROP
+    * its effect, the classic lost update. */
+  private case object Refuse extends OnWinner
+  /** Maintenance rewrites: rebase over pure appends (see
+    * [[rebasePublish]]), raise on anything else. */
+  private case object RebaseOverAppends extends OnWinner
+
+  /** THE commit loop of every versioned write — Delta's optimistic
+    * commit. Each attempt resolves the parent once, hands it to `build`
+    * for the next record's draft and publishes create-exclusive at
+    * parent + 1. A lost race reads only the WINNER's record at that
+    * number (no re-listing), applies `rule` to it, and moves on to the
+    * next number with the winner as the parent. Anything raised —
+    * by the rule, by `build` (a constraint, schema or mapping check
+    * against the new parent) or by the publication — deletes
+    * `newGroups` first: vacuum reclaims only manifest-referenced
+    * directories, so an orphan would be permanent. Returns the
+    * published version. */
+  private def commitLoop(
+      spark: SparkSession, tableDir: String, readVersion: Long,
+      rule: OnWinner, newGroups: Seq[String])(
+      build: (Long, Manifest) => Manifest): Long = {
+    def at(v: Long) =
+      if (v < 0) None else Some(resolveWithHash(spark, tableDir, v))
+    try {
+      var parent = readVersion
+      var resolved = at(parent)
+      while (true) {
+        val draft = build(parent, resolved.fold(noTable)(_._2))
+        if (rule == RebaseOverAppends) rebaseAttemptHook()
+        val v = parent + 1
+        if (publishRecordAt(spark, tableDir, v, resolved, draft)) return v
+        val winner = rule match {
+          case Refuse =>
+            throw new java.util.ConcurrentModificationException(
+              s"${draft.mode} on $tableDir read version $readVersion but " +
+                s"version $v was committed concurrently — re-run the " +
+                "operation against the new latest version")
+          case Rebuild =>
+            try at(v)
+            catch {
+              // vacuumed already: later versions exist, take the head
+              case _: java.io.FileNotFoundException =>
+                parent = latestVersion(spark, tableDir) - 1
+                at(parent + 1)
+            }
+          case RebaseOverAppends =>
+            val w = try at(v) catch {
+              case _: java.io.FileNotFoundException => cannotRebase(
+                tableDir, readVersion, s"version $v was vacuumed while rebasing")
+            }
+            val m = w.get._2
+            if (m.mode != "append")
+              cannotRebase(tableDir, readVersion, s"concurrent version $v " +
+                s"is a '${m.mode}', not an append — the rewrite no longer " +
+                "represents the table")
+            if (m.mapping.nonEmpty)
+              cannotRebase(tableDir, readVersion, "the table uses column " +
+                "mapping; a rebased snapshot manifest cannot carry the " +
+                "winners' physical names")
+            w
+        }
+        parent += 1
+        resolved = winner
+      }
+      -1L // unreachable
+    } catch {
+      case e: Throwable =>
+        val f = fs(spark, tableDir)
+        newGroups.foreach(g =>
+          scala.util.Try(f.delete(new Path(s"$tableDir/files/$g"), true)))
+        throw e
     }
-    v // unreachable
   }
 
-  /** OPTIMISTIC publication for HISTORY-DEPENDENT commits — Delta's
-    * conflict detection, simplified to its sound core: a mutation
-    * computed against parent version `expectedParent` may only land as
-    * `expectedParent + 1`. If any other committer got there first, the
-    * world this mutation read no longer exists — sliding to the next
-    * number (what [[publish]] does for parent-independent snapshots)
-    * would silently DROP the concurrent commit's effect, the classic
-    * lost update. Instead the written group is deleted and a
-    * `ConcurrentModificationException` tells the caller to re-run
-    * against the new latest version. The create-exclusive manifest
-    * makes the parent check and the publication one atomic step. */
-  private def publishExpecting(
-      spark: SparkSession, tableDir: String, expectedParent: Long,
-      groups: Seq[String], newGroups: Seq[String], nRows: Long, mode: String,
-      schemaDdl: Option[String],
-      constraintsOverride: Option[Seq[(String, String)]] = None,
-      mapping: Seq[(String, String)] = Seq.empty,
-      dvs: Seq[(String, String, Long)] = Seq.empty,
-      rowsByGroup: Map[String, Long] = Map.empty,
-      copies: Seq[String] = Seq.empty): Long = {
-    val f = fs(spark, tableDir)
-    val cons = constraintsOverride.getOrElse(constraints(spark, tableDir))
-    val target = expectedParent + 1
-    if (publishRecordAt(spark, tableDir, target, mode, groups, nRows, None,
-        schemaDdl, cons, mapping, dvs, rowsByGroup, copies))
-      target
-    else {
-      newGroups.foreach(g => f.delete(new Path(s"$tableDir/files/$g"), true))
-      throw new java.util.ConcurrentModificationException(
-        s"$mode on $tableDir read version $expectedParent but version " +
-          s"$target was committed concurrently — re-run the operation " +
-          "against the new latest version")
-    }
-  }
+  private def cannotRebase(
+      tableDir: String, readVersion: Long, why: String): Nothing =
+    throw new java.util.ConcurrentModificationException(
+      s"maintenance rewrite of $tableDir read version $readVersion " +
+        s"but cannot rebase: $why — re-run against the new latest version")
 
   /** The schema recorded in a version's manifest, TOP-LEVEL-NULLABLE
     * (groups written before or after a column's lifetime null-fill it,
@@ -846,10 +897,9 @@ object Versioned {
     require(exprSql.trim.nonEmpty, "constraint expression must be non-empty")
     val v = latestVersion(spark, tableDir)
     require(v >= 0, s"no versions committed under $tableDir")
-    val existing = constraints(spark, tableDir)
-    require(!existing.exists(_._1.equalsIgnoreCase(name)),
-      s"constraint '$name' already exists")
     val m = parseManifest(spark, tableDir, v)
+    require(!m.constraints.exists(_._1.equalsIgnoreCase(name)),
+      s"constraint '$name' already exists")
     val violations = scanVersionGroups(
       spark, tableDir, m.files, m.schemaDdl, m.mapping, m.dvs)
       .filter(!coalesce(org.apache.spark.sql.functions.expr(exprSql), lit(true)))
@@ -857,10 +907,9 @@ object Versioned {
     require(violations == 0L,
       s"cannot add CHECK constraint '$name' (`$exprSql`): " +
         s"$violations existing row(s) violate it")
-    publishExpecting(spark, tableDir, v, m.files, Seq.empty,
-      m.nRows, "add_constraint", m.schemaDdl,
-      Some(existing :+ (name -> exprSql)), m.mapping, dvs = m.dvs,
-      rowsByGroup = m.fileRows)
+    commitLoop(spark, tableDir, v, Refuse, Nil)((_, p) =>
+      p.carried("add_constraint").copy(
+        constraints = p.constraints :+ (name -> exprSql)))
   }
 
   /** ALTER TABLE DROP CONSTRAINT (metadata-only). */
@@ -868,14 +917,12 @@ object Versioned {
       spark: SparkSession, tableDir: String, name: String): Long = {
     val v = latestVersion(spark, tableDir)
     require(v >= 0, s"no versions committed under $tableDir")
-    val existing = constraints(spark, tableDir)
+    val existing = parseManifest(spark, tableDir, v).constraints
     require(existing.exists(_._1.equalsIgnoreCase(name)),
       s"no such constraint: '$name' (have ${existing.map(_._1).mkString(", ")})")
-    val m = parseManifest(spark, tableDir, v)
-    publishExpecting(spark, tableDir, v, m.files, Seq.empty,
-      m.nRows, "drop_constraint", m.schemaDdl,
-      Some(existing.filterNot(_._1.equalsIgnoreCase(name))), m.mapping,
-      dvs = m.dvs, rowsByGroup = m.fileRows)
+    commitLoop(spark, tableDir, v, Refuse, Nil)((_, p) =>
+      p.carried("drop_constraint").copy(
+        constraints = p.constraints.filterNot(_._1.equalsIgnoreCase(name))))
   }
 
   /** The identifier-boundary test "does this constraint expression
@@ -931,9 +978,9 @@ object Versioned {
     }
     val newSchema = org.apache.spark.sql.types.StructType(schema.fields.map(f =>
       if (f.name.equalsIgnoreCase(oldName)) f.copy(name = newName) else f))
-    publishExpecting(spark, tableDir, v, m.files, Seq.empty,
-      m.nRows, "rename_column", Some(newSchema.toDDL),
-      Some(m.constraints), mapping, dvs = m.dvs, rowsByGroup = m.fileRows)
+    commitLoop(spark, tableDir, v, Refuse, Nil)((_, p) =>
+      p.carried("rename_column").copy(
+        schemaDdl = Some(newSchema.toDDL), mapping = mapping))
   }
 
   /** ALTER TABLE DROP COLUMN — METADATA-ONLY (Delta column mapping):
@@ -970,9 +1017,9 @@ object Versioned {
       ("" -> physical) // tombstone: the physical name stays reserved
     val newSchema = org.apache.spark.sql.types.StructType(
       schema.fields.filterNot(_.name.equalsIgnoreCase(name)))
-    publishExpecting(spark, tableDir, v, m.files, Seq.empty,
-      m.nRows, "drop_column", Some(newSchema.toDDL),
-      Some(m.constraints), mapping, dvs = m.dvs, rowsByGroup = m.fileRows)
+    commitLoop(spark, tableDir, v, Refuse, Nil)((_, p) =>
+      p.carried("drop_column").copy(
+        schemaDdl = Some(newSchema.toDDL), mapping = mapping))
   }
 
   /** Commit `df` as a FULL-SNAPSHOT version; returns the version number.
@@ -981,27 +1028,31 @@ object Versioned {
   def commit(df: DataFrame, tableDir: String): Long = {
     val spark = df.sparkSession
     val (group, n) = writeGroup(df, tableDir)
-    // Enforce against the EXACT constraint set the published manifest
-    // carries: re-read per attempt, re-enforced only when the set
-    // changed, published via expected-parent so a concurrent
-    // addConstraint can neither be dropped from the manifest (lost
-    // metadata update) nor claimed without validation.
+    val schema = Some(storedSchema(df))
+    // Enforced against the EXACT constraint set the published manifest
+    // carries, which comes from each parent: a concurrent addConstraint
+    // can neither be dropped from the manifest (lost metadata update)
+    // nor claimed without validation.
+    val enforce = enforcer(spark, tableDir, group)
+    commitLoop(spark, tableDir, latestVersion(spark, tableDir), Rebuild,
+      Seq(group)) { (_, p) =>
+      enforce(schema, p.constraints, Seq.empty)
+      Manifest(Seq(group), n, "snapshot", "", schemaDdl = schema,
+        constraints = p.constraints, fileRows = Map(group -> n))
+    }
+  }
+
+  /** CHECK enforcement of one written group across commit attempts:
+    * runs again only when the parent's constraint set differs from the
+    * one last enforced. */
+  private def enforcer(spark: SparkSession, tableDir: String, group: String)
+      : (Option[String], Seq[(String, String)], Seq[(String, String)]) => Unit = {
     var enforcedFor: Option[Seq[(String, String)]] = None
-    while (true) {
-      val parent = latestVersion(spark, tableDir)
-      val cons =
-        if (parent < 0) Seq.empty[(String, String)]
-        else parseManifest(spark, tableDir, parent).constraints
+    (schema, cons, mapping) =>
       if (!enforcedFor.contains(cons)) {
-        enforceConstraints(spark, tableDir, group, Some(storedSchema(df)), cons)
+        enforceConstraints(spark, tableDir, group, schema, cons, mapping)
         enforcedFor = Some(cons)
       }
-      try return publishExpecting(spark, tableDir, parent, Seq(group),
-        Seq.empty, n, "snapshot", Some(storedSchema(df)), Some(cons),
-        rowsByGroup = Map(group -> n))
-      catch { case _: java.util.ConcurrentModificationException => () }
-    }
-    -1L // unreachable
   }
 
   /** Commit `df` as an APPEND version: parent file groups are shared,
@@ -1013,65 +1064,51 @@ object Versioned {
     * the new group); type conflicts always raise. */
   def append(df: DataFrame, tableDir: String, evolveSchema: Boolean = false): Long = {
     val spark = df.sparkSession
+    val head = latestVersion(spark, tableDir)
+    val m = if (head < 0) noTable else parseManifest(spark, tableDir, head)
     // Fail fast on schema drift before paying the write.
-    val latest0 = latestVersion(spark, tableDir)
-    val m0 =
-      if (latest0 < 0) None else Some(parseManifest(spark, tableDir, latest0))
-    validateAppendSchema(df, m0.flatMap(_.schemaDdl), evolveSchema)
-    // The group is written under the CURRENT column mapping (physical
-    // names); a concurrent rename/drop between write and publish is a
-    // metadata conflict the loop detects and raises on.
-    val mappingAtWrite = m0.map(_.mapping).getOrElse(Seq.empty)
-    val (group, n) = writeGroup(df, tableDir, mappingAtWrite)
-    // Optimistic retry: the batch's data is parent-independent (the
-    // group is already durable), so a concurrent commit just means
-    // re-reading the new parent and re-publishing — appendOnce's loop,
-    // without the watermark. Schema and constraints are re-resolved
-    // against each observed parent; a violation deletes the group.
-    var enforcedFor: Option[Seq[(String, String)]] = None
-    while (true) {
-      val parent = latestVersion(spark, tableDir)
-      val (parentGroups, parentRows, parentSchema, parentCons, parentMap,
-        parentDvs, parentFileRows) =
-        if (parent < 0)
-          (Seq.empty[String], 0L, None: Option[String],
-            Seq.empty[(String, String)], Seq.empty[(String, String)],
-            Seq.empty[(String, String, Long)], Map.empty[String, Long])
-        else {
-          val m = parseManifest(spark, tableDir, parent)
-          (m.files, m.nRows, m.schemaDdl, m.constraints, m.mapping, m.dvs,
-            m.fileRows)
-        }
-      if (parentMap != mappingAtWrite) {
-        fs(spark, tableDir).delete(new Path(s"$tableDir/files/$group"), true)
+    validateAppendSchema(df, m.schemaDdl, evolveSchema)
+    val (group, n) = writeGroup(df, tableDir, m.mapping)
+    commitLoop(spark, tableDir, head, Rebuild, Seq(group))(
+      appendDraft(df, tableDir, group, n, m.mapping, evolveSchema, None))
+  }
+
+  /** Raised by [[appendDraft]] when a parent already records the batch
+    * being appended; [[appendOnce]] turns it into None. */
+  private object BatchCommitted extends scala.util.control.ControlThrowable
+
+  /** The one build of [[append]] and [[appendOnce]]: the parent's
+    * groups plus the written `group` (`n` rows). The group's data is
+    * parent-independent, so over every parent [[commitLoop]] hands it,
+    * it re-checks only what the parent may have changed:
+    *  - a parent recording `txn`'s app at this batch or later raises
+    *    [[BatchCommitted]] (a racer committed the batch first);
+    *  - the group was written under `mappingAtWrite` (physical names),
+    *    so a changed mapping (concurrent RENAME/DROP COLUMN) raises;
+    *  - the schema is validated again, and the constraints are
+    *    enforced again when their set changed. */
+  private def appendDraft(
+      df: DataFrame, tableDir: String, group: String, n: Long,
+      mappingAtWrite: Seq[(String, String)], evolve: Boolean,
+      txn: Option[(String, Long)]): (Long, Manifest) => Manifest = {
+    val enforce = enforcer(df.sparkSession, tableDir, group)
+    (_, p) => {
+      txn.foreach { case (app, batch) =>
+        if (p.txn.exists { case (a, b) => a == app && b >= batch })
+          throw BatchCommitted
+      }
+      if (p.mapping != mappingAtWrite)
         throw new java.util.ConcurrentModificationException(
           s"column mapping of $tableDir changed while appending " +
-            "(concurrent RENAME/DROP COLUMN) — re-run the append")
-      }
-      val schema =
-        try validateAppendSchema(df, parentSchema, evolveSchema)
-        catch { case e: Throwable =>
-          fs(spark, tableDir).delete(new Path(s"$tableDir/files/$group"), true)
-          throw e
-        }
-      val mapping =
-        try extendedMapping(parentMap, schema)
-        catch { case e: Throwable =>
-          fs(spark, tableDir).delete(new Path(s"$tableDir/files/$group"), true)
-          throw e
-        }
-      if (!enforcedFor.contains(parentCons)) {
-        enforceConstraints(spark, tableDir, group, schema, parentCons, mapping)
-        enforcedFor = Some(parentCons)
-      }
-      try return publishExpecting(spark, tableDir, parent,
-        parentGroups :+ group, Seq.empty, parentRows + n, "append", schema,
-        Some(parentCons), mapping, dvs = parentDvs,
-        rowsByGroup = parentFileRows + (group -> n))
-      catch { case _: java.util.ConcurrentModificationException
-          if latestVersion(spark, tableDir) != parent => () }
+            "(concurrent RENAME/DROP COLUMN) — re-run the " +
+            (if (txn.isEmpty) "append" else "batch"))
+      val schema = validateAppendSchema(df, p.schemaDdl, evolve)
+      val mapping = extendedMapping(p.mapping, schema)
+      enforce(schema, p.constraints, mapping)
+      p.carried("append").copy(files = p.files :+ group,
+        nRows = p.nRows + n, txn = txn, schemaDdl = schema,
+        mapping = mapping, fileRows = p.fileRows + (group -> n))
     }
-    -1L // unreachable
   }
 
   /** Extend a column mapping to cover `schemaDdl`'s fields: existing
@@ -1113,9 +1150,15 @@ object Versioned {
     * oldest record and so rolls the cache epoch: the next call re-reads
     * the records that remain. */
   def lastCommittedBatch(
-      spark: SparkSession, tableDir: String, appId: String): Long = {
+      spark: SparkSession, tableDir: String, appId: String): Long =
+    batchWatermark(spark, tableDir, appId)._1
+
+  /** [[lastCommittedBatch]] with the latest version it covers, both
+    * from ONE listing. */
+  private def batchWatermark(
+      spark: SparkSession, tableDir: String, appId: String): (Long, Long) = {
     val (lowest, latest) = versionBounds(spark, tableDir)
-    if (latest < 0) return -1L
+    if (latest < 0) return (-1L, -1L)
     val epoch = tableEpoch(spark, tableDir, lowest)
     val key = cacheKey(spark, tableDir)
     txnWatermarkCache.synchronized {
@@ -1133,7 +1176,7 @@ object Versioned {
         }
       }
       txnWatermarkCache.put(key, (epoch, latest, out))
-      out.getOrElse(appId, -1L)
+      (out.getOrElse(appId, -1L), latest)
     }
   }
 
@@ -1149,77 +1192,29 @@ object Versioned {
     * turns it into exactly-once, because the replayed micro-batch
     * carries the same deterministic batchId the first attempt committed.
     *
-    * Concurrency: the watermark is re-checked after every lost
-    * manifest-publish race, so two racing writers of the SAME
-    * (appId, batchId) — a zombie executor beside its replacement —
-    * commit once: the loser observes the winner's txn and abandons its
-    * (orphaned, vacuum-reclaimable) group. Writers of different appIds
-    * interleave freely, as with [[append]]. Requires batchIds that are
-    * monotone per appId — exactly what the streaming engine provides. */
+    * Concurrency: the watermark and the commit's starting version come
+    * from ONE listing, so every version the watermark did not see is a
+    * winner [[commitLoop]] reads — two racing writers of the SAME
+    * (appId, batchId) (a zombie executor beside its replacement)
+    * commit once: the loser finds the winner's txn and deletes its
+    * group. Writers of different appIds interleave freely, as with
+    * [[append]]. Requires batchIds that are monotone per appId —
+    * exactly what the streaming engine provides. Streaming batches
+    * carry a fixed schema, so validation is strict. */
   def appendOnce(
       df: DataFrame, tableDir: String, appId: String, batchId: Long): Option[Long] = {
     require(appId.nonEmpty, "appId must be non-empty")
     val spark = df.sparkSession
-    if (lastCommittedBatch(spark, tableDir, appId) >= batchId) return None
-    val latest0 = latestVersion(spark, tableDir)
-    val mappingAtWrite =
-      if (latest0 < 0) Seq.empty[(String, String)]
-      else parseManifest(spark, tableDir, latest0).mapping
-    val (group, n) = writeGroup(df, tableDir, mappingAtWrite)
-    val f = fs(spark, tableDir)
-    // Constraints are enforced against the EXACT set the published
-    // manifest will carry (re-checked after every lost race, like
-    // [[append]]): a concurrent addConstraint landing mid-commit must
-    // not yield a version whose manifest claims a constraint its data
-    // was never validated against.
-    var enforcedFor: Option[Seq[(String, String)]] = None
-    while (true) {
-      if (lastCommittedBatch(spark, tableDir, appId) >= batchId) {
-        // A racer committed this batch between our check and publish:
-        // abandon the duplicate group (unreferenced → vacuum reclaims).
-        f.delete(new Path(s"$tableDir/files/$group"), true)
-        return None
-      }
-      val parent = latestVersion(spark, tableDir)
-      val (parentGroups, parentRows, parentSchema, parentCons, parentMap,
-        parentDvs, parentFileRows) =
-        if (parent < 0)
-          (Seq.empty[String], 0L, None: Option[String],
-            Seq.empty[(String, String)], Seq.empty[(String, String)],
-            Seq.empty[(String, String, Long)], Map.empty[String, Long])
-        else {
-          val m = parseManifest(spark, tableDir, parent)
-          (m.files, m.nRows, m.schemaDdl, m.constraints, m.mapping, m.dvs,
-            m.fileRows)
-        }
-      if (parentMap != mappingAtWrite) {
-        f.delete(new Path(s"$tableDir/files/$group"), true)
-        throw new java.util.ConcurrentModificationException(
-          s"column mapping of $tableDir changed while appending " +
-            "(concurrent RENAME/DROP COLUMN) — re-run the batch")
-      }
-      // Streaming batches carry a fixed schema: strict validation. A
-      // drift failure deletes the already-written group — otherwise the
-      // orphan is permanent (vacuum only reclaims dropped-manifest groups).
-      val schema =
-        try validateAppendSchema(df, parentSchema, evolve = false)
-        catch { case e: Throwable =>
-          f.delete(new Path(s"$tableDir/files/$group"), true)
-          throw e
-        }
-      if (!enforcedFor.contains(parentCons)) {
-        enforceConstraints(spark, tableDir, group, schema, parentCons, parentMap)
-        enforcedFor = Some(parentCons)
-      }
-      val v = parent + 1
-      if (publishRecordAt(spark, tableDir, v, "append",
-          parentGroups :+ group, parentRows + n, Some(appId -> batchId),
-          schema, parentCons, parentMap, parentDvs,
-          parentFileRows + (group -> n), Seq.empty))
-        return Some(v)
-      // lost the race: loop re-reads the new latest AND the watermark
-    }
-    None // unreachable
+    val (watermark, head) = batchWatermark(spark, tableDir, appId)
+    if (watermark >= batchId) return None
+    val mapping =
+      if (head < 0) Seq.empty[(String, String)]
+      else parseManifest(spark, tableDir, head).mapping
+    val (group, n) = writeGroup(df, tableDir, mapping)
+    try Some(commitLoop(spark, tableDir, head, Rebuild, Seq(group))(
+      appendDraft(df, tableDir, group, n, mapping, evolve = false,
+        Some(appId -> batchId))))
+    catch { case BatchCommitted => None }
   }
 
   /** Run a streaming query whose sink is this versioned table: each
@@ -1266,13 +1261,22 @@ object Versioned {
       action: DataFrame => DataFrame): Long = {
     val v = latestVersion(spark, tableDir)
     require(v >= 0, s"no versions committed under $tableDir")
-    snapshotExpecting(action(read(spark, tableDir, v)), tableDir, v)
+    val df = action(read(spark, tableDir, v))
+    val (group, n) = writeGroup(df, tableDir)
+    val schema = Some(storedSchema(df))
+    // The action is arbitrary: a rebase would silently skip applying it
+    // to a winner's rows, so any winner raises.
+    commitLoop(spark, tableDir, v, Refuse, Seq(group)) { (_, p) =>
+      enforceConstraints(spark, tableDir, group, schema, p.constraints)
+      Manifest(Seq(group), n, "snapshot", "", schemaDdl = schema,
+        constraints = p.constraints, fileRows = Map(group -> n))
+    }
   }
 
-  /** Test seam: runs once per rebase publish attempt, after the winner
-    * set is read and before the conditional publish. CompactRebaseSpec
-    * injects appends here to force deterministic race losses; production
-    * leaves it a no-op. */
+  /** Test seam: runs once per rebase publish attempt, after the draft
+    * is built over the latest winner and before the conditional
+    * publish. CompactRebaseSpec injects appends here to force
+    * deterministic race losses; production leaves it a no-op. */
   private[graft] var rebaseAttemptHook: () => Unit = () => ()
 
   /** REBASE publication for MAINTENANCE rewrites ([[compact]],
@@ -1290,101 +1294,45 @@ object Versioned {
     * physical names this manifest's empty mapping would misread) —
     * deletes the written groups and raises
     * [[java.util.ConcurrentModificationException]], the pre-rebase
-    * contract. Winner appends may EVOLVE the schema: the rebased
-    * manifest adopts the latest schema and the compacted groups
-    * null-fill the new columns, the same contract any old group has.
-    * Returns the published version. */
+    * contract ([[commitLoop]]'s [[RebaseOverAppends]] rule). Winner
+    * appends may EVOLVE the schema: the rebased manifest adopts the
+    * latest schema and the compacted groups null-fill the new columns,
+    * the same contract any old group has. Returns the published
+    * version. */
   private[graft] def rebasePublish(
       spark: SparkSession, tableDir: String, expectedParent: Long,
       newGroups: Seq[(String, Long)],
       schemaDdl: Option[String]): Long = {
     val newRows = newGroups.map(_._2).sum
-    val f = fs(spark, tableDir)
-    def abandon(why: String): Nothing = {
-      newGroups.foreach(g => f.delete(new Path(s"$tableDir/files/${g._1}"), true))
-      throw new java.util.ConcurrentModificationException(
-        s"maintenance rewrite of $tableDir read version $expectedParent " +
-          s"but cannot rebase: $why — re-run against the new latest version")
-    }
-    var parent = expectedParent
-    var extraGroups = Seq.empty[String]
-    var extraRows = 0L
-    var extraKnown = Map.empty[String, Long]
-    var schema = schemaDdl
-    while (true) {
-      val latest = latestVersion(spark, tableDir)
-      if (latest > parent) {
-        val metas = ((parent + 1) to latest).map { w =>
-          try parseManifest(spark, tableDir, w)
-          catch {
-            case _: java.io.FileNotFoundException =>
-              abandon(s"version $w was vacuumed while rebasing")
-          }
+    commitLoop(spark, tableDir, expectedParent, RebaseOverAppends,
+      newGroups.map(_._1)) { (parent, p) =>
+      // Diff baseline pinned to the rewrite's ORIGINAL read version:
+      // the extras must be files(parent) \ files(expectedParent). A
+      // baseline that advances with `parent` across publish retries
+      // silently drops the first retry window's appended groups on a
+      // second race loss (observed as a lost 1000-row append in
+      // CompactRebaseSpec).
+      def baseline = try parseManifest(spark, tableDir, expectedParent)
+        catch {
+          case _: java.io.FileNotFoundException => cannotRebase(
+            tableDir, expectedParent,
+            s"parent version $expectedParent was vacuumed while rebasing")
         }
-        metas.zipWithIndex.foreach { case (m, i) =>
-          if (m.mode != "append")
-            abandon(s"concurrent version ${parent + 1 + i} is a " +
-              s"'${m.mode}', not an append — the rewrite no longer " +
-              "represents the table")
-          if (m.mapping.nonEmpty)
-            abandon("the table uses column mapping; a rebased snapshot " +
-              "manifest cannot carry the winners' physical names")
-        }
-        // Diff baseline pinned to the rewrite's ORIGINAL read version:
-        // the extras must be files(latest) \ files(expectedParent). A
-        // baseline that advances with `parent` across publish retries
-        // silently drops the first retry window's appended groups on a
-        // second race loss (observed as a lost 1000-row append in
-        // CompactRebaseSpec).
-        val baseFiles =
-          (try parseManifest(spark, tableDir, expectedParent)
-          catch {
-            case _: java.io.FileNotFoundException =>
-              abandon(
-                s"parent version $expectedParent was vacuumed while rebasing")
-          }).files.toSet
-        val latestMeta = metas.last
-        extraGroups = latestMeta.files.filterNot(baseFiles)
-        extraKnown = latestMeta.fileRows
-        extraRows = groupRows(spark, tableDir, extraGroups,
-          latestMeta.schemaDdl, known = extraKnown)
-        schema = latestMeta.schemaDdl.orElse(schema)
-        parent = latest
-      }
-      val cons = constraints(spark, tableDir)
-      rebaseAttemptHook()
-      val target = parent + 1
-      val allGroups = newGroups.map(_._1) ++ extraGroups
+      val (extra, schema) =
+        if (parent == expectedParent) (Seq.empty[String], schemaDdl)
+        else (p.files.filterNot(baseline.files.toSet),
+          p.schemaDdl.orElse(schemaDdl))
       // mode 'optimize' (Delta's operation name): maintenance rewrites
       // are row-invariant, and describeHistory readers deserve the
       // "this was a compaction, not a content change" signal; every
       // CDC/stream consumer treats any non-append mode as a rewrite
       // boundary, so the semantics are unchanged.
-      if (publishRecordAt(spark, tableDir, target, "optimize", allGroups,
-          newRows + extraRows, None, schema, cons, Seq.empty, Seq.empty,
-          newGroups.toMap ++ extraKnown, Seq.empty))
-        return target
-      // lost again: the loop re-reads the (grown) winner set
+      Manifest(newGroups.map(_._1) ++ extra,
+        newRows + groupRows(spark, tableDir, extra, p.schemaDdl,
+          known = p.fileRows),
+        "optimize", "", schemaDdl = schema,
+        constraints = p.constraints, fileRows = newGroups.toMap)
     }
-    -1L // unreachable
-  }
-
-  /** [[commit]]'s shape for snapshots whose CONTENT derives from
-    * `expectedParent` ([[curate]]): publication is
-    * optimistic — a concurrent commit raises instead of being silently
-    * overwritten by a snapshot that never saw it. (Maintenance rewrites
-    * — compact/cluster — go through [[rebasePublish]] instead: they are
-    * row-invariant, so pure-append winners merge rather than raise.
-    * `curate`'s action is arbitrary — rebasing would silently skip
-    * applying it to the winners' rows — so it keeps the strict raise.) */
-  private def snapshotExpecting(
-      df: DataFrame, tableDir: String, expectedParent: Long): Long = {
-    val spark = df.sparkSession
-    val (group, n) = writeGroup(df, tableDir)
-    enforceConstraints(spark, tableDir, group,
-      Some(storedSchema(df)), constraints(spark, tableDir))
-    publishExpecting(spark, tableDir, expectedParent, Seq(group), Seq(group),
-      n, "snapshot", Some(storedSchema(df)), rowsByGroup = Map(group -> n))
   }
 
   /** Read a version (default: latest) — `VERSION AS OF` for parquet.
@@ -1752,12 +1700,12 @@ object Versioned {
     *     would list.
     *  3. Every written group is checked against the table's
     *     constraints, the live-row count is metadata arithmetic, and
-    *     the commit is optimistic ([[publishExpecting]]). EVERY group
-    *     and artifact written is deleted on ANY failure past the first
-    *     write: vacuum reclaims only manifest-referenced directories,
-    *     so an orphan is permanent — and an orphaned dv-* artifact is
-    *     worse than dead bytes (a schema-pinned file stream could
-    *     ingest it as all-NULL table rows).
+    *     the commit is optimistic ([[commitLoop]]'s [[Refuse]] rule).
+    *     EVERY group and artifact written is deleted on ANY failure
+    *     past the first write: vacuum reclaims only manifest-referenced
+    *     directories, so an orphan is permanent — and an orphaned dv-*
+    *     artifact is worse than dead bytes (a schema-pinned file stream
+    *     could ingest it as all-NULL table rows).
     * `mode` labels the commit, except that a statement whose entire
     * effect is merge-on-read commits under that effect — 'delete' when
     * every claim deletes, 'update' when every claim updates — so
@@ -1824,32 +1772,35 @@ object Versioned {
       enforceConstraints(spark, tableDir, g, ddl, m.constraints, m.mapping)
       (g, n)
     }
-    try {
-      val copiesGroup = copies.map(write)
-      val newGroup = newData.map(write) match {
-        case Some((g, 0L)) if untouched.nonEmpty || copiesGroup.nonEmpty =>
-          f.delete(new Path(s"$tableDir/files/$g"), true)
-          None
-        case other => other
+    val (copiesGroup, newGroup) =
+      try {
+        val copiesGroup = copies.map(write)
+        (copiesGroup, newData.map(write) match {
+          case Some((g, 0L)) if untouched.nonEmpty || copiesGroup.nonEmpty =>
+            f.delete(new Path(s"$tableDir/files/$g"), true)
+            None
+          case other => other
+        })
+      } catch {
+        case scala.util.control.NonFatal(e) =>
+          written.foreach(g => scala.util.Try(
+            f.delete(new Path(s"$tableDir/files/$g"), true)))
+          throw e
       }
-      val added = newGroup.toSeq ++ copiesGroup.toSeq
-      val label =
-        if (dvAdditions.isEmpty || touched.nonEmpty || newGroup.nonEmpty) mode
-        else if (dvUpdates == 0L) "delete"
-        else if (dvUpdates == dvClaims) "update"
-        else mode
-      publishExpecting(spark, tableDir, v, untouched ++ added.map(_._1),
-        added.map(_._1),
-        liveGroupRows(spark, tableDir, untouched, m) - dvClaims + added.map(_._2).sum,
-        label, ddl, mapping = m.mapping,
+    val added = newGroup.toSeq ++ copiesGroup.toSeq
+    val label =
+      if (dvAdditions.isEmpty || touched.nonEmpty || newGroup.nonEmpty) mode
+      else if (dvUpdates == 0L) "delete"
+      else if (dvUpdates == dvClaims) "update"
+      else mode
+    commitLoop(spark, tableDir, v, Refuse, written.toSeq) { (_, p) =>
+      Manifest(untouched ++ added.map(_._1),
+        liveGroupRows(spark, tableDir, untouched, m) - dvClaims +
+          added.map(_._2).sum,
+        label, "", schemaDdl = ddl, constraints = p.constraints,
+        mapping = m.mapping,
         dvs = (if (dvAbsorb.isEmpty) dvCarried else Seq.empty) ++ dvAdditions,
-        rowsByGroup = m.fileRows ++ added,
-        copies = copiesGroup.map(_._1).toSeq)
-    } catch {
-      case scala.util.control.NonFatal(e) =>
-        written.foreach(g => scala.util.Try(
-          f.delete(new Path(s"$tableDir/files/$g"), true)))
-        throw e
+        fileRows = m.fileRows ++ added, copies = copiesGroup.map(_._1).toSeq)
     }
   }
 
@@ -1989,39 +1940,51 @@ object Versioned {
       onResidual = None, mergeOnRead = false)
   }
 
-  /** ONE aggregate pass over a merge source decides its row count, the
-    * duplicate-key guard AND the candidate key range, so the source is
-    * scanned once for all three. count(DISTINCT struct(keys)) uses
-    * groupBy's NULL-equals-NULL key equality, so a source with duplicate
-    * all-NULL key tuples still raises. Returns the row count and, when
-    * `needBounds` and the source is non-empty, the range predicate
-    * `lo_k <= k <= hi_k` over every key. */
+  /** ONE pass over a merge source decides its row count, the
+    * duplicate-key guard AND the candidate key range. With the guard
+    * the pass is one keyed query — `groupBy(keys).count()` kept to its
+    * first count above 1 — and the count and key bounds ride on it as
+    * `Dataset.observe` metrics (one shuffle; the count_distinct of a
+    * key struct this replaces planned two). groupBy's keys treat NULL
+    * as equal to NULL, so a source with duplicate all-NULL key tuples
+    * still raises. Returns the row count and, when `needBounds` and the
+    * source is non-empty, the range predicate `lo_k <= k <= hi_k` over
+    * every key. */
   private def mergeSourceStats(
       src: DataFrame,
       keyCols: Seq[String],
       checkDups: Boolean,
       needBounds: Boolean): (Long, Option[Column]) = {
-    import org.apache.spark.sql.functions.{count, count_distinct, struct}
+    import org.apache.spark.sql.functions.count
     val aggCols: Seq[Column] =
-      Seq(count(lit(1)).as("__n")) ++
-        (if (checkDups)
-          Seq(count_distinct(struct(keyCols.map(col): _*)).as("__nd"))
-         else Nil) ++
+      count(lit(1)).as("__n") +:
         (if (needBounds)
           keyCols.flatMap(k =>
             Seq(min(col(k)).as(s"__lo_$k"), max(col(k)).as(s"__hi_$k")))
          else Nil)
-    val stats = src.agg(aggCols.head, aggCols.tail: _*).collect()(0)
-    val n = stats.getLong(0)
-    if (checkDups)
-      require(n == stats.getAs[Long]("__nd"),
-        s"merge source has duplicate keys on (${keyCols.mkString(", ")}); " +
-          "a multiply-matched target row is ambiguous (Delta MERGE raises too)")
+    def aggregated: Map[String, Any] = {
+      val r = src.agg(aggCols.head, aggCols.tail: _*).collect()(0)
+      r.getValuesMap[Any](r.schema.fieldNames.toSeq)
+    }
+    val stats: Map[String, Any] =
+      if (!checkDups) aggregated
+      else {
+        val obs = org.apache.spark.sql.Observation()
+        val dup = src.observe(obs, aggCols.head, aggCols.tail: _*)
+          .groupBy(keyCols.map(col): _*).count()
+          .filter(col("count") > 1).limit(1).collect()
+        require(dup.isEmpty,
+          s"merge source has duplicate keys on (${keyCols.mkString(", ")}); " +
+            "a multiply-matched target row is ambiguous (Delta MERGE raises too)")
+        // the optimizer drops the metrics over a provably empty source,
+        // which leaves them empty: the plain aggregate answers then
+        Some(obs.get).filter(_.nonEmpty).getOrElse(aggregated)
+      }
+    val n = stats("__n").asInstanceOf[Long]
     val rangePred =
       if (n == 0L || !needBounds) None
       else Some(keyCols.map { k =>
-        col(k) >= lit(stats.getAs[Any](s"__lo_$k")) &&
-          col(k) <= lit(stats.getAs[Any](s"__hi_$k"))
+        col(k) >= lit(stats(s"__lo_$k")) && col(k) <= lit(stats(s"__hi_$k"))
       }.reduce(_ && _))
     (n, rangePred)
   }
@@ -3210,8 +3173,11 @@ object Versioned {
     val back = spark.read.parquet(gdir.toString)
     val stats = GroupStats.compute(back)
     GroupStats.write(f, GroupStats.sidecarPath(dir, group), stats)
-    publish(spark, dir, Seq(group), stats.nRows, "convert",
-      Some(storedSchema(back)), rowsByGroup = Map(group -> stats.nRows))
+    // No groups to delete on a raise: the group holds the user's files.
+    commitLoop(spark, dir, -1L, Rebuild, Nil)((_, p) =>
+      Manifest(Seq(group), stats.nRows, "convert", "",
+        schemaDdl = Some(storedSchema(back)), constraints = p.constraints,
+        fileRows = Map(group -> stats.nRows)))
   }
 
   /** RESTORE: republish an earlier version's file groups as the NEW
@@ -3260,9 +3226,8 @@ object Versioned {
           conds.map { case (n, e, c) => s"$n (`$e`): $c row(s)" }.mkString("; ") +
           " — drop the constraint first or restore a later version")
     }
-    publishExpecting(spark, tableDir, latest, m.files, Seq.empty,
-      m.nRows, "snapshot", m.schemaDdl, mapping = m.mapping, dvs = m.dvs,
-      rowsByGroup = m.fileRows)
+    commitLoop(spark, tableDir, latest, Refuse, Nil)((_, p) =>
+      m.carried("snapshot").copy(constraints = p.constraints))
   }
 
   /** CREATE TABLE CLONE (deep): materialize `version` (default latest)
@@ -3288,8 +3253,9 @@ object Versioned {
     val m = parseManifest(spark, srcDir, v)
     require(m.files.nonEmpty, s"version $v of $srcDir lists no files")
     val (group, n) = writeGroup(read(spark, srcDir, v), dstDir)
-    publish(spark, dstDir, Seq(group), n, "clone", m.schemaDdl,
-      Some(m.constraints), rowsByGroup = Map(group -> n))
+    commitLoop(spark, dstDir, -1L, Rebuild, Seq(group))((_, _) =>
+      Manifest(Seq(group), n, "clone", "", schemaDdl = m.schemaDdl,
+        constraints = m.constraints, fileRows = Map(group -> n)))
   }
 
   /** Row-level diff between two versions (see [[Snapshot.diff]]). */

@@ -69,9 +69,10 @@ class DmlJobCountSpec extends SparkSpec {
     val j = jobsOf(Versioned.merge(spark, dir, src, Seq("id")))
     assert(Versioned.read(spark, dir).count() == 301L)
     info(s"merge jobs: $j")
-    // measured 9: the source's lineage cap 1, its stats aggregate 3,
-    // the probe 3 (with a broadcast of the source), the rewrite 2 (with
-    // another broadcast)
-    assertJobs("merge", j, 9)
+    // measured 8: the source's lineage cap 1, its keyed duplicate check
+    // 2 (count and key bounds observed on it), the probe 3 (with a
+    // broadcast of the source), the rewrite 2 (with another broadcast);
+    // 9 while the duplicate check was a count_distinct aggregate
+    assertJobs("merge", j, 8)
   }
 }
