@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Encoders}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -59,34 +59,29 @@ object IvfIndex {
     val c = Similarity.normedBase(corpus, vecCol, idCol)
       .withColumn("__cell", nearestCell(col("__vec"), col("__norm"), centroids))
       .withColumnsRenamed(Map("__id" -> "neighbor_id", "__vec" -> "__cv", "__norm" -> "__cn"))
-    val q = Similarity.normedBase(queries, vecCol, idCol)
-      .withColumn("__cell", explode(topCells(col("__vec"), col("__norm"), centroids, nprobe)))
-      .withColumnsRenamed(Map("__id" -> "query_id", "__vec" -> "__qv", "__norm" -> "__qn"))
-
-    val scored = scoreAndDedup(c.join(q, "__cell"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id")
-      .orderBy(col("cosine").desc, col("neighbor_id").asc)
-    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "cosine", "rank")
+    rankProbes(c, probeQueries(queries, vecCol, idCol, centroids, nprobe), k)
   }
 
-  /** Score probed candidates and collapse duplicate (query, neighbor)
-    * pairs — cosine FIRST, so the dedup exchange moves three narrow
-    * columns instead of both raw vectors (2·dim doubles/row; at dim 64
-    * that is a ~40× shuffle-byte cut on the probe's dominant exchange,
-    * and it grows with dim). Duplicates only exist when the same id was
-    * assigned twice (e.g. re-appended); max() keeps the pick
-    * deterministic where dropDuplicates-then-score was arbitrary —
-    * identical output whenever ids are unique, which every declared
-    * query's index is. */
-  private def scoreAndDedup(joined: DataFrame): DataFrame =
-    joined
+  /** The query side of a probe: one row per (query, probed cell). */
+  private def probeQueries(queries: DataFrame, vecCol: String, idCol: String,
+      centroids: Seq[Seq[Double]], nprobe: Int): DataFrame =
+    withProbedCells(Similarity.normedBase(queries, vecCol, idCol), centroids, nprobe)
+      .withColumnsRenamed(Map("__id" -> "query_id", "__vec" -> "__qv", "__norm" -> "__qn"))
+
+  /** Join probes to candidates and keep each query's top `k` through ONE
+    * exchange keyed by `query_id`: the (query, neighbor) max and the rank
+    * window both run on its partitioning. Cosine comes first, so the
+    * exchange moves narrow rows, not vectors. Duplicate pairs exist only
+    * for an id assigned twice (e.g. re-appended); max() keeps the pick
+    * deterministic. */
+  private def rankProbes(candidates: DataFrame, probes: DataFrame, k: Int): DataFrame =
+    Similarity.topK(candidates.join(probes, "__cell")
       .filter(col("neighbor_id") =!= col("query_id"))
       .withColumn("cosine",
         when(col("__cn") * col("__qn") === 0.0d, lit(0.0d))
           .otherwise(dotNative(col("__cv"), col("__qv")) / (col("__cn") * col("__qn"))))
-      .groupBy("query_id", "neighbor_id").agg(max("cosine").as("cosine"))
+      .repartition(col("query_id"))
+      .groupBy("query_id", "neighbor_id").agg(max("cosine").as("cosine")), k)
 
   /** Persist a trained index as a reusable parquet artifact:
     *
@@ -94,7 +89,7 @@ object IvfIndex {
     *     model metadata.
     *   - `dir/assignments`: (id, vec, norm, cell) partitioned BY CELL, so
     *     a probe that joins on `cell` reads only the probed partitions
-    *     (dynamic partition pruning). At 100 TB that is the entire point
+    *     (a literal partition filter). At 100 TB that is the entire point
     *     of an IVF index: nprobe/nlist of the corpus is scanned per query
     *     batch instead of all of it, and the expensive k-means + per-row
     *     assignment is paid ONCE at build time, not per session.
@@ -120,7 +115,7 @@ object IvfIndex {
     import spark.implicits._
     centroids.zipWithIndex.map { case (v, i) => (i, v) }
       .toDF("cell", "vec")
-      .repartition(1) // nlist rows
+      .coalesce(1) // nlist rows
       .write.mode("overwrite").parquet(s"$dir/centroids")
     Similarity.normedBase(corpus, vecCol, idCol)
       .withColumn("cell", nearestCell(col("__vec"), col("__norm"), centroids))
@@ -336,35 +331,31 @@ object IvfIndex {
       k: Int,
       nprobe: Int = 4): DataFrame = {
     GraftFunctions.register(spark)
-    val centroids: Seq[Seq[Double]] = spark.read.parquet(s"$dir/centroids")
-      .orderBy("cell").select("vec")
-      .collect().map(_.getSeq[Double](0).toSeq).toSeq
+    val centroids = readCentroids(spark, dir)
     require(nprobe <= centroids.size, "nprobe must be <= stored nlist")
-
-    val q = Similarity.normedBase(queries, vecCol, idCol)
-      .withColumn("__cell", explode(topCells(col("__vec"), col("__norm"), centroids, nprobe)))
-      .withColumnsRenamed(Map("__id" -> "query_id", "__vec" -> "__qv", "__norm" -> "__qn"))
-    // LITERAL partition pruning on the probed cells: the union of probed
-    // cells across all queries is bounded by nlist (small by
-    // construction), so this collect is metadata-sized no matter how many
-    // query rows there are. Without it the assignments scan reads every
-    // cell unless dynamic partition pruning happens to fire — at an
-    // nprobe=4-of-1000-cells probe over a 100 TB index that is the
-    // difference between reading 4 partitions and reading 1000.
-    val probedCells: Seq[Int] = q.select("__cell").distinct()
-      .collect().map(_.getAs[Number](0).intValue()).toSeq
+    val q = probeQueries(queries, vecCol, idCol, centroids, nprobe)
+    // LITERAL partition pruning on the probed cells, at most nlist (small
+    // by construction) however many queries there are: each partition
+    // sends its distinct cells, one job with no shuffle. Dynamic partition
+    // pruning does not fire on this join, so without the literal filter
+    // the scan reads every cell — 1000 partitions instead of 4 at an
+    // nprobe=4-of-1000-cells probe over a 100 TB index.
+    val probedCells = q.select("__cell").as(Encoders.scalaInt)
+      .mapPartitions(_.toSet.iterator)(Encoders.scalaInt).collect().distinct.sorted
     val c = spark.read.parquet(s"$dir/assignments")
-      .filter(col("cell").isin(probedCells: _*))
+      .filter(col("cell").isin(probedCells.toSeq: _*))
       .withColumnsRenamed(Map(
         "id" -> "neighbor_id", "vec" -> "__cv", "norm" -> "__cn", "cell" -> "__cell"))
-
-    val scored = scoreAndDedup(c.join(q, "__cell"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id")
-      .orderBy(col("cosine").desc, col("neighbor_id").asc)
-    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "cosine", "rank")
+    rankProbes(c, q, k)
   }
+
+  /** The stored centroids in cell order: the nlist-row file read with the
+    * schema [[writeIndex]] writes (no footer inference) and sorted on the
+    * driver, so the read is one small job. */
+  private def readCentroids(
+      spark: org.apache.spark.sql.SparkSession, dir: String): Seq[Seq[Double]] =
+    spark.read.schema("cell INT, vec ARRAY<DOUBLE>").parquet(s"$dir/centroids")
+      .collect().sortBy(_.getInt(0)).map(_.getSeq[Double](1)).toSeq
 
   /** Append new vectors to a PERSISTED index without retraining: each new
     * vector is assigned to its nearest STORED centroid and appended into
@@ -382,9 +373,7 @@ object IvfIndex {
       vecCol: String,
       idCol: String): Unit = {
     GraftFunctions.register(spark)
-    val centroids: Seq[Seq[Double]] = spark.read.parquet(s"$dir/centroids")
-      .orderBy("cell").select("vec")
-      .collect().map(_.getSeq[Double](0).toSeq).toSeq
+    val centroids = readCentroids(spark, dir)
     Similarity.normedBase(newVecs, vecCol, idCol)
       .withColumn("cell", nearestCell(col("__vec"), col("__norm"), centroids))
       .select(col("__id").as("id"), col("__vec").as("vec"),
@@ -594,9 +583,8 @@ object IvfIndex {
       mergeThreshold: Double): (DataFrame, DataFrame) = {
     val centroids = train(base, "__vec", "__id", nlist, iters, seed, totalCount)
     val probe = math.min(probeCells, math.max(1, centroids.size))
-    var pending = base
-      .withColumn("__c", explode(topCells(col("__vec"), col("__norm"), centroids, probe)))
-      .select(col("__id"), col("__c").cast("string").as("__cell"))
+    var pending = withProbedCells(base, centroids, probe)
+      .select(col("__id"), col("__cell").cast("string").as("__cell"))
       .persist(StorageLevel.MEMORY_AND_DISK)
     val levels = scala.collection.mutable.ArrayBuffer[DataFrame](pending)
     val done = scala.collection.mutable.ArrayBuffer[DataFrame]()
@@ -789,24 +777,29 @@ object IvfIndex {
     sort_array(cellScores(vec, norm, centroids), asc = false)
       .getItem(0).getField("cell")
 
-  /** The nprobe best cells, best first. */
-  private[operators] def topCells(
-      vec: Column, norm: Column, centroids: Seq[Seq[Double]], nprobe: Int): Column =
-    transform(
-      slice(sort_array(cellScores(vec, norm, centroids), asc = false), 1, nprobe),
-      _.getField("cell"))
+  /** `df` (a [[Similarity.normedBase]] projection) with one row per probed
+    * cell, its `nprobe` best cells best first, as `__cell`: the sorted
+    * (score, cell) structs are exploded and the cell read as a field, so
+    * no lambda is interpreted per row. */
+  private def withProbedCells(
+      df: DataFrame, centroids: Seq[Seq[Double]], nprobe: Int): DataFrame =
+    df.withColumn("__cell", explode(slice(
+        sort_array(cellScores(col("__vec"), col("__norm"), centroids), asc = false),
+        1, nprobe)))
+      .withColumn("__cell", col("__cell").getField("cell"))
 
   /** Array of (score, cell) structs; struct ordering compares score first,
     * then cell — cell is negated so ties break toward the LOWER cell id
-    * under descending sort. */
+    * under descending sort. Scores are dot(v, ĉ) / |v| against UNIT
+    * centroids (a zero centroid scores 0) passed as array literals, which
+    * generated code reads from its references: the code depends on nlist
+    * only, so k-means iterations, builds and probes share their classes. */
   private def cellScores(
       vec: Column, norm: Column, centroids: Seq[Seq[Double]]): Column =
     array(centroids.zipWithIndex.map { case (cvec, i) =>
       val cnorm = math.sqrt(cvec.map(x => x * x).sum)
-      val score =
-        if (cnorm == 0.0) lit(0.0d)
-        else when(norm === 0.0d, lit(0.0d))
-          .otherwise(dotNative(vec, typedLit(cvec)) / (norm * lit(cnorm)))
+      val unit = if (cnorm == 0.0) cvec else cvec.map(_ / cnorm)
+      val score = when(norm === 0.0d, lit(0.0d)).otherwise(dotNative(vec, typedLit(unit)) / norm)
       struct(score.as("score"), lit(-i).as("negcell"), lit(i).as("cell"))
     }: _*)
 }

@@ -68,7 +68,7 @@ object Similarity {
                   else pairs.filter(col("neighbor_id") =!= col("query_id")))
       .withColumn("cosine",
         cosineCol(col("__cv"), col("__cn"), col("__qv"), col("__qn")))
-    topK(scored, k).select("query_id", "neighbor_id", "cosine", "rank")
+    topK(scored, k)
   }
 
   /** ANN top-k via random-hyperplane LSH. Same output shape as brute force;
@@ -98,7 +98,7 @@ object Similarity {
     val scored = candidates.join(cb, "neighbor_id").join(qb, "query_id")
       .withColumn("cosine",
         cosineCol(col("__cv"), col("__cn"), col("__qv"), col("__qn")))
-    topK(scored, k).select("query_id", "neighbor_id", "cosine", "rank")
+    topK(scored, k)
   }
 
   /** Semantic (nearest-neighbor) LEFT join: every row of `left` keeps
@@ -372,11 +372,13 @@ object Similarity {
     * corpus near the 10k bucket cap with wide vectors is not. */
   private[graft] val SmallNAllPairs = 4096L
 
-  /** Window top-k with deterministic ordering (cosine desc, id asc). */
-  private def topK(scored: DataFrame, k: Int): DataFrame = {
+  /** Window top-k with deterministic ordering (cosine desc, id asc):
+    * (query_id, neighbor_id, cosine, rank), rank 1..k. */
+  private[operators] def topK(scored: DataFrame, k: Int): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("query_id")
       .orderBy(col("cosine").desc, col("neighbor_id").asc)
     scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+      .select("query_id", "neighbor_id", "cosine", "rank")
   }
 }

@@ -529,17 +529,19 @@ object Versioned {
     * by the rule, by `build` (a constraint, schema or mapping check
     * against the new parent) or by the publication — deletes
     * `newGroups` first: vacuum reclaims only manifest-referenced
-    * directories, so an orphan would be permanent. Returns the
-    * published version. */
+    * directories, so an orphan would be permanent. `read`, the caller's
+    * resolution of `readVersion`, spares the first attempt re-opening
+    * that record. Returns the published version. */
   private def commitLoop(
       spark: SparkSession, tableDir: String, readVersion: Long,
-      rule: OnWinner, newGroups: Seq[String])(
+      rule: OnWinner, newGroups: Seq[String],
+      read: Option[(Long, Manifest)] = None)(
       build: (Long, Manifest) => Manifest): Long = {
     def at(v: Long) =
       if (v < 0) None else Some(resolveWithHash(spark, tableDir, v))
     try {
       var parent = readVersion
-      var resolved = at(parent)
+      var resolved = read.orElse(at(parent))
       while (true) {
         val draft = build(parent, resolved.fold(noTable)(_._2))
         if (rule == RebaseOverAppends) rebaseAttemptHook()
@@ -897,7 +899,7 @@ object Versioned {
     require(exprSql.trim.nonEmpty, "constraint expression must be non-empty")
     val v = latestVersion(spark, tableDir)
     require(v >= 0, s"no versions committed under $tableDir")
-    val m = parseManifest(spark, tableDir, v)
+    val read @ (_, m) = resolveWithHash(spark, tableDir, v)
     require(!m.constraints.exists(_._1.equalsIgnoreCase(name)),
       s"constraint '$name' already exists")
     val violations = scanVersionGroups(
@@ -907,7 +909,7 @@ object Versioned {
     require(violations == 0L,
       s"cannot add CHECK constraint '$name' (`$exprSql`): " +
         s"$violations existing row(s) violate it")
-    commitLoop(spark, tableDir, v, Refuse, Nil)((_, p) =>
+    commitLoop(spark, tableDir, v, Refuse, Nil, Some(read))((_, p) =>
       p.carried("add_constraint").copy(
         constraints = p.constraints :+ (name -> exprSql)))
   }
@@ -917,10 +919,11 @@ object Versioned {
       spark: SparkSession, tableDir: String, name: String): Long = {
     val v = latestVersion(spark, tableDir)
     require(v >= 0, s"no versions committed under $tableDir")
-    val existing = parseManifest(spark, tableDir, v).constraints
+    val read = resolveWithHash(spark, tableDir, v)
+    val existing = read._2.constraints
     require(existing.exists(_._1.equalsIgnoreCase(name)),
       s"no such constraint: '$name' (have ${existing.map(_._1).mkString(", ")})")
-    commitLoop(spark, tableDir, v, Refuse, Nil)((_, p) =>
+    commitLoop(spark, tableDir, v, Refuse, Nil, Some(read))((_, p) =>
       p.carried("drop_constraint").copy(
         constraints = p.constraints.filterNot(_._1.equalsIgnoreCase(name))))
   }
@@ -949,7 +952,7 @@ object Versioned {
       s"new column name must be an identifier: '$newName'")
     val v = latestVersion(spark, tableDir)
     require(v >= 0, s"no versions committed under $tableDir")
-    val m = parseManifest(spark, tableDir, v)
+    val read @ (_, m) = resolveWithHash(spark, tableDir, v)
     val ddl = m.schemaDdl.getOrElse(throw new IllegalArgumentException(
       s"$tableDir has a pre-schema manifest; rename needs a recorded schema"))
     val schema = org.apache.spark.sql.types.StructType.fromDDL(ddl)
@@ -978,7 +981,7 @@ object Versioned {
     }
     val newSchema = org.apache.spark.sql.types.StructType(schema.fields.map(f =>
       if (f.name.equalsIgnoreCase(oldName)) f.copy(name = newName) else f))
-    commitLoop(spark, tableDir, v, Refuse, Nil)((_, p) =>
+    commitLoop(spark, tableDir, v, Refuse, Nil, Some(read))((_, p) =>
       p.carried("rename_column").copy(
         schemaDdl = Some(newSchema.toDDL), mapping = mapping))
   }
@@ -995,7 +998,7 @@ object Versioned {
       spark: SparkSession, tableDir: String, name: String): Long = {
     val v = latestVersion(spark, tableDir)
     require(v >= 0, s"no versions committed under $tableDir")
-    val m = parseManifest(spark, tableDir, v)
+    val read @ (_, m) = resolveWithHash(spark, tableDir, v)
     val ddl = m.schemaDdl.getOrElse(throw new IllegalArgumentException(
       s"$tableDir has a pre-schema manifest; drop needs a recorded schema"))
     val schema = org.apache.spark.sql.types.StructType.fromDDL(ddl)
@@ -1017,7 +1020,7 @@ object Versioned {
       ("" -> physical) // tombstone: the physical name stays reserved
     val newSchema = org.apache.spark.sql.types.StructType(
       schema.fields.filterNot(_.name.equalsIgnoreCase(name)))
-    commitLoop(spark, tableDir, v, Refuse, Nil)((_, p) =>
+    commitLoop(spark, tableDir, v, Refuse, Nil, Some(read))((_, p) =>
       p.carried("drop_column").copy(
         schemaDdl = Some(newSchema.toDDL), mapping = mapping))
   }
@@ -1065,11 +1068,12 @@ object Versioned {
   def append(df: DataFrame, tableDir: String, evolveSchema: Boolean = false): Long = {
     val spark = df.sparkSession
     val head = latestVersion(spark, tableDir)
-    val m = if (head < 0) noTable else parseManifest(spark, tableDir, head)
+    val read = if (head < 0) None else Some(resolveWithHash(spark, tableDir, head))
+    val m = read.fold(noTable)(_._2)
     // Fail fast on schema drift before paying the write.
     validateAppendSchema(df, m.schemaDdl, evolveSchema)
     val (group, n) = writeGroup(df, tableDir, m.mapping)
-    commitLoop(spark, tableDir, head, Rebuild, Seq(group))(
+    commitLoop(spark, tableDir, head, Rebuild, Seq(group), read)(
       appendDraft(df, tableDir, group, n, m.mapping, evolveSchema, None))
   }
 
@@ -1207,11 +1211,10 @@ object Versioned {
     val spark = df.sparkSession
     val (watermark, head) = batchWatermark(spark, tableDir, appId)
     if (watermark >= batchId) return None
-    val mapping =
-      if (head < 0) Seq.empty[(String, String)]
-      else parseManifest(spark, tableDir, head).mapping
+    val read = if (head < 0) None else Some(resolveWithHash(spark, tableDir, head))
+    val mapping = read.fold(Seq.empty[(String, String)])(_._2.mapping)
     val (group, n) = writeGroup(df, tableDir, mapping)
-    try Some(commitLoop(spark, tableDir, head, Rebuild, Seq(group))(
+    try Some(commitLoop(spark, tableDir, head, Rebuild, Seq(group), read)(
       appendDraft(df, tableDir, group, n, mapping, evolve = false,
         Some(appId -> batchId))))
     catch { case BatchCommitted => None }
@@ -1651,15 +1654,15 @@ object Versioned {
     (carried, absorb)
   }
 
-  /** The latest version of `tableDir` and its parsed manifest — the
-    * prologue of every DML statement. */
+  /** The latest version of `tableDir` with its record hash and parsed
+    * manifest — the prologue of every DML statement. */
   private def latestManifest(
-      spark: SparkSession, tableDir: String): (Long, Manifest) = {
+      spark: SparkSession, tableDir: String): (Long, (Long, Manifest)) = {
     val v = latestVersion(spark, tableDir)
     require(v >= 0, s"no versions committed under $tableDir")
-    val m = parseManifest(spark, tableDir, v)
-    require(m.files.nonEmpty, s"version $v of $tableDir lists no files")
-    (v, m)
+    val read = resolveWithHash(spark, tableDir, v)
+    require(read._2.files.nonEmpty, s"version $v of $tableDir lists no files")
+    (v, read)
   }
 
   /** One DML statement's effect on each live row, over [[liveTagged]]:
@@ -1715,10 +1718,11 @@ object Versioned {
     * MERGE's validated source schema). Returns the new version, or `v`
     * unchanged when nothing is claimed and nothing inserted. */
   private def mutate(
-      spark: SparkSession, tableDir: String, v: Long, m: Manifest,
+      spark: SparkSession, tableDir: String, v: Long, read: (Long, Manifest),
       cand: Seq[String], act: RowAction, mode: String,
       inserted: Option[DataFrame] = None,
       schemaDdl: Option[String] = None): Long = {
+    val m = read._2
     import org.apache.spark.sql.functions.{count, sum, when}
     // `groups`' live rows through the action's view, with the table's
     // column names
@@ -1793,7 +1797,7 @@ object Versioned {
       else if (dvUpdates == 0L) "delete"
       else if (dvUpdates == dvClaims) "update"
       else mode
-    commitLoop(spark, tableDir, v, Refuse, written.toSeq) { (_, p) =>
+    commitLoop(spark, tableDir, v, Refuse, written.toSeq, Some(read)) { (_, p) =>
       Manifest(untouched ++ added.map(_._1),
         liveGroupRows(spark, tableDir, untouched, m) - dvClaims +
           added.map(_._2).sum,
@@ -1875,7 +1879,7 @@ object Versioned {
       spark: SparkSession, tableDir: String, prune: Option[Column],
       claimed: Column, assignments: Seq[(String, Column)],
       view: DataFrame => DataFrame = identity): Long = {
-    val (v, m) = latestManifest(spark, tableDir)
+    val (v, read @ (_, m)) = latestManifest(spark, tableDir)
     val cand = prune.fold(m.files)(c =>
       pruneGroups(spark, tableDir, m.files, m.schemaDdl, c, m.mapping, m.fileStats)._1)
     val mode = if (assignments.isEmpty) "delete" else "update"
@@ -1899,7 +1903,7 @@ object Versioned {
       }
       out
     }
-    mutate(spark, tableDir, v, m, cand, RowAction(kind, assign, view), mode)
+    mutate(spark, tableDir, v, read, cand, RowAction(kind, assign, view), mode)
   }
 
   /** Copy-on-write MERGE (upsert-by-replacement) into a versioned table:
@@ -2101,7 +2105,7 @@ object Versioned {
       case c: NotMatchedBySourceUpdate => c: MergeClause
       case c: NotMatchedBySourceDelete => c: MergeClause
     }
-    val (v, m) = latestManifest(spark, tableDir)
+    val (v, read @ (_, m)) = latestManifest(spark, tableDir)
     // Only STAR inserts need the source to mirror the table; a partial
     // INSERT (cols) VALUES (...) source may have any shape (unlisted
     // table columns become NULL).
@@ -2304,7 +2308,7 @@ object Versioned {
     // in theirs
     val probed =
       (if (matched.isEmpty || srcEmpty) Set.empty[String] else cand.toSet) ++ bsCand
-    mutate(spark, tableDir, v, m, m.files.filter(probed), act, "merge",
+    mutate(spark, tableDir, v, read, m.files.filter(probed), act, "merge",
       inserted, schemaDdl)
   }
 

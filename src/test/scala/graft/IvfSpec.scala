@@ -127,6 +127,77 @@ class IvfSpec extends SparkSpec {
     }
   }
 
+  test("a loadTopK batch runs a pinned number of Spark jobs") {
+    // centroids 1, probed cells 1, assignments footer 1, and one query
+    // whose single exchange is keyed by query_id (its broadcast, shuffle
+    // and result jobs)
+    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    val queries = emb.filter($"vec_id" < 20)
+    val dir = java.nio.file.Files.createTempDirectory("graft_ivf_jobs").toString
+    try {
+      IvfIndex.writeIndex(emb, "embedding", "vec_id", dir, nlist = 8, iters = 2)
+      val out = IvfIndex.loadTopK(spark, dir, queries, "embedding", "vec_id", k = 5, nprobe = 3)
+      val exchanges = out.queryExecution.executedPlan.toString.split("\n")
+        .count(_.contains("Exchange hashpartitioning"))
+      assert(exchanges == 1, out.queryExecution.executedPlan.toString)
+      val jobs = jobsOf(IvfIndex.loadTopK(spark, dir, queries, "embedding", "vec_id",
+        k = 5, nprobe = 3).collect())
+      assert(jobs == 6, s"loadTopK ran $jobs jobs")
+    } finally {
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+    }
+  }
+
+  test("a second index build at the same nlist compiles no new class") {
+    // The centroid scores read unit centroids from array literals, so
+    // the generated code depends on nlist only: k-means iterations,
+    // builds over other data and probes share their classes.
+    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    val root = java.nio.file.Files.createTempDirectory("graft_ivf_codegen").toString
+    try {
+      // disjoint halves as files, so the two builds differ in data only
+      emb.filter($"vec_id" % 2 === 0).write.parquet(s"$root/even")
+      emb.filter($"vec_id" % 2 === 1).write.parquet(s"$root/odd")
+      def build(half: String): Long = {
+        val compiles = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+        val before = compiles.getCount
+        IvfIndex.writeIndex(spark.read.parquet(s"$root/$half"), "embedding", "vec_id",
+          s"$root/idx_$half", nlist = 8, iters = 2)
+        compiles.getCount - before
+      }
+      build("even")
+      val second = build("odd")
+      assert(second == 0L, s"the second build compiled $second classes")
+      assert(spark.read.parquet(s"$root/idx_odd/centroids").collect().toSet !=
+        spark.read.parquet(s"$root/idx_even/centroids").collect().toSet)
+    } finally {
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
+    }
+  }
+
+  test("vectors appended twice keep one (query, neighbor) row per pair and the same top-k") {
+    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    val queries = emb.filter($"vec_id" < 10)
+    val dir = java.nio.file.Files.createTempDirectory("graft_ivf_dup").toString
+    try {
+      IvfIndex.writeIndex(emb, "embedding", "vec_id", dir, nlist = 8, iters = 2)
+      def probe() = IvfIndex.loadTopK(spark, dir, queries, "embedding", "vec_id",
+        k = 5, nprobe = 3).as[(Long, Long, Double, Int)].collect()
+      val once = probe()
+      val again = emb.filter($"vec_id" < 500)
+      IvfIndex.appendToIndex(spark, dir, again, "embedding", "vec_id")
+      IvfIndex.appendToIndex(spark, dir, again, "embedding", "vec_id")
+      val thrice = probe()
+      assert(thrice.map(r => (r._1, r._2)).distinct.length == thrice.length)
+      thrice.groupBy(_._1).values.foreach { rows =>
+        assert(rows.map(_._4).sorted.toSeq == (1 to 5))
+      }
+      assert(thrice.toSet == once.toSet)
+    } finally {
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+    }
+  }
+
   test("cachedIndex: one build per fixture fingerprint, rebuild on input change") {
     val src = java.nio.file.Files.createTempDirectory("graft_ivf_src").toString + "/emb"
     val root = java.nio.file.Files.createTempDirectory("graft_ivf_root").toString

@@ -106,10 +106,10 @@ class VersionedCommitLoopSpec extends SparkSpec {
         s"commit $commit, delete $delete")
       assert(Versioned.latestVersion(spark, dir) == 6L)
       assert(ids(dir) == (0L until 5L))
-      assert(appendOnce == ((1, 4)))
-      assert(append == ((1, 2)))
+      assert(appendOnce == ((1, 3)))
+      assert(append == ((1, 1)))
       assert(commit == ((1, 1)))
-      assert(delete == ((1, 2)))
+      assert(delete == ((1, 1)))
     }
   }
 
